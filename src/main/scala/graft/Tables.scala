@@ -1,6 +1,7 @@
 package graft
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.execution.FileSourceScanExec
 
 /** Source layer: one parquet file per table under the scale-factor dir
   * (TESTDATA.md). Parquet is self-describing, so this replaces the
@@ -22,11 +23,26 @@ object Tables {
     * relation. Without this each of a session's queries re-lists and
     * re-reads footers for every table it touches (~tens of ms each —
     * ~10 s across a 166-query bench run). Data is NOT cached here —
-    * scans still read parquet; only the resolved plan is reused, so
-    * predicate pushdown/pruning per query are unaffected. A table whose
-    * FILES change mid-session needs a new session (or this map cleared)
-    * — same contract as a metastore's cached file index before a
-    * REFRESH TABLE. */
+    * scans still read parquet, so predicate pushdown/pruning per query
+    * are unaffected. A table whose FILES change mid-session needs a new
+    * session (or this map cleared) — same contract as a metastore's
+    * cached file index before a REFRESH TABLE.
+    *
+    * One-split rule: a relation whose file scan plans to exactly ONE
+    * input split is memoized as `coalesce(1)` of itself. The scan is one
+    * partition either way, but only the coalesce REPORTS
+    * `SinglePartition`, so `EnsureRequirements` can drop the hash,
+    * range-sort and single-partition exchanges that aggregates, windows,
+    * sort-merge joins, global sorts and `count()` would otherwise stack
+    * above it — each of which AQE runs as its own stage job, paying
+    * Spark's fixed per-stage cost for no data movement. The gate is
+    * Spark's own split sizing (`maxPartitionBytes`, `openCostInBytes`,
+    * parallelism), read by planning the scan once per (session, dir,
+    * table) — nothing executes. It needs no knob: a table big enough to
+    * matter plans several splits and comes back unchanged, so at scale
+    * the rule does nothing and the plan shape is the plain scan's. Like
+    * the file listing, the split count is fixed by the session's confs
+    * at the table's first resolution. */
   private val resolved =
     new java.util.concurrent.ConcurrentHashMap[
       (SparkSession, String, String), DataFrame]()
@@ -70,6 +86,21 @@ object Tables {
   }
 
   private def resolve(
+      spark: SparkSession, sfDir: String, name: String): DataFrame = {
+    val df = read(spark, sfDir, name)
+    if (oneSplit(df)) df.coalesce(1) else df
+  }
+
+  /** Whether `df`'s file scan plans to exactly one input split, from the
+    * physical plan alone: `inputRDD` only groups the listed files into
+    * partitions, so nothing runs (unlike `df.rdd`, which also builds a
+    * row deserializer). */
+  private def oneSplit(df: DataFrame): Boolean =
+    df.queryExecution.executedPlan.collectFirst {
+      case s: FileSourceScanExec => s.inputRDD.getNumPartitions
+    }.contains(1)
+
+  private def read(
       spark: SparkSession, sfDir: String, name: String): DataFrame = {
     if (name == "events") {
       // events.ts is parquet TIMESTAMP(NANOS), which Spark 4 refuses to map

@@ -1,13 +1,28 @@
 package graft
 
+import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.execution.ExplainMode
 
 /** Physical-plan audits (SURVEY.md §4 / the 100 TB posture): these
   * assertions pin the *plan shape*, not just the results — filters must
   * reach the parquet scan, projections must prune the read schema,
   * dimension joins must broadcast, top-k must not global-sort, and no
-  * query may degenerate into an unpartitioned cartesian product. */
+  * query may degenerate into an unpartitioned cartesian product.
+  *
+  * The plans are built in a spec-local session whose split sizing
+  * (4 KB splits, no per-file open cost) makes every sf0.001 fixture
+  * table plan several input splits, as every table does at scale.
+  * On the shared session the fixtures are one split each, and `Tables`
+  * hands them out as one partition, which drops exactly the exchanges
+  * these assertions pin. */
 class PlanAuditSpec extends SparkTestBase {
+
+  override lazy val spark: SparkSession = {
+    val s = SparkTestBase.session.newSession()
+    s.conf.set("spark.sql.files.maxPartitionBytes", "4096")
+    s.conf.set("spark.sql.files.openCostInBytes", "0")
+    s
+  }
 
   private val sf = "/root/testdata/sf0.001"
 

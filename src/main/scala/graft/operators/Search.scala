@@ -639,16 +639,16 @@ object Search {
   )
 
   // ───────────────── ON-DISK SEARCH INDEX ─────────────────
-  // The disk-lifecycle template's third instance: the lexical
-  // retrieval state (postings + doc lengths + corpus stats) persists
-  // as a parquet dataset whose postings are PARTITIONED BY TERM-HASH
-  // BUCKET — a query's terms resolve to <= |terms| bucket literals at
-  // plan time, so the serve scan lists only those directory families
-  // (the PartitionFilters guarantee q182's probed cells established),
-  // and the term equality pushes into the parquet scan within them.
-  // At 100 TB the postings list is the big artifact; reading
-  // |query terms|/nBuckets of it per query — independent of corpus
-  // size — is the difference between a search index and a table scan.
+  // The lexical retrieval state (postings + doc lengths + corpus
+  // stats) persists as a parquet dataset whose postings are
+  // PARTITIONED BY TERM-HASH BUCKET — a query's terms resolve to
+  // <= |terms| bucket literals at plan time, so the serve scan lists
+  // only those directory families (the PartitionFilters guarantee
+  // q182's probed cells established), and the term equality pushes
+  // into the parquet scan within them. At 100 TB the postings list is
+  // the big artifact; reading |query terms|/nBuckets of it per query —
+  // independent of corpus size — is the difference between a search
+  // index and a table scan.
 
   private[operators] val SearchTokenizer = "whitespace"
 
@@ -667,14 +667,94 @@ object Search {
     * state to reconcile them. */
   private val SearchTombSchema = "doc_id BIGINT, dl INT"
 
-  /** The search store's per-GENERATION artifacts (see
-    * [[Stores.currentGen]]): everything a compact republishes
-    * atomically under the next generation — the two datasets, the
-    * stats sidecar they must agree with, and the tombstone set the
-    * compact folds in. The manifest, ingest ledger and corpus-version
-    * stamp are store-life state and stay unversioned. */
-  private[graft] val SearchGenKinds =
-    Seq("postings", "docs", "stats", "tombstones")
+  /** The search store's [[Stores.StoreLayout]]: term-hash-bucketed
+    * postings plus the per-doc lengths (with a doc_id replay check),
+    * and the generational (n_docs, sum_dl) stats sidecar a compact
+    * republishes with them; doc_id tombstones carry `dl`
+    * ([[SearchTombSchema]]). The manifest, ingest ledger and
+    * corpus-version stamp are store-life state. Hooks: the bucket
+    * count comes from the manifest ([[checkSearchManifest]]); deletes
+    * write idempotent (doc_id, dl) tombstones; a compact restores
+    * postings ⊆ docs and re-derives the stats; stats add each bucket's
+    * distinct-term count; fsck checks the two append-crash windows. */
+  private[graft] val SearchLayout: Stores.StoreLayout = new Stores.StoreLayout(
+      "searchIndex", Seq(Stores.StoreDataset("postings", SearchPostingsSchema),
+        Stores.StoreDataset("docs", SearchDocsSchema, dupKey = Seq("doc_id"))),
+      partCol = "bkt", tombSchema = SearchTombSchema,
+      tombCols = Seq("doc_id"), sidecarKinds = Seq("stats"),
+      statsCount = "n_postings", mainNoun = "postings") {
+    def partitions(s: SparkSession, dir: String): Int =
+      checkSearchManifest(s, dir)
+
+    /** (doc_id, dl) rows for the NOVEL ids: dl looked up from the docs
+      * sidecar NOW, and ids already tombstoned (or absent from the
+      * store) skipped, so a retried delete cannot double-subtract the
+      * stats correction — the one way this store's delete is STRICTER
+      * than the others' (whose anti-join semantics forgive duplicates
+      * for free). An operator-sized list broadcasts the id set and
+      * collapses the lookup onto one task; a frame keeps the docs scan
+      * parallel (keyed joins left to AQE — a compliance batch can be
+      * corpus-scale) and funnels to one file only at the write. The
+      * docs semi-join emits each docs row at most once, so duplicate
+      * ids need no normalizing shuffle. */
+    override protected def tombRows(s: SparkSession, dir: String, g: Long,
+        ids: DataFrame, operatorSized: Boolean): DataFrame = {
+      val novel0 = tombstones(s, dir, g).fold(ids)(t =>
+        ids.join(t.select("doc_id"), Seq("doc_id"), "left_anti"))
+      val novel = if (operatorSized) broadcast(novel0) else novel0
+      val looked = read(s, dir, "docs", g)
+        .join(novel, Seq("doc_id"), "left_semi")
+      if (operatorSized) looked.coalesce(1) else looked.repartition(1)
+    }
+
+    /** Postings keep only rows whose doc survives in the compacted docs
+      * — the `postings ⊆ docs` invariant a crash inside
+      * [[searchIndexAppend]]'s window breaks (ORPHANED postings cannot
+      * rank, but transiently inflate their terms' df, and a delete
+      * cannot tombstone an id docs/ never saw) — and the new stats are
+      * derived from the new docs write. */
+    override protected def compactInto(s: SparkSession, dir: String,
+        ng: Long, n: Int, live: String => DataFrame): Unit = {
+      val liveDocs = live("docs")
+      writeParts(live("postings")
+          .join(liveDocs.select("doc_id"), Seq("doc_id"), "left_semi")
+          .select("doc_id", "term", "tf", "bkt"),
+        n, path(dir, "postings", ng), "overwrite")
+      writeDocsWithStats(liveDocs, dir, ng)
+    }
+
+    override protected def statsAggs: Seq[Column] =
+      Seq(countDistinct(col("term")).as("terms"))
+
+    override protected def statsShape(joined: DataFrame,
+        counts: DataFrame): DataFrame =
+      joined.select(col("bkt"), liveCount.as("n_postings"),
+        coalesce(col("terms"), lit(0L)).as("n_terms"), col("files"))
+
+    /** The append's two crash windows: stats behind docs/ (re-derived)
+      * and orphaned postings whose doc never landed (compacted). */
+    override protected def fsckChecks(s: SparkSession, dir: String,
+        g: Long, execute: Boolean): Seq[(String, String, String)] = {
+      val (nDocs, sumDl) = docsAggStats(s, path(dir, "docs", g))
+      val stale = Stores.readMetaSidecar(s, path(dir, "stats", g))
+        .forall(st => st("n_docs").toLong != nDocs ||
+          st("sum_dl").toLong != sumDl)
+      if (stale && execute) writeSearchStats(s, dir, g, nDocs, sumDl)
+      val orphans = read(s, dir, "postings", g)
+        .join(read(s, dir, "docs", g).select("doc_id"), Seq("doc_id"),
+          "left_anti")
+        .count()
+      if (orphans > 0 && execute) compact(s, dir)
+      Seq(
+        if (!stale) ("stats", "consistent", "none")
+        else ("stats", "stale (≠ agg over docs/)",
+          if (execute) "re-derived from docs/" else "would re-derive"),
+        if (orphans == 0) ("orphan-postings", "none", "none")
+        else ("orphan-postings", s"$orphans rows (doc never landed)",
+          if (execute) "compacted (postings ⊆ docs restored)"
+          else "would compact"))
+    }
+  }
 
   /** Write the search index: postings (doc_id, term, tf) bucketed by
     * term hash under `postings/bkt=<b>/…`, per-doc lengths under
@@ -693,52 +773,61 @@ object Search {
     * r15 advice): `docs` ids must be UNIQUE. A repeated id doubles its
     * rows in docs/ and postings/, inflating n_docs, sum_dl and its own
     * tf with no error — exact-dedup the frame first (q40) if unsure.
-    *
-    * Rebuild-safe: stale state from a prior store life under the same
-    * dir (every dataset generation + the gen pointer, tombstones, the
-    * ingest ledger) is cleared — the [[Similarity.ivfPqIndexWrite]]
-    * rebuild rule, third instance. */
+    * Rebuild-safe ([[Stores.StoreLayout.rebuild]]). */
   private[graft] def searchIndexWrite(docs: DataFrame, outDir: String,
       idCol: String = "doc_id", textCol: String = "text",
       nBuckets: Int = 8): Unit = {
     require(nBuckets >= 1, "searchIndexWrite: nBuckets must be >= 1")
     val s = docs.sparkSession
-    Stores.withStoreLock(s, outDir, "searchIndexWrite") {
-    Stores.clearStoreLife(s, outDir, SearchGenKinds)
+    SearchLayout.rebuild(s, outDir) {
     Stores.writeMetaSidecar(s, s"$outDir/manifest",
       Seq("n_buckets" -> nBuckets.toString, "tokenizer" -> SearchTokenizer))
-    val ws = split(col(textCol), " ")
-    val obs = org.apache.spark.sql.Observation()
     // docs (+ its observed stats sidecar) and postings are disjoint
     // datasets derived from the same input — their two write jobs run
     // CONCURRENTLY (r22, Stores.inParallel): the rebuild-safe initial
     // write has no cross-artifact ordering (a torn write of either
     // half is the same re-run-the-write repair; fsck classifies both)
     Stores.inParallel(s)(
-      {
-        docs.select(col(idCol).cast("long").as("doc_id"),
-            size(ws).as("dl"))
-          .observe(obs, count(lit(1)).cast("long").as("n"),
-            coalesce(sum(col("dl").cast("long")), lit(0L)).as("sdl"))
-          .write.mode("overwrite").parquet(s"$outDir/docs")
-        val (n0, sdl0) = observedStats(s, obs, s"$outDir/docs")
-        writeSearchStats(s, outDir, 0L, n0, sdl0)
-      },
-      docs.select(col(idCol).cast("long").as("doc_id"),
-          explode(ws).as("term"))
-        .groupBy("doc_id", "term")
-        .agg(count(lit(1)).cast("int").as("tf"))
-        .withColumn("bkt",
-          pmod(xxhash64(col("term")), lit(nBuckets.toLong)).cast("int"))
-        // one write task per bucket: each partition directory gets one
-        // file instead of (shuffle.partitions x nBuckets) shards
-        .repartition(nBuckets, col("bkt"))
-        .write.mode("overwrite").partitionBy("bkt")
-        .parquet(s"$outDir/postings"))
-    // fresh corpus-version stamp (see [[Stores]]): a rebuild starts a
-    // new coordination epoch at 0
-    Stores.writeStoreVersion(s, outDir, 0L)
+      writeDocsWithStats(docLengths(docs, idCol, textCol), outDir, 0L),
+      SearchLayout.writeParts(postingsOf(docs, idCol, textCol, nBuckets),
+        nBuckets, s"$outDir/postings", "overwrite"))
     }
+  }
+
+  /** (doc_id, dl) per doc — the docs dataset's rows. */
+  private def docLengths(docs: DataFrame, idCol: String,
+      textCol: String): DataFrame =
+    docs.select(col(idCol).cast("long").as("doc_id"),
+      size(split(col(textCol), " ")).as("dl"))
+
+  /** (doc_id, term, tf, bkt) postings, bucketed by term hash. */
+  private def postingsOf(docs: DataFrame, idCol: String, textCol: String,
+      nBuckets: Int): DataFrame =
+    docs.select(col(idCol).cast("long").as("doc_id"),
+        explode(split(col(textCol), " ")).as("term"))
+      .groupBy("doc_id", "term")
+      .agg(count(lit(1)).cast("int").as("tf"))
+      .withColumn("bkt",
+        pmod(xxhash64(col("term")), lit(nBuckets.toLong)).cast("int"))
+
+  /** The (n_docs, sum_dl) aggregate over docs rows — observed on a
+    * docs write action, or read back ([[docsAggStats]]). */
+  private def docStats: Seq[Column] = Seq(
+    count(lit(1)).cast("long").as("n"),
+    coalesce(sum(col("dl").cast("long")), lit(0L)).as("sdl"))
+
+  /** Write generation `g`'s docs dataset and its stats sidecar, the
+    * stats OBSERVED on the write action itself ([[observedStats]]) —
+    * the full-derivation point of [[searchIndexWrite]] and every
+    * compact. */
+  private def writeDocsWithStats(docs: DataFrame, dir: String,
+      g: Long): Unit = {
+    val obs = org.apache.spark.sql.Observation()
+    val p = SearchLayout.path(dir, "docs", g)
+    docs.observe(obs, docStats.head, docStats.tail: _*)
+      .write.mode("overwrite").parquet(p)
+    val (n, sdl) = observedStats(docs.sparkSession, obs, p)
+    writeSearchStats(docs.sparkSession, dir, g, n, sdl)
   }
 
   /** Append a DELTA of docs to an existing index under its frozen
@@ -799,28 +888,14 @@ object Search {
       indexDir: String, idCol: String = "doc_id",
       textCol: String = "text"): Unit = {
     val s = pinned.sparkSession
-    Stores.withStoreLock(s, indexDir, "searchIndexAppend") {
+    SearchLayout.append(s, indexDir) { g =>
     val nBuckets = checkSearchManifest(s, indexDir)
-    val g = Stores.currentGen(s, indexDir)
-    val ws = split(col(textCol), " ")
     // one-row reads BEFORE the appends, so a crash mid-append can only
     // leave stats BEHIND the data (under-counting the delta — the
     // documented repair window), never double-counting it
     val old = readSearchStats(s, indexDir, g)
-    pinned.select(col(idCol).cast("long").as("doc_id"),
-        explode(ws).as("term"))
-      .groupBy("doc_id", "term")
-      .agg(count(lit(1)).cast("int").as("tf"))
-      .withColumn("bkt",
-        pmod(xxhash64(col("term")), lit(nBuckets.toLong)).cast("int"))
-      // the WRITE's one-file-per-bucket discipline, not a bare column
-      // repartition (r16 verdict): each append lands at most one file
-      // per touched bucket, so ingest fragments accrete per-batch ×
-      // buckets-touched instead of × shuffle.partitions — compaction
-      // still reclaims, but the leak between compacts is bounded
-      .repartition(nBuckets, col("bkt"))
-      .write.mode("append").partitionBy("bkt")
-      .parquet(s"$indexDir/${Stores.genName("postings", g)}")
+    SearchLayout.writeParts(postingsOf(pinned, idCol, textCol, nBuckets),
+      nBuckets, SearchLayout.path(indexDir, "postings", g), "append")
     // the delta's (count, Σdl) rides the docs append itself as an
     // observed metric (one job where the r18 form ran a separate
     // delta aggregate before the writes — the r18 verdict's shared-
@@ -829,12 +904,9 @@ object Search {
     // every rest point, and a crash anywhere before the stats write
     // still leaves stats BEHIND the data (never ahead)
     val obs = org.apache.spark.sql.Observation()
-    pinned.select(col(idCol).cast("long").as("doc_id"),
-        size(ws).as("dl"))
-      .observe(obs, count(lit(1)).cast("long").as("n"),
-        coalesce(sum(col("dl").cast("long")), lit(0L)).as("sdl"))
-      .write.mode("append")
-      .parquet(s"$indexDir/${Stores.genName("docs", g)}")
+    docLengths(pinned, idCol, textCol)
+      .observe(obs, docStats.head, docStats.tail: _*)
+      .write.mode("append").parquet(SearchLayout.path(indexDir, "docs", g))
     Stores.awaitObserved(s, obs) match {
       case Some(r) => writeSearchStats(s, indexDir, g,
         old._1 + r.getLong(0), old._2 + r.getLong(1))
@@ -843,307 +915,85 @@ object Search {
         // the only way) — fall back to the FULL re-derivation, which
         // is strictly more authoritative than old + delta
         val (n, sdl) = docsAggStats(s,
-          s"$indexDir/${Stores.genName("docs", g)}")
+          SearchLayout.path(indexDir, "docs", g))
         writeSearchStats(s, indexDir, g, n, sdl)
     }
-    Stores.bumpStoreVersion(s, indexDir)
     }
   }
 
-  /** LOGICAL delete (takedowns): record (doc_id, dl) tombstones —
-    * dl looked up from the docs sidecar NOW so serves subtract the
-    * deleted docs from the corpus-global stats by aggregating the
-    * small tombstone set, never re-scanning docs/ per query (see
-    * [[SearchTombSchema]]). Serving subtracts immediately;
-    * [[searchIndexCompact]] reclaims the space. Idempotent: ids
-    * already tombstoned (or absent from the store) are skipped, so a
-    * retried delete cannot double-subtract the stats correction — the
-    * one way this store's delete is STRICTER than the dedup store's
-    * (whose anti-join semantics forgive duplicates for free). */
+  /** LOGICAL delete (takedowns, [[Stores.StoreLayout.delete]]): record
+    * (doc_id, dl) tombstones — dl looked up from the docs sidecar NOW,
+    * so serves subtract the deleted docs from the corpus-global stats
+    * by aggregating the small tombstone set, never re-scanning docs/
+    * per query (see [[SearchTombSchema]]). Serving subtracts
+    * immediately; [[searchIndexCompact]] reclaims the space.
+    * Idempotent: ids already tombstoned (or absent from the store) are
+    * skipped, so a retried delete cannot double-subtract the stats
+    * correction. */
   private[graft] def searchIndexDelete(s: SparkSession, indexDir: String,
-      ids: Seq[Long]): Unit = {
-    require(ids.nonEmpty, "searchIndexDelete: ids must be non-empty")
-    import s.implicits._
-    searchIndexDeleteBody(s, indexDir, ids.distinct.toDF("doc_id"),
-      operatorSized = true)
-  }
+      ids: Seq[Long]): Unit = SearchLayout.delete(s, indexDir, ids)
 
   /** FRAME-shaped [[searchIndexDelete]] — the no-collect takedown
-    * path ([[Stores.takedownAll]]'s DataFrame form): `ids` carries one
-    * `doc_id`-castable column and never crosses the driver; the
-    * novelty anti-join and the docs semi-join are keyed joins left to
-    * AQE (a compliance batch can be corpus-scale — the Seq form's
-    * broadcast hint would be wrong there), and the tombstone write
-    * repartitions to one file AFTER the join instead of collapsing the
-    * scan onto one task. Identical semantics to the Seq form
-    * (spec-pinned): already-tombstoned and absent ids are skipped, so
-    * a retry cannot double-subtract the stats correction. An empty
-    * frame writes an empty (possibly zero-row) tombstone append —
-    * a no-op for every serve. */
+    * path: `ids` carries one `doc_id`-castable column and never
+    * crosses the driver. Identical semantics to the Seq form
+    * (spec-pinned). */
   private[graft] def searchIndexDelete(s: SparkSession, indexDir: String,
-      ids: DataFrame): Unit = {
-    // loud long-cast guard (Stores.requireLongIds); no distinct — the
-    // novelty anti-join and the docs semi-join are both duplicate-safe
-    // (left-semi emits each docs row at most once), so normalizing a
-    // corpus-scale batch would shuffle it for no semantic effect.
-    // Pinned (eager localCheckpoint, released once the tombstone write
-    // has materialized — r18 advice): the PUBLIC frame-shaped entry
-    // point must not re-evaluate a non-deterministic caller frame
-    // across its guard and write; internal callers whose ids are
-    // already pinned (takedownAll) take [[searchIndexDeletePinned]].
-    val pinned = Stores.requireLongIds(ids, "doc_id", "searchIndexDelete")
-      .localCheckpoint()
-    try searchIndexDeleteBody(s, indexDir, pinned, operatorSized = false)
-    finally
-      org.apache.spark.sql.graft.Bridge.unpersistLocalCheckpoint(pinned)
-  }
+      ids: DataFrame): Unit = SearchLayout.delete(s, indexDir, ids)
 
-  /** [[searchIndexDelete]] for an ids frame the CALLER already
-    * validated and pinned (or a pure derivation of a pinned frame —
-    * [[Stores.takedownAll]]'s per-store dispatch, including the chunk
-    * family's packed-range resolution plan): skips the public form's
-    * guard+checkpoint, which would re-materialize the batch once per
-    * store. */
-  private[operators] def searchIndexDeletePinned(s: SparkSession,
-      indexDir: String, ids: DataFrame): Unit =
-    searchIndexDeleteBody(s, indexDir, ids, operatorSized = false)
-
-  private def searchIndexDeleteBody(s: SparkSession, indexDir: String,
-      fresh: DataFrame, operatorSized: Boolean): Unit = {
-    Stores.withStoreLock(s, indexDir, "searchIndexDelete") {
-    val g = Stores.currentGen(s, indexDir)
-    val tombP = new org.apache.hadoop.fs.Path(
-      s"$indexDir/${Stores.genName("tombstones", g)}")
-    val fs = tombP.getFileSystem(s.sparkContext.hadoopConfiguration)
-    val novel0 =
-      if (!fs.exists(tombP)) fresh
-      else fresh.join(
-        s.read.schema(SearchTombSchema).parquet(tombP.toString)
-          .select("doc_id"),
-        Seq("doc_id"), "left_anti")
-    // operator-sized (Seq) deletes broadcast the id set and collapse
-    // the whole lookup onto one task (the batch is tiny by contract);
-    // frame-shaped deletes keep the docs scan parallel and funnel to
-    // one tombstone file only at the write
-    val novel = if (operatorSized) broadcast(novel0) else novel0
-    val looked = s.read.schema(SearchDocsSchema)
-      .parquet(s"$indexDir/${Stores.genName("docs", g)}")
-      .join(novel, Seq("doc_id"), "left_semi")
-    (if (operatorSized) looked.coalesce(1) else looked.repartition(1))
-      .write.mode("append").parquet(tombP.toString)
-    Stores.bumpStoreVersion(s, indexDir)
-    }
-  }
-
-  /** The live tombstone set (doc_id, dl) at generation `g` — empty
-    * frame when none. Tombstones are GENERATIONAL: a compact folds the
-    * current set into the next generation's datasets and the fresh
-    * generation starts with no tombstone dir at all, while the old
-    * set stays with its (grace) generation for serves pinned to it. */
-  private def searchTombstones(s: SparkSession, indexDir: String,
-      g: Long): Option[DataFrame] = {
-    val p = new org.apache.hadoop.fs.Path(
-      s"$indexDir/${Stores.genName("tombstones", g)}")
-    val fs = p.getFileSystem(s.sparkContext.hadoopConfiguration)
-    if (!fs.exists(p)) None
-    else Some(s.read.schema(SearchTombSchema).parquet(p.toString))
-  }
-
-  /** Compact into the NEXT GENERATION: rewrite postings (one file per
-    * bucket) and docs with tombstones applied physically at fresh
-    * `<kind>-g<N+1>` paths, derive the new stats sidecar from the new
-    * docs read back, then COMMIT everything with one atomic `gen`
-    * pointer flip (see [[Stores.currentGen]]) — postings, docs, stats
-    * and the now-empty tombstone set change together or not at all, so
-    * the half-swapped crash window of the old rename-swap layout does
-    * not exist. The pre-compact generation is NOT deleted: it stays as
-    * the serve grace (a serve constructed before the flip keeps
-    * reading its pinned generation's files — snapshot isolation one
-    * generation deep); this compact's vacuum removes the generations
-    * BEFORE it. Crash anywhere pre-flip leaves the store intact plus
-    * torn `-g<N+1>` scratch (fsck deletes it; a re-run overwrites it);
-    * crash post-flip before the vacuum leaves expired generations the
-    * next compact (or fsck) removes.
+  /** Compact into the NEXT GENERATION ([[Stores.StoreLayout.compact]]):
+    * postings (one file per bucket) and docs rewritten with tombstones
+    * applied physically, the stats sidecar derived from the new docs
+    * write, and everything committed with one atomic generation flip —
+    * postings, docs, stats and the now-empty tombstone set change
+    * together or not at all. The pre-compact generation stays as the
+    * serve grace; crash pre-flip leaves torn `-g<N+1>` scratch, crash
+    * post-flip expired generations — both fsck hygiene.
     *
     * PURGE NOTE (takedown compliance): the grace generation still
     * carries the tombstoned rows' bytes, so the PHYSICAL purge of a
-    * delete completes at the SECOND compact after it — run two
-    * compacts back-to-back when a takedown must leave no bytes behind
-    * (the first folds the tombstones in, the second vacuums the
-    * generation that still holds them).
+    * delete completes at the SECOND compact after it
+    * ([[Stores.purgeAll]]).
     *
-    * Compaction also restores the `postings ⊆ docs` invariant: a
-    * crash inside [[searchIndexAppend]]'s window can leave ORPHANED
-    * postings (rows whose doc never reached docs/) — they cannot rank
-    * (the serve's dl join drops them) but they transiently inflate the
-    * affected terms' df, and [[searchIndexDelete]] cannot tombstone an
-    * id docs/ has never seen. The compact rewrite keeps only postings
-    * whose doc survives in the compacted docs sidecar, so the
+    * Compaction also restores the `postings ⊆ docs` invariant, so the
     * documented append-crash repair (delete the landed delta ids +
     * compact) reclaims BOTH halves of the wreckage (spec-pinned). */
   private[graft] def searchIndexCompact(s: SparkSession,
-      indexDir: String): Unit =
-      Stores.withStoreLock(s, indexDir, "searchIndexCompact") {
-    val nBuckets = checkSearchManifest(s, indexDir)
-    val g = Stores.currentGen(s, indexDir)
-    val ng = g + 1
-    val tombIds = searchTombstones(s, indexDir, g)
-      .map(t => Stores.scaleHint(t.select("doc_id")))
-    def minusTombs(df: DataFrame): DataFrame =
-      tombIds.fold(df)(t => df.join(t, Seq("doc_id"), "left_anti"))
-    val liveDocs = minusTombs(s.read.schema(SearchDocsSchema)
-      .parquet(s"$indexDir/${Stores.genName("docs", g)}"))
-    minusTombs(s.read.schema(SearchPostingsSchema)
-        .parquet(s"$indexDir/${Stores.genName("postings", g)}"))
-      .join(liveDocs.select("doc_id"), Seq("doc_id"), "left_semi")
-      .select("doc_id", "term", "tf", "bkt")
-      .repartition(nBuckets, col("bkt"))
-      .write.mode("overwrite").partitionBy("bkt")
-      .parquet(s"$indexDir/${Stores.genName("postings", ng)}")
-    val obs = org.apache.spark.sql.Observation()
-    liveDocs
-      .observe(obs, count(lit(1)).cast("long").as("n"),
-        coalesce(sum(col("dl").cast("long")), lit(0L)).as("sdl"))
-      .write.mode("overwrite")
-      .parquet(s"$indexDir/${Stores.genName("docs", ng)}")
-    val (n, sdl) = observedStats(s, obs,
-      s"$indexDir/${Stores.genName("docs", ng)}")
-    writeSearchStats(s, indexDir, ng, n, sdl)
-    // THE commit point: generation ng (with its re-derived stats and
-    // empty tombstone set) becomes current atomically
-    Stores.writeGen(s, indexDir, ng)
-    // vacuum everything OLDER than the grace generation g
-    Stores.vacuumGens(s, indexDir, SearchGenKinds, keepFrom = g)
-  }
+      indexDir: String): Unit = SearchLayout.compact(s, indexDir)
 
-  /** Per-bucket health report: (bkt, n_postings, n_terms, files) —
-    * live posting rows and distinct terms (tombstones subtracted) plus
-    * parquet files per bucket directory (the compaction trigger).
-    * Hadoop FS listing is the authoritative bucket set — an
-    * all-tombstoned bucket still reports (0, 0, >0 files). n_terms is
-    * the skew lens the other stores don't need: term-hash bucketing is
-    * static, so a pathologically hot bucket argues for a rebuild at a
-    * higher bucket count, and this report is where that shows. */
+  /** Per-bucket health report ([[Stores.StoreLayout.stats]]):
+    * (bkt, n_postings, n_terms, files) — live posting rows and
+    * distinct terms plus parquet files per bucket directory (the
+    * compaction trigger). n_terms is the skew lens the other stores
+    * don't need: term-hash bucketing is static, so a pathologically
+    * hot bucket argues for a rebuild at a higher bucket count, and
+    * this report is where that shows. */
   private[graft] def searchIndexStats(s: SparkSession,
-      indexDir: String): DataFrame = {
-    val g = Stores.currentGen(s, indexDir)
-    val root = new org.apache.hadoop.fs.Path(
-      s"$indexDir/${Stores.genName("postings", g)}")
-    val fs = root.getFileSystem(s.sparkContext.hadoopConfiguration)
-    require(fs.exists(root) && fs.getFileStatus(root).isDirectory,
-      s"searchIndexStats: no postings dataset under $indexDir — " +
-        "not a store directory (searchIndexWrite creates postings/)")
-    val tombIds = searchTombstones(s, indexDir, g)
-      .map(t => broadcast(t.select("doc_id")))
-    val live = tombIds.fold(
-        s.read.schema(SearchPostingsSchema).parquet(root.toString))(t =>
-      s.read.schema(SearchPostingsSchema).parquet(root.toString)
-        .join(t, Seq("doc_id"), "left_anti"))
-    val counts = live.groupBy("bkt")
-      .agg(count(lit(1)).as("rows"),
-        countDistinct(col("term")).as("terms"))
-    val files = fs.listStatus(root)
-      .filter(st => st.isDirectory && st.getPath.getName.startsWith("bkt="))
-      .map(st => (st.getPath.getName.stripPrefix("bkt=").toInt,
-        fs.listStatus(st.getPath)
-          .count(f => f.getPath.getName.endsWith(".parquet"))))
-      .toSeq
-    import s.implicits._
-    broadcast(files.toDF("bkt", "files"))
-      .join(counts, Seq("bkt"), "left")
-      .select(col("bkt"),
-        coalesce(col("rows"), lit(0L)).as("n_postings"),
-        coalesce(col("terms"), lit(0L)).as("n_terms"), col("files"))
-      .orderBy("bkt")
-  }
+      indexDir: String): DataFrame = SearchLayout.stats(s, indexDir)
 
   /** CONTINUOUS ingestion: each micro-batch of `delta` (idCol, textCol
     * — new ids only) is appended under the frozen bucket geometry,
-    * guarded by the same batch-id LEDGER as the other two stores
-    * (`ingested/batch-<id>/` markers make checkpoint replays skip
-    * already-applied batches — clean stop/restart never
-    * double-appends). Same honest crash window: dying between the
-    * append and its marker replays that batch at-least-once; the
-    * repair is [[searchIndexDelete]] of the duplicate ids +
-    * [[searchIndexCompact]], or a rebuild. Note the stats sidecar is
-    * rewritten per batch (a one-row overwrite — the corpus-global
-    * reconciliation appends force on this store). */
+    * guarded by the batch-id ledger ([[Stores.StoreLayout.ingest]]).
+    * The stats sidecar is rewritten per batch (a one-row overwrite —
+    * the corpus-global reconciliation appends force on this store). */
   private[graft] def searchIndexIngest(delta: DataFrame, indexDir: String,
       checkpointDir: String, idCol: String = "doc_id",
       textCol: String = "text")
       : org.apache.spark.sql.streaming.StreamingQuery = {
     checkSearchManifest(delta.sparkSession, indexDir)
-    delta.writeStream
-      .option("checkpointLocation", checkpointDir)
-      .outputMode("append")
-      .foreachBatch {
-        (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row],
-         batchId: Long) =>
-        val marker =
-          new org.apache.hadoop.fs.Path(s"$indexDir/ingested/batch-$batchId")
-        val fs = marker.getFileSystem(
-          batch.sparkSession.sparkContext.hadoopConfiguration)
-        if (!fs.exists(marker)) {
-          if (!batch.isEmpty)
-            searchIndexAppend(batch, indexDir, idCol, textCol)
-          // a silently-false mkdirs would leave the marker missing and
-          // the next replay would double-append — fail the batch loudly
-          require(fs.mkdirs(marker),
-            s"searchIndexIngest: ledger marker create failed: $marker")
-        }
-        ()
-      }
-      .start()
+    SearchLayout.ingest(delta, indexDir, checkpointDir)(
+      searchIndexAppend(_, indexDir, idCol, textCol))
   }
 
-  /** The store MAINTENANCE POLICY — the decision table the other two
-    * stores carry, on the search store: per bucket, (bkt, n_postings,
-    * files, tomb, action) where action is `compact` when the bucket
-    * directory's file count exceeds `maxFiles` (append/ingest
-    * small-file accretion) or the tombstoned-row share of the bucket
-    * exceeds `maxTombBp` (dead rows every serve still anti-joins
-    * away — and, uniquely here, dead weight in the stats correction),
-    * else `ok`. No retrain action: term-hash bucketing has no trained
-    * state; a hot-bucket skew problem shows in [[searchIndexStats]]'s
-    * n_terms column and argues for a REBUILD at a higher bucket count,
-    * which is a write, not a maintenance op. `execute = true` runs
-    * [[searchIndexCompact]] when any bucket decides `compact`
-    * (whole-store by construction; serve-identical, spec-pinned). */
+  /** The store MAINTENANCE POLICY ([[Stores.StoreLayout.maintain]]):
+    * per bucket, (bkt, n_postings, files, tomb, action) — dead rows
+    * are, uniquely here, also dead weight in the stats correction. No
+    * retrain action: term-hash bucketing has no trained state; a
+    * hot-bucket skew shows in [[searchIndexStats]]'s n_terms column
+    * and argues for a REBUILD at a higher bucket count. */
   private[graft] def searchIndexMaintain(s: SparkSession,
       indexDir: String, maxFiles: Int = 8, maxTombBp: Long = 2000L,
-      execute: Boolean = false): DataFrame = {
-    require(maxFiles >= 1 && maxTombBp >= 0,
-      "searchIndexMaintain: maxFiles >= 1, maxTombBp >= 0")
-    val g = Stores.currentGen(s, indexDir)
-    val raw = s.read.schema(SearchPostingsSchema)
-      .parquet(s"$indexDir/${Stores.genName("postings", g)}")
-    val dead = searchTombstones(s, indexDir, g) match {
-      case None => raw.filter(lit(false))
-      case Some(t) =>
-        raw.join(broadcast(t.select("doc_id")), Seq("doc_id"), "left_semi")
-    }
-    val tomb = dead.groupBy("bkt").agg(count(lit(1)).as("tomb"))
-    val report = searchIndexStats(s, indexDir)
-      .join(tomb, Seq("bkt"), "left")
-      .select(col("bkt"), col("n_postings"), col("files"),
-        coalesce(col("tomb"), lit(0L)).as("tomb"))
-      .withColumn("action",
-        when(col("files") > maxFiles
-          || (col("n_postings") + col("tomb") > 0
-            && col("tomb") * 10000L
-               > lit(maxTombBp) * (col("n_postings") + col("tomb"))),
-          "compact").otherwise("ok"))
-      .orderBy("bkt")
-    if (execute) {
-      val decided = report.collect()
-      if (decided.exists(_.getAs[String]("action") == "compact"))
-        searchIndexCompact(s, indexDir)
-      import s.implicits._
-      decided.map(r => (r.getInt(0), r.getLong(1), r.getInt(2),
-          r.getLong(3), r.getString(4)))
-        .toSeq.toDF("bkt", "n_postings", "files", "tomb", "action")
-    } else report
-  }
+      execute: Boolean = false): DataFrame =
+    SearchLayout.maintain(s, indexDir, maxFiles, maxTombBp, execute)
 
   /** A query term's postings bucket, computed DRIVER-SIDE: the same
     * `pmod(xxhash64(term), nBuckets)` the write path stamps per row,
@@ -1206,8 +1056,7 @@ object Search {
     * observation fallback and full re-derivation. */
   private def docsAggStats(s: SparkSession, docsPath: String): (Long, Long) = {
     val st = s.read.schema(SearchDocsSchema).parquet(docsPath)
-      .agg(count(lit(1)).cast("long"),
-        coalesce(sum(col("dl").cast("long")), lit(0L))).head()
+      .agg(docStats.head, docStats.tail: _*).head()
     (st.getLong(0), st.getLong(1))
   }
 
@@ -1219,7 +1068,7 @@ object Search {
     * each of those paths. */
   private[graft] def writeSearchStats(s: SparkSession, indexDir: String,
       g: Long, nDocs: Long, sumDl: Long): Unit =
-    Stores.writeMetaSidecar(s, s"$indexDir/${Stores.genName("stats", g)}",
+    Stores.writeMetaSidecar(s, SearchLayout.path(indexDir, "stats", g),
       Seq("n_docs" -> nDocs.toString, "sum_dl" -> sumDl.toString))
 
   /** Read generation `g`'s (n_docs, sum_dl) stats sidecar; loud when
@@ -1227,8 +1076,7 @@ object Search {
     * re-derived row atomically with the datasets it describes. */
   private[graft] def readSearchStats(s: SparkSession,
       indexDir: String, g: Long): (Long, Long) = {
-    val m = Stores.readMetaSidecar(s,
-        s"$indexDir/${Stores.genName("stats", g)}")
+    val m = Stores.readMetaSidecar(s, SearchLayout.path(indexDir, "stats", g))
       .getOrElse(throw new IllegalStateException(
         s"no stats sidecar under $indexDir — not a search store, or a " +
           "crashed write; run Stores.searchIndexFsck"))
@@ -1281,14 +1129,11 @@ object Search {
     val g = Stores.currentGen(s, indexDir)
     import s.implicits._
     val bkts = queryTerms.map(termBucket(_, nBuckets)).distinct
-    val tombs = searchTombstones(s, indexDir, g)
-    val tombIds = tombs.map(t => broadcast(t.select("doc_id")))
-    def minusTombs(df: DataFrame): DataFrame =
-      tombIds.fold(df)(t => df.join(t, Seq("doc_id"), "left_anti"))
-    val post = minusTombs(s.read.schema(SearchPostingsSchema)
-      .parquet(s"$indexDir/${Stores.genName("postings", g)}")
-      .filter(col("bkt").isin(bkts.map(Int.box): _*)
-        && col("term").isin(queryTerms: _*)))
+    val tombs = SearchLayout.tombstones(s, indexDir, g)
+    val post = SearchLayout.minusTombs(s, indexDir, g,
+      SearchLayout.read(s, indexDir, "postings", g)
+        .filter(col("bkt").isin(bkts.map(Int.box): _*)
+          && col("term").isin(queryTerms: _*)))
     // one-row stats: df per term from the pruned postings (a postings
     // row exists iff tf > 0, so the count IS the doc frequency) plus
     // the corpus-wide (n, sdl) the write recorded, minus the deleted
@@ -1326,8 +1171,7 @@ object Search {
     val base =
       if (!includeZeroMatches) matched
       else matched.unionByName(
-        minusTombs(s.read.schema(SearchDocsSchema)
-            .parquet(s"$indexDir/${Stores.genName("docs", g)}"))
+        SearchLayout.live(s, indexDir, "docs", g)
           .join(matched.select("doc_id"), Seq("doc_id"), "left_anti")
           .select(col("doc_id") +: queryTerms.indices.map(i =>
             lit(0L).as(s"tf${i + 1}")): _*))
@@ -1336,9 +1180,7 @@ object Search {
       // keyed join, deliberately unhinted — AQE broadcasts the matched
       // side when it is small, shuffles when a stopword query makes it
       // corpus-sized (the allow-list non-hint rule of the ANN serve)
-      .join(s.read.schema(SearchDocsSchema)
-          .parquet(s"$indexDir/${Stores.genName("docs", g)}"),
-        "doc_id")
+      .join(SearchLayout.read(s, indexDir, "docs", g), "doc_id")
       .crossJoin(broadcast(st))
       .select(bm25ScoreCols("doc_id", queryTerms.size, k1, b): _*)
       .orderBy(col("score").desc, col("doc_id")).limit(topK)
@@ -1498,7 +1340,7 @@ object Search {
   private val coordDirs =
     new java.util.concurrent.ConcurrentHashMap[String, (String, String)]()
 
-  private def coordStoreDirs(s: SparkSession,
+  private[operators] def coordStoreDirs(s: SparkSession,
       dir: String): (String, String) =
     coordDirs.computeIfAbsent(dir, _ => {
       val root = Stores.storeScratchDir(s, "graft-coord-q187")

@@ -1,7 +1,6 @@
 package graft.operators
 
-import org.apache.hadoop.fs.Path
-import org.apache.spark.sql.{Column, DataFrame, Dataset, Row, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -702,13 +701,43 @@ object Similarity {
   private val IvfPqBooksSchema = "cs INT, cb_id BIGINT, cbv ARRAY<BIGINT>"
   private val IvfPqCentsSchema = "cl BIGINT, c ARRAY<DOUBLE>"
 
-  /** The ANN store's per-GENERATION artifacts (see
-    * [[Stores.currentGen]]): the cell-partitioned encodings and the
-    * tombstone set a compact folds into the next generation. The
-    * model frames (books/cents), manifest, ingest ledger and
-    * corpus-version stamp are store-life state — compaction never
-    * retrains, so they stay unversioned. */
-  private[graft] val AnnGenKinds = Seq("enc", "tombstones")
+  /** The ANN store's [[Stores.StoreLayout]]: the cell-partitioned
+    * encodings with vec_id tombstones and a (vec_id, s) replay check.
+    * The model frames (books/cents) are store-life state like the
+    * manifest — compaction never retrains. Hooks: the cell count is
+    * [[annKIvf]]; stats count each vector once, on its `s = 0` row,
+    * and add the cell's integer basis points of all live vectors
+    * (`share_bp`, the lens maintain's `retrain` rule reads). */
+  private[graft] val AnnLayout: Stores.StoreLayout = new Stores.StoreLayout(
+      "ivfPqIndex", Seq(Stores.StoreDataset("enc", IvfPqEncSchema,
+        dupKey = Seq("vec_id", "s"))),
+      partCol = "cell", tombSchema = "vec_id BIGINT",
+      tombCols = Seq("vec_id"), statsCount = "n_vecs",
+      mainNoun = "encodings", dirNoun = "an index",
+      maintainExtra = Seq("share_bp")) {
+    def partitions(s: SparkSession, dir: String): Int = annKIvf(s, dir)
+    override protected def statsRows(rows: DataFrame): DataFrame =
+      rows.filter(col("s") === 0)
+    override protected def statsShape(joined: DataFrame,
+        counts: DataFrame): DataFrame =
+      joined.crossJoin(broadcast(
+          counts.agg(coalesce(sum(col("rows")), lit(0L)).as("tot"))))
+        .select(col("cell"), liveCount.as("n_vecs"), col("files"),
+          // floor to integer basis points (SQL `/` is true division);
+          // an all-deleted index reports 0 bp, not a division by zero
+          when(col("tot") > 0,
+            floor(liveCount * 10000L / col("tot")).cast("long"))
+            .otherwise(lit(0L)).as("share_bp"))
+  }
+
+  /** The store's cell count — THE kIvf lookup of append, compact and
+    * maintain: the manifest's kIvf, a driver-side sidecar read.
+    * Counting cents/ (a Spark job for one int the write already
+    * recorded) is only the pre-manifest fallback. */
+  private def annKIvf(s: SparkSession, dir: String): Int =
+    Stores.readMetaSidecar(s, s"$dir/manifest").map(_("kIvf").toInt)
+      .getOrElse(s.read.schema(IvfPqCentsSchema)
+        .parquet(s"$dir/cents").count().toInt)
 
   /** Write the IVF-PQ serving index as an ON-DISK parquet dataset
     * PARTITIONED BY CELL — the physical layout every "at 100 TB the
@@ -738,19 +767,9 @@ object Similarity {
     require(kIvf >= 1 && m >= 1 && subDim >= 1 && k >= 1,
       "ivfPqIndexWrite: kIvf, m, subDim, k must all be >= 1")
     val s = codes.sparkSession
-    Stores.withStoreLock(s, outDir, "ivfPqIndexWrite") {
-    // A rebuild over a dir that held a PRIOR index life must not
-    // inherit its sidecar state: a stale tombstones/ set would mask
-    // freshly written rows whose ids were reused (silent row loss —
-    // the exact failure the manifest guard exists to prevent), a
-    // stale ingested/ batch ledger would make a NEW stream started
-    // with a fresh checkpoint skip its first batches (batch ids
-    // restart at 0), and stale generations (with their gen pointer)
-    // would shadow the fresh generation-0 write entirely. The
-    // model/enc overwrites below replace their own dirs; everything
-    // else is cleared here explicitly (DiskIndexSpec pins
-    // rebuild-over-used-dir).
-    Stores.clearStoreLife(s, outDir, AnnGenKinds)
+    // rebuild-safe: a prior index life's sidecar state is cleared
+    // first (DiskIndexSpec pins rebuild-over-used-dir)
+    AnnLayout.rebuild(s, outDir) {
     // normalize the model frames to the DECLARED store types at the
     // writer (IvfPqBooksSchema/IvfPqCentsSchema) — every later read
     // declares its schema instead of paying an inference job.
@@ -787,16 +806,9 @@ object Similarity {
       "kIvf" -> kIvf.toString, "k" -> k.toString))
     val books = s.read.schema(IvfPqBooksSchema).parquet(s"$outDir/books")
     val cents = s.read.schema(IvfPqCentsSchema).parquet(s"$outDir/cents")
-    pqEncode(codes, m, subDim, k, Some(books))
-      .join(ivfAssign(codes, kIvf, Some(cents)), "vec_id")
-      // one write task per cell: each partition directory gets a
-      // single file instead of (shuffle.partitions × kIvf) shards
-      .repartition(kIvf, col("cell"))
-      .write.mode("overwrite").partitionBy("cell")
-      .parquet(s"$outDir/enc")
-    // fresh corpus-version stamp (see [[Stores]]): a rebuild starts a
-    // new coordination epoch at 0
-    Stores.writeStoreVersion(s, outDir, 0L)
+    AnnLayout.writeParts(pqEncode(codes, m, subDim, k, Some(books))
+      .join(ivfAssign(codes, kIvf, Some(cents)), "vec_id"),
+      kIvf, s"$outDir/enc", "overwrite")
     }
   }
 
@@ -812,29 +824,15 @@ object Similarity {
   private[graft] def ivfPqIndexAppend(delta: DataFrame, indexDir: String,
       m: Int, subDim: Int): Unit = {
     val s = delta.sparkSession
-    Stores.withStoreLock(s, indexDir, "ivfPqIndexAppend") {
+    AnnLayout.append(s, indexDir) { g =>
     checkIndexManifest(s, indexDir, m, subDim)
     val books = s.read.schema(IvfPqBooksSchema).parquet(s"$indexDir/books")
     val cents = s.read.schema(IvfPqCentsSchema).parquet(s"$indexDir/cents")
     // k/kIvf parameters are seed-rule knobs — irrelevant under a
     // provided (frozen) model, which is the whole point here
-    // the write's one-file-per-cell discipline (r16 verdict on the
-    // search append, applied to all three stores): repartitioning into
-    // the index's own cell count lands at most one file per touched
-    // cell per append, bounding small-file accretion between compacts.
-    // The cell count comes from the manifest sidecar (a driver-side FS
-    // read) — counting cents/ here would bill every append a Spark job
-    // for one int the write already recorded; the count() fallback only
-    // runs for a pre-manifest store
-    val nCells = Stores.readMetaSidecar(s, s"$indexDir/manifest")
-      .map(_("kIvf").toInt).getOrElse(cents.count().toInt)
-    val g = Stores.currentGen(s, indexDir)
-    pqEncode(delta, m, subDim, k = 1, Some(books))
-      .join(ivfAssign(delta, kIvf = 1, Some(cents)), "vec_id")
-      .repartition(nCells, col("cell"))
-      .write.mode("append").partitionBy("cell")
-      .parquet(s"$indexDir/${Stores.genName("enc", g)}")
-    Stores.bumpStoreVersion(s, indexDir)
+    AnnLayout.writeParts(pqEncode(delta, m, subDim, k = 1, Some(books))
+      .join(ivfAssign(delta, kIvf = 1, Some(cents)), "vec_id"),
+      annKIvf(s, indexDir), AnnLayout.path(indexDir, "enc", g), "append")
     }
   }
 
@@ -855,9 +853,10 @@ object Similarity {
     * plan-fragile; a serving path wants the guarantee in the plan.)
     * `codes` supplies the query vector and the full-precision rerank
     * side — at scale, the corpus table the index was built from.
-    * Outstanding tombstones are subtracted ([[minusTombstones]]).
-    * Returns (vec_id, cell, adc, cos_sim) top-`topK`, identical to
-    * [[ivfPqAnn]] over the same model (spec-pinned).
+    * Outstanding tombstones are subtracted
+    * ([[Stores.StoreLayout.minusTombs]]). Returns (vec_id, cell, adc,
+    * cos_sim) top-`topK`, identical to [[ivfPqAnn]] over the same
+    * model (spec-pinned).
     *
     * `allowed` (a one-`vec_id`-column frame, typically a metadata
     * predicate evaluated on the corpus table) opts into FILTERED
@@ -900,16 +899,16 @@ object Similarity {
     // eager argmin over the kIvf-row centroid frame — that job is the
     // pruning guarantee, not overhead.
     val probedCells: Seq[Long] =
-      if (manifestKIvf.exists(nprobe >= _)) listCellDirs(s, indexDir, gServe)
+      if (manifestKIvf.exists(nprobe >= _))
+        AnnLayout.partitionDirs(s, indexDir, gServe).map(_._1).sorted
       else s.read.schema(IvfPqCentsSchema).parquet(s"$indexDir/cents")
         .crossJoin(broadcast(qv))
         .select(col("cl"),
           graft.plans.L2DistanceSq.l2DistSq(col("c"), col("qv0")).as("d"))
         .orderBy(col("d").asc, col("cl")).limit(nprobe)
         .select("cl").collect().toSeq.map(_.getLong(0))
-    val live = minusTombstones(s, indexDir, gServe,
-      s.read.schema(IvfPqEncSchema)
-        .parquet(s"$indexDir/${Stores.genName("enc", gServe)}")
+    val live = AnnLayout.minusTombs(s, indexDir, gServe,
+      AnnLayout.read(s, indexDir, "enc", gServe)
         .filter(col("cell").isin(probedCells: _*)))
     val enc = allowed.fold(live)(a =>
       live.join(a.select(col("vec_id")), Seq("vec_id"), "leftsemi"))
@@ -1033,7 +1032,7 @@ object Similarity {
     * row; no dedup shuffle), and the model frames come off the index,
     * so the batch can never rank in a different code space than the
     * encodings were written in. Outstanding tombstones are subtracted
-    * ([[minusTombstones]]). Returns [[ivfPqAnnBatch]]'s
+    * ([[Stores.StoreLayout.minusTombs]]). Returns [[ivfPqAnnBatch]]'s
     * (q_id, vec_id, cell, adc, cos_sim, rn). Construction-eager like
     * [[ivfPqIndexServe]] (the distinct-cells collect + a kIvf-row
     * count), by design. `allowed` restricts CANDIDATES for the whole
@@ -1068,7 +1067,8 @@ object Similarity {
     // probe job (the ivfPqIndexServe discipline); pruned batches
     // still run the per-query argmin + distinct-cells collect.
     val cellsNeeded: Seq[Long] =
-      if (manifestKIvf.exists(nprobe >= _)) listCellDirs(s, indexDir, gServe)
+      if (manifestKIvf.exists(nprobe >= _))
+        AnnLayout.partitionDirs(s, indexDir, gServe).map(_._1).sorted
       else {
         val qs = codes.filter(col("vec_id") < qMax)
           .select(col("vec_id").as("q_id"), col("v").as("qv"))
@@ -1081,9 +1081,8 @@ object Similarity {
           .filter(col("prn") <= nprobe)
           .select("cl").distinct().collect().map(_.getLong(0)).toSeq
       }
-    val live = minusTombstones(s, indexDir, gServe,
-      s.read.schema(IvfPqEncSchema)
-        .parquet(s"$indexDir/${Stores.genName("enc", gServe)}")
+    val live = AnnLayout.minusTombs(s, indexDir, gServe,
+      AnnLayout.read(s, indexDir, "enc", gServe)
         .filter(col("cell").isin(cellsNeeded: _*)))
     val encDisk = allowed.fold(live)(a =>
       live.join(a.select(col("vec_id")), Seq("vec_id"), "leftsemi"))
@@ -1093,38 +1092,6 @@ object Similarity {
       qMax, kIvf, nprobe, m, subDim, k = 1, coarseK, topK,
       codebooks = Some(books), centroids = Some(cents),
       allowedPairs = allowedPairs)
-  }
-
-  /** The generation-pinned encodings dataset's cell-directory
-    * listing, driver-side (no Spark job) — THE probed-cell source for
-    * EXHAUSTIVE serves (nprobe >= the manifest's kIvf): one shared
-    * definition so the single and batch serve paths cannot drift on
-    * the path shape or the `cell=` parse. */
-  private def listCellDirs(s: SparkSession, indexDir: String,
-      g: Long): Seq[Long] = {
-    val encRoot = new Path(s"$indexDir/${Stores.genName("enc", g)}")
-    val fs = encRoot.getFileSystem(s.sparkContext.hadoopConfiguration)
-    fs.listStatus(encRoot).toSeq
-      .filter(st => st.isDirectory && st.getPath.getName.startsWith("cell="))
-      .map(_.getPath.getName.stripPrefix("cell=").toLong).sorted
-  }
-
-  /** Tombstone-aware view of an on-disk encodings scan: subtract the
-    * index's logical-delete set (see [[ivfPqIndexDelete]]) as a
-    * BROADCAST anti-join — the tombstone frame is ids-only and stays
-    * small between compactions by contract, so the serve plan keeps
-    * its partition-pruned scan shape and pays one broadcast hash
-    * lookup per encoding row, never a shuffle. No `tombstones/`
-    * directory means no deletes: the scan is returned untouched (the
-    * common case — zero cost until the first delete). */
-  private def minusTombstones(s: SparkSession, indexDir: String,
-      g: Long, enc: DataFrame): DataFrame = {
-    val p = new Path(s"$indexDir/${Stores.genName("tombstones", g)}")
-    val fs = p.getFileSystem(s.sparkContext.hadoopConfiguration)
-    if (!fs.exists(p)) enc
-    else enc.join(
-      Stores.scaleHint(s.read.schema("vec_id BIGINT").parquet(p.toString)),
-      Seq("vec_id"), "left_anti")
   }
 
   /** Validate caller knobs against the index's own manifest row (see
@@ -1156,144 +1123,45 @@ object Similarity {
       ik
     }
 
-  /** LOGICAL delete from an on-disk index: append the ids to the
-    * index's `tombstones/` parquet set. Serving subtracts tombstones
-    * with a broadcast anti-join ([[minusTombstones]]) — a deleted
-    * vector stops surfacing immediately, at zero rewrite cost — and
-    * the next [[ivfPqIndexCompact]] makes the delete PHYSICAL and
-    * clears the set. This is the delete contract every append-only
-    * columnar index uses at scale (a 100 TB cell directory cannot be
-    * rewritten per delete): deletes are cheap and logical, space is
-    * reclaimed by maintenance. Deleting an id not in the index is a
-    * harmless no-op; deleting an id later re-appended would mask the
-    * new rows too (ids are never reused by contract — the
+  /** LOGICAL delete from an on-disk index ([[Stores.StoreLayout.delete]]):
+    * a deleted vector stops surfacing immediately, at zero rewrite
+    * cost, and the next [[ivfPqIndexCompact]] makes the delete
+    * PHYSICAL — a 100 TB cell directory cannot be rewritten per
+    * delete. Ids are never reused by contract (the
     * [[ivfPqIndexAppend]] new-ids rule). */
   private[graft] def ivfPqIndexDelete(s: SparkSession, indexDir: String,
-      ids: Seq[Long]): Unit = {
-    require(ids.nonEmpty, "ivfPqIndexDelete: ids must be non-empty")
-    import s.implicits._
-    // ids-frame is caller-side tiny; one file per delete batch
-    ivfPqIndexDeleteBody(s, indexDir, ids.toDF("vec_id").coalesce(1))
-  }
+      ids: Seq[Long]): Unit = AnnLayout.delete(s, indexDir, ids)
 
-  /** FRAME-shaped [[ivfPqIndexDelete]] (the no-collect takedown path,
-    * [[Stores.takedownAll]]'s DataFrame form): `ids` carries one
-    * `vec_id`-castable column that never crosses the driver; the
-    * tombstone write funnels to one file only AFTER whatever plan
-    * computes the ids. Absent ids are forgiven by the serve's
-    * anti-join exactly as in the Seq form; an empty frame appends
-    * zero rows (a no-op for every serve). */
+  /** FRAME-shaped [[ivfPqIndexDelete]] (the no-collect takedown path):
+    * `ids` carries one `vec_id`-castable column that never crosses the
+    * driver. */
   private[graft] def ivfPqIndexDelete(s: SparkSession, indexDir: String,
-      ids: DataFrame): Unit = {
-    // pinned (r18 advice): the public frame-shaped entry point pins
-    // the caller's frame so a non-deterministic ids plan cannot
-    // tombstone one id set and report another; released once the
-    // write has materialized. Internal pre-pinned callers
-    // (takedownAll) take the …Pinned form below.
-    val pinned = Stores.requireLongIds(ids, "vec_id", "ivfPqIndexDelete")
-      .localCheckpoint()
-    try ivfPqIndexDeleteBody(s, indexDir, pinned.repartition(1))
-    finally
-      org.apache.spark.sql.graft.Bridge.unpersistLocalCheckpoint(pinned)
-  }
+      ids: DataFrame): Unit = AnnLayout.delete(s, indexDir, ids)
 
-  /** [[ivfPqIndexDelete]] for an ids frame the caller already
-    * validated and pinned ([[Stores.takedownAll]]'s dispatch): skips
-    * the guard+checkpoint the public form pays. */
-  private[operators] def ivfPqIndexDeletePinned(s: SparkSession,
-      indexDir: String, ids: DataFrame): Unit =
-    ivfPqIndexDeleteBody(s, indexDir, ids.repartition(1))
-
-  private def ivfPqIndexDeleteBody(s: SparkSession, indexDir: String,
-      tombRows: DataFrame): Unit = {
-    Stores.withStoreLock(s, indexDir, "ivfPqIndexDelete") {
-    val g = Stores.currentGen(s, indexDir)
-    tombRows
-      .write.mode("append")
-      .parquet(s"$indexDir/${Stores.genName("tombstones", g)}")
-    Stores.bumpStoreVersion(s, indexDir)
-    }
-  }
-
-  /** Compact into the NEXT GENERATION: rewrite the encodings to ONE
-    * file per cell directory with outstanding tombstones applied
-    * physically, at a fresh `enc-g<N+1>` path, then COMMIT with the
-    * atomic `gen` pointer flip (see [[Stores.currentGen]]) — the
-    * encodings and the now-empty tombstone set change together. Every
-    * [[ivfPqIndexAppend]] (and each streaming micro-batch of
-    * [[ivfPqIndexIngest]]) adds a file per touched cell, so a
-    * long-lived index accretes small fragments whose per-file open/
-    * footer cost eventually dominates the pruned serve scan — the
-    * classic small-files decay every append-only layout meets;
-    * compaction is the repair, and serve-equality across it is
-    * spec-pinned. The pre-compact generation survives as the serve
-    * grace (a serve constructed before the flip keeps reading its
-    * pinned generation); this compact vacuums the generations before
-    * it. Crash pre-flip leaves the store intact plus torn scratch;
-    * crash post-flip leaves expired generations — both directory
-    * hygiene, classified and repaired by [[Stores.annIndexFsck]].
-    * Purge note: the grace generation still carries the tombstoned
-    * bytes — two back-to-back compacts give a takedown its physical
-    * purge (see [[Search.searchIndexCompact]]).
-    * The model frames (books/cents) and manifest are store-life
-    * state: compaction never retrains, so they stay unversioned. */
+  /** Compact into the NEXT GENERATION ([[Stores.StoreLayout.compact]]):
+    * one file per cell directory with outstanding tombstones applied
+    * physically. Every [[ivfPqIndexAppend]] (and each streaming
+    * micro-batch of [[ivfPqIndexIngest]]) adds a file per touched
+    * cell, so a long-lived index accretes small fragments whose
+    * per-file open/footer cost eventually dominates the pruned serve
+    * scan; compaction is the repair, and serve-equality across it is
+    * spec-pinned. Crash windows are classified and repaired by
+    * [[Stores.annIndexFsck]]. */
   private[graft] def ivfPqIndexCompact(s: SparkSession,
-      indexDir: String): Unit =
-      Stores.withStoreLock(s, indexDir, "ivfPqIndexCompact") {
-    val g = Stores.currentGen(s, indexDir)
-    val ng = g + 1
-    val kIvf = Stores.readMetaSidecar(s, s"$indexDir/manifest")
-      .map(_("kIvf").toInt)
-      .getOrElse(s.read.schema(IvfPqCentsSchema)
-        .parquet(s"$indexDir/cents").count().toInt)
-    val live = minusTombstones(s, indexDir, g,
-      s.read.schema(IvfPqEncSchema)
-        .parquet(s"$indexDir/${Stores.genName("enc", g)}"))
-    live.repartition(kIvf, col("cell"))
-      .write.mode("overwrite").partitionBy("cell")
-      .parquet(s"$indexDir/${Stores.genName("enc", ng)}")
-    Stores.writeGen(s, indexDir, ng)
-    Stores.vacuumGens(s, indexDir, AnnGenKinds, keepFrom = g)
-  }
+      indexDir: String): Unit = AnnLayout.compact(s, indexDir)
 
   /** CONTINUOUS ingestion into an on-disk index: each micro-batch of
     * `delta` (codes shape — vec_id, v, nrm, codes — new ids only) is
     * appended under the frozen-model contract ([[ivfPqIndexAppend]]),
-    * guarded by a batch-id LEDGER at `ingested/batch-<id>/`: a marker
-    * written after the append makes checkpoint replays skip
-    * already-applied batches, so a clean stop/restart never
-    * double-appends (spec-pinned). The honest crash window: dying
-    * BETWEEN the append and its marker replays that one batch
-    * at-least-once — the repair is [[ivfPqIndexCompact]] after
-    * dropping the duplicate ids via [[ivfPqIndexDelete]], or a
-    * rebuild; exactly-once would need the append and the marker in one
-    * atomic commit (an ACID table format, absent in this container by
-    * design — documented, not hidden). At 100 TB/day this is the
-    * serving-index maintenance loop: stream in, appends accrete,
-    * compaction amortizes. */
+    * guarded by the batch-id ledger ([[Stores.StoreLayout.ingest]]). A
+    * geometry mismatch fails BEFORE the stream starts, not inside the
+    * first micro-batch's error-handling path. */
   private[graft] def ivfPqIndexIngest(delta: DataFrame, indexDir: String,
       m: Int, subDim: Int, checkpointDir: String)
       : org.apache.spark.sql.streaming.StreamingQuery = {
-    // fail a geometry mismatch BEFORE the stream starts, not inside
-    // the first micro-batch's error-handling path
     checkIndexManifest(delta.sparkSession, indexDir, m, subDim)
-    delta.writeStream
-      .option("checkpointLocation", checkpointDir)
-      .outputMode("append")
-      .foreachBatch { (batch: Dataset[Row], batchId: Long) =>
-        val marker = new Path(s"$indexDir/ingested/batch-$batchId")
-        val fs = marker.getFileSystem(
-          batch.sparkSession.sparkContext.hadoopConfiguration)
-        if (!fs.exists(marker)) {
-          if (!batch.isEmpty) ivfPqIndexAppend(batch, indexDir, m, subDim)
-          // a silently-false mkdirs would leave the marker missing and
-          // the next replay would double-append — fail the batch loudly
-          require(fs.mkdirs(marker),
-            s"ivfPqIndexIngest: ledger marker create failed: $marker")
-        }
-        ()
-      }
-      .start()
+    AnnLayout.ingest(delta, indexDir, checkpointDir)(
+      ivfPqIndexAppend(_, indexDir, m, subDim))
   }
 
   /** Trained PQ codebooks — the opt-in alternative to
@@ -1401,139 +1269,39 @@ object Similarity {
     cents
   }
 
-  /** Per-cell health report of an on-disk ANN index — the ops view a
-    * 100 TB index needs BEFORE a slow query does: a skewed cell is a
-    * straggler partition every probe of it must scan, and small-file
-    * accretion under a cell directory is [[ivfPqIndexCompact]]'s
-    * trigger. Returns (cell, n_vecs, files, share_bp) ordered by cell:
-    * live vectors per cell (tombstones subtracted — counted on the
-    * `s = 0` encoding row, one per vector, instead of a DISTINCT over
-    * all m rows), parquet files under the cell's directory
-    * (driver-side listing — kIvf directories, not data), and the
-    * cell's integer basis points of all live vectors. */
+  /** Per-cell health report of an on-disk ANN index
+    * ([[Stores.StoreLayout.stats]]) — the ops view a 100 TB index needs
+    * BEFORE a slow query does: a skewed cell is a straggler partition
+    * every probe of it must scan, and small-file accretion under a
+    * cell directory is [[ivfPqIndexCompact]]'s trigger. Returns
+    * (cell, n_vecs, files, share_bp) ordered by cell: live vectors per
+    * cell, parquet files under the cell's directory, and the cell's
+    * integer basis points of all live vectors. */
   private[graft] def ivfPqIndexStats(s: SparkSession,
-      indexDir: String): DataFrame = {
-    // Hadoop FileSystem, not java.io.File: every other index op
-    // (minusTombstones, compact, manifest check) resolves the
-    // filesystem from the path, so an hdfs:// or s3a:// index dir that
-    // write/serve/append/compact support must not be the one place the
-    // OPS REPORT fails — the report exists for exactly that at-scale
-    // operator.
-    val g = Stores.currentGen(s, indexDir)
-    val encRoot = new Path(s"$indexDir/${Stores.genName("enc", g)}")
-    val fs = encRoot.getFileSystem(s.sparkContext.hadoopConfiguration)
-    require(fs.exists(encRoot) && fs.getFileStatus(encRoot).isDirectory,
-      s"ivfPqIndexStats: no encodings dataset under $indexDir — " +
-        "not an index directory (ivfPqIndexWrite creates enc/)")
-    val live = minusTombstones(s, indexDir, g,
-      s.read.schema(IvfPqEncSchema).parquet(encRoot.toString)
-        .filter(col("s") === 0))
-    val counts = live.groupBy("cell")
-      .agg(count(lit(1)).as("live"))
-    val files = fs.listStatus(encRoot)
-      .filter(st => st.isDirectory && st.getPath.getName.startsWith("cell="))
-      .map(st => (st.getPath.getName.stripPrefix("cell=").toLong,
-        fs.listStatus(st.getPath)
-          .count(f => f.getPath.getName.endsWith(".parquet"))))
-      .toSeq
-    import s.implicits._
-    val total = counts.agg(coalesce(sum(col("live")), lit(0L)).as("tot"))
-    // the directory listing is the authoritative cell set: a cell
-    // whose vectors are ALL tombstoned must still report (live 0,
-    // files > 0) — that pending-compaction state is exactly what the
-    // report exists to surface, and an inner join would hide it
-    broadcast(files.toDF("cell", "files"))
-      .join(counts, Seq("cell"), "left")
-      .crossJoin(broadcast(total))
-      .select(col("cell"),
-        coalesce(col("live"), lit(0L)).as("n_vecs"), col("files"),
-        // floor to integer basis points (SQL `/` is true division);
-        // an all-deleted index reports 0 bp, not a division by zero
-        when(col("tot") > 0,
-          floor(coalesce(col("live"), lit(0L)) * 10000L / col("tot"))
-            .cast("long")).otherwise(lit(0L)).as("share_bp"))
-      .orderBy("cell")
-  }
+      indexDir: String): DataFrame = AnnLayout.stats(s, indexDir)
 
-  /** The index MAINTENANCE POLICY — the op that composes the health
-    * report into decisions a user operating the index hits the first
-    * week (the r14 verdict's "What's missing #2"): per cell,
-    * (cell, n_vecs, files, tomb, share_bp, action) where action is
-    *
-    *  - `compact` — the cell's file count exceeds `maxFiles` (append/
-    *    ingest small-file accretion: per-file open/footer cost starts
-    *    taxing the pruned serve scan) OR its tombstoned-row share of
-    *    the cell exceeds `maxTombBp` (dead rows the ADC scan still
-    *    reads and the anti-join must subtract);
-    *  - `retrain` — the cell's LIVE share exceeds `maxShareBp` (the
-    *    mega-cell straggler: one cell holding most of the index makes
-    *    nprobe pruning meaningless — [[ivfTrainCentroids]] + a
-    *    frozen-model rebuild is the repair, which needs the corpus
-    *    codes frame and is therefore a DECISION here, not an action);
-    *  - `ok` — neither.
-    *
-    * `execute = true` additionally runs [[ivfPqIndexCompact]] when any
-    * cell decided `compact` — compaction is whole-index by
-    * construction (one rewrite repairs every fragmented cell and
-    * clears the tombstone set), so one trigger suffices. Retrain is
-    * never auto-executed: swapping the coarse model re-encodes cell
-    * assignments and is a caller-owned rebuild, not maintenance.
-    * Serve results are unchanged by an executed compaction
-    * (spec-pinned in DiskIndexSpec's maintenance leg, along with the
-    * decision table on a constructed skewed/fragmented/tombstoned
-    * index). Defaults: maxFiles 8 (a few ingest waves), maxTombBp
-    * 2000 (20% dead), maxShareBp 3×10000/kIvf (3× the balanced
-    * share, read from the manifest). */
+  /** The index MAINTENANCE POLICY ([[Stores.StoreLayout.maintain]]):
+    * per cell, (cell, n_vecs, files, tomb, share_bp, action) where
+    * action is `compact` on small-file accretion (> `maxFiles`) or a
+    * tombstoned share above `maxTombBp`; `retrain` — checked first —
+    * when the cell's LIVE share exceeds `maxShareBp` (the mega-cell
+    * straggler: one cell holding most of the index makes nprobe
+    * pruning meaningless — [[ivfTrainCentroids]] + a frozen-model
+    * rebuild is the repair, which needs the corpus codes frame and is
+    * therefore a DECISION here, never auto-executed); else `ok`.
+    * `execute = true` runs [[ivfPqIndexCompact]] when any cell decided
+    * `compact` (serve results unchanged, spec-pinned in DiskIndexSpec's
+    * maintenance leg). Defaults: maxFiles 8 (a few ingest waves),
+    * maxTombBp 2000 (20% dead), maxShareBp 3×10000/kIvf (3× the
+    * balanced share, kIvf from the manifest — no Spark job). */
   private[graft] def ivfPqIndexMaintain(s: SparkSession,
       indexDir: String, maxFiles: Int = 8, maxTombBp: Long = 2000L,
       maxShareBp: Long = -1L, execute: Boolean = false): DataFrame = {
-    require(maxFiles >= 1 && maxTombBp >= 0,
-      "ivfPqIndexMaintain: maxFiles >= 1, maxTombBp >= 0")
-    val kIvf = s.read.schema(IvfPqCentsSchema)
-      .parquet(s"$indexDir/cents").count()
     val shareCap =
       if (maxShareBp > 0) maxShareBp
-      else math.min(10000L, 3L * 10000L / math.max(kIvf, 1L))
-    // per-cell tombstoned-row counts: the stats report deliberately
-    // hides dead rows (it reports the LIVE view); the policy needs
-    // them, so re-derive from the raw scan minus the live view
-    val gM = Stores.currentGen(s, indexDir)
-    val raw = s.read.schema(IvfPqEncSchema)
-      .parquet(s"$indexDir/${Stores.genName("enc", gM)}")
-      .filter(col("s") === 0)
-    val tombP = new Path(s"$indexDir/${Stores.genName("tombstones", gM)}")
-    val tombFs = tombP.getFileSystem(s.sparkContext.hadoopConfiguration)
-    val dead =
-      if (!tombFs.exists(tombP)) raw.filter(lit(false))
-      else raw.join(
-        broadcast(s.read.schema("vec_id BIGINT").parquet(tombP.toString)),
-        Seq("vec_id"), "left_semi")
-    val tomb = dead.groupBy("cell").agg(count(lit(1)).as("tomb"))
-    val report = ivfPqIndexStats(s, indexDir)
-      .join(tomb, Seq("cell"), "left")
-      .select(col("cell"), col("n_vecs"), col("files"),
-        coalesce(col("tomb"), lit(0L)).as("tomb"), col("share_bp"))
-      .withColumn("action",
-        when(col("share_bp") > shareCap, "retrain")
-          .when(col("files") > maxFiles
-            || (col("n_vecs") + col("tomb") > 0
-              && col("tomb") * 10000L
-                 > lit(maxTombBp) * (col("n_vecs") + col("tomb"))),
-            "compact")
-          .otherwise("ok"))
-      .orderBy("cell")
-    if (execute) {
-      // the report is small (kIvf rows) and about to drive a side
-      // effect — materializing it here is the op's documented shape
-      val decided = report.collect()
-      if (decided.exists(_.getAs[String]("action") == "compact"))
-        ivfPqIndexCompact(s, indexDir)
-      import s.implicits._
-      decided.map(r => (r.getLong(0), r.getLong(1), r.getInt(2),
-          r.getLong(3), r.getLong(4), r.getString(5)))
-        .toSeq
-        .toDF("cell", "n_vecs", "files", "tomb", "share_bp", "action")
-    } else report
+      else math.min(10000L, 3L * 10000L / math.max(annKIvf(s, indexDir), 1))
+    AnnLayout.maintain(s, indexDir, maxFiles, maxTombBp, execute,
+      retrain = Some(col("share_bp") > shareCap))
   }
 
   /** Oracle CTE: embeddings as double arrays + norms. */

@@ -1,18 +1,28 @@
 package graft.operators
 
 import org.apache.hadoop.fs.{FileSystem, Path}
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-/** Cross-store coordination for the three on-disk retrieval stores
-  * (ANN `Similarity.ivfPqIndex*`, dedup `TextDedup.dedupIndex*`,
-  * search `Search.searchIndex*`) — the layer a composed serving path
-  * like [[graft.Graft.ragServeDisk]] needs once more than one store
-  * answers the same corpus (r16 verdict "what's missing" #1 and #2).
+/** The on-disk store kernel: what the four retrieval stores — ANN
+  * cells (`Similarity.ivfPqIndex*`), dedup bands
+  * (`TextDedup.dedupIndex*`), LSH audit pairs (`TextDedup.auditStore*`)
+  * and search postings (`Search.searchIndex*`) — share, plus the
+  * cross-store coordination a composed serving path like
+  * [[graft.Graft.ragServeDisk]] needs once more than one store answers
+  * the same corpus.
   *
-  * Two concerns live here because they are inherently CROSS-store:
+  *  1. '''One lifecycle over four layouts''' ([[StoreLayout]]). Each
+  *     store declares ONE layout constant next to its code — generation
+  *     kinds, datasets with their declared read schemas, the partition
+  *     column and where its count comes from, the tombstone id
+  *     columns, and each dataset's fsck duplicate check — and tombstone
+  *     subtraction, delete, compact, stats, maintain, the `ingested/`
+  *     batch ledger and fsck are written once, here, over it. Per-store
+  *     code keeps what really differs: the write/append encoding,
+  *     serving, the manifest geometry check, and a few layout hooks.
   *
-  *  1. '''Corpus-version stamps.''' Each store carries a one-line
+  *  2. '''Corpus-version stamps.''' Each store carries a one-line
   *     `corpus-version` sidecar file counting the mutations applied since
   *     its last rebuild (write ⇒ 0; every append / ingested batch /
   *     delete ⇒ +1; compaction is physical housekeeping, not a corpus
@@ -20,37 +30,32 @@ import org.apache.spark.sql.functions._
   *     pipeline therefore carry EQUAL stamps at every rest point, and
   *     a composed serve can demand alignment
   *     ([[requireAlignedVersions]]) instead of silently fusing two
-  *     different corpus snapshots — the takedown-applied-to-one-store-
-  *     but-not-the-other window that would otherwise serve a
-  *     half-deleted document's chunks. Honest limits, documented not
-  *     hidden: the stamp is a coordination GUARD, not a transaction
-  *     log — it cannot say WHICH mutations diverged, and a crash
-  *     between a mutation and its bump leaves the stamp one behind
-  *     (the repair is the same takedown/append re-run the mutation
-  *     itself needs, which restores both). A pre-stamp store (no
-  *     `corpus-version` file) reads 0, aligning with fresh rebuilds.
+  *     different corpus snapshots. Honest limits: the stamp is a
+  *     coordination GUARD, not a transaction log — it cannot say WHICH
+  *     mutations diverged, and a crash between a mutation and its bump
+  *     leaves the stamp one behind (the repair is the same
+  *     takedown/append re-run the mutation itself needs). A pre-stamp
+  *     store (no `corpus-version` file) reads 0, aligning with fresh
+  *     rebuilds.
   *
-  *  2. '''Executable crash repair''' ([[storeFsck]] and the per-store
-  *     fscks): every crash window in the three stores' lifecycle
-  *     scaladoc — torn compact scratch above the generation pointer,
+  *  3. '''Executable crash repair''' ([[storeFsck]], one
+  *     [[StoreLayout.fsck]] for every store): every crash window in the
+  *     lifecycle — torn compact scratch above the generation pointer,
   *     expired generations below the grace, the search append's
   *     orphaned-postings and stale-stats windows — is detectable from
-  *     the directory state alone, and the repairs were previously
-  *     DOCUMENTED but executed by a human reading scaladoc
-  *     mid-incident (r16 verdict missing #2). fsck reads the state,
-  *     classifies the window, and runs the documented repair;
-  *     `execute = false` classifies without touching the store.
-  *     [[replayRepair]] executes the one recovery fsck cannot (it
-  *     needs the source batch).
+  *     the directory state alone; fsck classifies the window and runs
+  *     the documented repair (`execute = false` classifies without
+  *     touching the store). [[replayRepair]] executes the one recovery
+  *     fsck cannot (it needs the source batch).
   *
-  *  3. '''The single-writer contract, made loud'''
-  *     ([[withStoreLock]]): every physical mutation in the three
-  *     store families runs under an exclusive per-store
-  *     `mutation-lock` sidecar, so a double-launched mutation fails
-  *     immediately naming the holder instead of silently interleaving
-  *     stats/version read-modify-writes or compact swaps. Composed
-  *     ops (takedownAll, appendAll, ingest, maintain) serialize
-  *     through the primitives they call; serves are lock-free reads.
+  *  4. '''The single-writer contract, made loud'''
+  *     ([[withStoreLock]]): every physical mutation of the four stores
+  *     runs under an exclusive per-store `mutation-lock` sidecar, so a
+  *     double-launched mutation fails immediately naming the holder
+  *     instead of silently interleaving stats/version
+  *     read-modify-writes or compact swaps. Composed ops (takedownAll,
+  *     appendAll, ingest, maintain) serialize through the primitives
+  *     they call; serves are lock-free reads.
   */
 object Stores {
 
@@ -452,8 +457,8 @@ object Stores {
   private val GenMarkerPat = "^gen-(\\d+)$".r
 
   /** Torn sidecar temp files a crash inside writeMetaSidecar /
-    * writeRawLong can leave — every raw-sidecar name the three store
-    * families write, with the generational stats variants. */
+    * writeRawLong can leave — every raw-sidecar name the four stores
+    * write, with the generational stats variants. */
   private val SidecarTmpPat =
     "^(corpus-version|manifest|stats(-g\\d+)?)-tmp$".r
 
@@ -508,10 +513,9 @@ object Stores {
   }
 
   /** Clear EVERY generation of `kinds`, the commit markers, and the
-    * ingest batch ledger — the rebuild guard of the three writes (a
-    * fresh store life must not inherit a prior life's generations,
-    * pointer, or applied-batch ids; one shared implementation so the
-    * three families' rebuild semantics cannot drift). */
+    * ingest batch ledger — the rebuild guard of every write
+    * ([[StoreLayout.rebuild]]: a fresh store life must not inherit a
+    * prior life's generations, pointer, or applied-batch ids). */
   private[graft] def clearStoreLife(s: SparkSession, dir: String,
       kinds: Seq[String]): Unit = {
     val root = new Path(dir)
@@ -794,20 +798,31 @@ object Stores {
   }
 
   /** A store a [[takedown]] must reach. `dir` is the store directory;
-    * the subtype says which lifecycle family owns it. */
-  sealed trait StoreRef { def dir: String }
+    * the subtype says which [[StoreLayout]] owns it. */
+  sealed trait StoreRef {
+    def dir: String
+    private[graft] def layout: StoreLayout
+  }
   /** A doc-level [[Search.searchIndexWrite]] store. */
-  final case class SearchStore(dir: String) extends StoreRef
+  final case class SearchStore(dir: String) extends StoreRef {
+    private[graft] def layout: StoreLayout = Search.SearchLayout
+  }
   /** A CHUNK-level search store whose ids are packed
     * doc_id·`chunkIdBase`+chunk_idx (q186's layout): a takedown
     * resolves the doc's live chunk ids from the docs sidecar and
     * tombstones them all. */
   final case class ChunkSearchStore(dir: String,
-      chunkIdBase: Long = 1000000L) extends StoreRef
+      chunkIdBase: Long = 1000000L) extends StoreRef {
+    private[graft] def layout: StoreLayout = Search.SearchLayout
+  }
   /** A [[TextDedup.dedupIndexWrite]] signature store. */
-  final case class DedupStore(dir: String) extends StoreRef
+  final case class DedupStore(dir: String) extends StoreRef {
+    private[graft] def layout: StoreLayout = TextDedup.DedupLayout
+  }
   /** A [[Similarity.ivfPqIndexWrite]] ANN store (vec_id = doc_id). */
-  final case class AnnStore(dir: String) extends StoreRef
+  final case class AnnStore(dir: String) extends StoreRef {
+    private[graft] def layout: StoreLayout = Similarity.AnnLayout
+  }
 
   /** Apply ONE document's takedown across every store that serves the
     * corpus, in one call — the cross-store twin of the per-store
@@ -1001,45 +1016,62 @@ object Stores {
   /** One store's FRAME-shaped doc-level delete — [[takedownAll]]'s
     * DataFrame dispatch. `ids` carries one `doc_id` long column,
     * ALREADY validated and pinned by the caller (so the per-store
-    * deletes take the `…Pinned` entry points — the public frame
+    * deletes take [[StoreLayout.deletePinned]] — the public frame
     * deletes' own guard+pin would re-validate and re-materialize the
     * batch once per store). `bounds` is the caller's pin-time
     * (min, max), forwarded so the chunk family's packed-range plan
     * needs no bounds job of its own. */
   private def deleteOneFrame(s: SparkSession, ref: StoreRef,
       ids: DataFrame, bounds: (Long, Long)): Unit = ref match {
-    case SearchStore(dir) =>
-      Search.searchIndexDeletePinned(s, dir, ids)
-    case DedupStore(dir) =>
-      TextDedup.dedupIndexDeletePinned(s, dir, ids)
-    case AnnStore(dir) =>
-      Similarity.ivfPqIndexDeletePinned(s, dir,
-        ids.select(col("doc_id").as("vec_id")))
     case ChunkSearchStore(dir, base) =>
       require(base > 0, s"takedown: chunkIdBase $base must be positive")
-      Search.searchIndexDeletePinned(s, dir,
+      ref.layout.deletePinned(s, dir,
         chunkIdsFramePlan(s, dir, base, ids, Some(bounds)))
+    case _ => ref.layout.deletePinned(s, ref.dir,
+      ids.select(col("doc_id").as(ref.layout.tombIdCol)))
   }
 
-  /** One store's doc-level delete — the [[takedownAll]] dispatch, also
-    * the first repair step of [[replayRepair]]. Deleting ids a store
-    * never held is a no-op in every family. */
+  /** One store's doc-level delete — the [[takedownAll]] dispatch.
+    * Deleting ids a store never held is a no-op in every family. */
   private def deleteOne(s: SparkSession, ref: StoreRef,
       docIds: Seq[Long]): Unit = ref match {
-    case SearchStore(dir) =>
-      Search.searchIndexDelete(s, dir, docIds)
-    case DedupStore(dir) =>
-      TextDedup.dedupIndexDelete(s, dir, docIds)
-    case AnnStore(dir) =>
-      Similarity.ivfPqIndexDelete(s, dir, docIds)
     case ChunkSearchStore(dir, base) =>
       require(base > 0, s"takedown: chunkIdBase $base must be positive")
       docIds.foreach(id => require(id >= 0 && id < Long.MaxValue / base,
         s"takedown: doc_id $id not packable under chunkIdBase $base"))
       val ids = chunkIdsPlan(s, dir, base, docIds)
         .collect().map(_.getLong(0)).toSeq
-      if (ids.nonEmpty) Search.searchIndexDelete(s, dir, ids)
+      if (ids.nonEmpty) ref.layout.delete(s, dir, ids)
+    case _ => ref.layout.delete(s, ref.dir, docIds)
   }
+
+  /** Whether `dir`'s `ingested/` batch ledger holds `marker`. */
+  private def inLedger(s: SparkSession, dir: String,
+      marker: String): Boolean = {
+    val p = new Path(s"$dir/ingested/$marker")
+    fsOf(s, p).exists(p)
+  }
+
+  /** THE batch-ledger rule shared by streaming ingest
+    * ([[StoreLayout.ingest]]'s `batch-<n>` markers), [[appendAll]] and
+    * [[replayRepair]] (`named-<id>` markers — the namespaces cannot
+    * collide even on a store running both): skip `body` when the
+    * store's ledger already holds `marker`; otherwise run it, then
+    * create the marker. A silently-false mkdirs would leave the marker
+    * missing and the next replay would double-append — so it fails
+    * loudly, naming `op`. Rebuilds clear the whole `ingested/` dir, so
+    * batch ids are scoped to a store life. The honest window: a crash
+    * BETWEEN the body and its marker replays that batch at-least-once
+    * (the repair is [[replayRepair]]; exactly-once would need the
+    * append and the marker in one atomic commit — an ACID table
+    * format, absent by design). */
+  private[operators] def ledgered(s: SparkSession, dir: String,
+      marker: String, op: String)(body: => Unit): Unit =
+    if (!inLedger(s, dir, marker)) {
+      body
+      val p = new Path(s"$dir/ingested/$marker")
+      require(fsOf(s, p).mkdirs(p), s"$op: ledger marker create failed: $p")
+    }
 
   /** Coordinated IDEMPOTENT append — the mutation-side twin of
     * [[takedownAll]], closing the remaining non-convergent cross-store
@@ -1047,21 +1079,16 @@ object Stores {
     * re-runnable, but a bare re-run would DOUBLE-append the delta into
     * every store the first run completed (the duplicate-id state fsck
     * can only report, never repair). Each store is therefore guarded
-    * by the same batch-id ledger streaming ingest uses
-    * (`ingested/named-<id>` markers — the `named-` namespace cannot
-    * collide with streaming's numeric `batch-<n>` markers even on a
-    * store running both; rebuilds clear the whole `ingested/` dir, so
-    * batch ids are scoped to a store life like ingest's): the re-run
-    * SKIPS stores whose marker exists, appends the rest, and SETS
-    * every store to the max+1 target stamp — converging exactly like
-    * a re-run takedown. Re-running an already-complete batch is a
+    * by the batch-id ledger ([[ledgered]], `named-<id>` markers): the
+    * re-run SKIPS stores whose marker exists, appends the rest, and
+    * SETS every store to the max+1 target stamp — converging exactly
+    * like a re-run takedown. Re-running an already-complete batch is a
     * stamp-only no-op that keeps alignment.
     *
     * Honest window, same as streaming ingest's: a crash BETWEEN a
     * store's append and its marker replays that store's append
     * at-least-once — the repair is [[replayRepair]] with the same
-    * batch (EXECUTABLE since r17; [[storeFsck]] reports the dup-id
-    * state and names it).
+    * batch ([[storeFsck]] reports the dup-id state and names it).
     *
     * `docs` must carry `idCol`/`textCol`; an [[AnnStore]] in the list
     * additionally needs `vecCol` (the embedding array) and reads its
@@ -1098,9 +1125,7 @@ object Stores {
       // `pinned` is a lazy val, and two threads forcing it at once
       // would race the checkpoint (each store's append must read ONE
       // materialized delta, not two competing materializations)
-      if (stores.exists(ref =>
-          !fsOf(s, new Path(s"${ref.dir}/ingested/named-$batchId"))
-            .exists(new Path(s"${ref.dir}/ingested/named-$batchId"))))
+      if (stores.exists(ref => !inLedger(s, ref.dir, s"named-$batchId")))
         pinned
       // per-store (append → marker → stamp) chains run CONCURRENTLY
       // across stores (r22, [[inParallel]] rationale): the ledger
@@ -1110,15 +1135,8 @@ object Stores {
       // arbitrary SUBSET of stores completed instead of a prefix:
       // the same loud divergence, the same marker-skipping re-run.
       forAllStores(s, stores) { ref =>
-        val marker = new Path(s"${ref.dir}/ingested/named-$batchId")
-        val fs = fsOf(s, marker)
-        if (!fs.exists(marker)) {
-          appendOne(s, ref, pinned, idCol, textCol, vecCol)
-          // a silently-false mkdirs would leave the marker missing and
-          // a re-run would double-append this store — fail loudly
-          require(fs.mkdirs(marker),
-            s"appendAll: ledger marker create failed: $marker")
-        }
+        ledgered(s, ref.dir, s"named-$batchId", "appendAll")(
+          appendOne(s, ref, pinned, idCol, textCol, vecCol))
         // convergent stamp, same rule as takedownAll: SET to the
         // pre-computed target so a crashed run's re-run aligns the list
         writeStoreVersion(s, ref.dir, target)
@@ -1166,17 +1184,6 @@ object Stores {
         dir, g("m").toInt, g("subDim").toInt)
   }
 
-  /** One store's full compact — the repair step that physically
-    * removes tombstoned rows, duplicated append rows' tombstone-marked
-    * copies, and (search family) orphaned postings. */
-  private def compactOne(s: SparkSession, ref: StoreRef): Unit =
-    ref match {
-      case SearchStore(dir) => Search.searchIndexCompact(s, dir)
-      case ChunkSearchStore(dir, _) => Search.searchIndexCompact(s, dir)
-      case DedupStore(dir) => TextDedup.dedupIndexCompact(s, dir)
-      case AnnStore(dir) => Similarity.ivfPqIndexCompact(s, dir)
-    }
-
   /** PHYSICAL purge — the executable form of the compacts' purge
     * note: run the store's compact TWICE, so the first folds the
     * outstanding tombstones into a fresh generation and the second
@@ -1191,7 +1198,7 @@ object Stores {
   private[graft] def purgeAll(s: SparkSession,
       stores: Seq[StoreRef]): Unit = {
     require(stores.nonEmpty, "purgeAll: no stores given")
-    stores.foreach { ref => compactOne(s, ref); compactOne(s, ref) }
+    for (ref <- stores; _ <- 1 to 2) ref.layout.compact(s, ref.dir)
   }
 
   /** EXECUTABLE repair for the ONE residual crash window the
@@ -1248,14 +1255,10 @@ object Stores {
     try {
       val target = stores.map(r => storeVersion(s, r.dir)).max + 1
       stores.foreach { ref =>
-        val marker = new Path(s"${ref.dir}/ingested/named-$batchId")
-        val fs = fsOf(s, marker)
-        if (!fs.exists(marker)) {
+        ledgered(s, ref.dir, s"named-$batchId", "replayRepair") {
           deleteOneFrame(s, ref, batchIds, batchBounds)
-          compactOne(s, ref)
+          ref.layout.compact(s, ref.dir)
           appendOne(s, ref, pinned, idCol, textCol, vecCol)
-          require(fs.mkdirs(marker),
-            s"replayRepair: ledger marker create failed: $marker")
         }
         writeStoreVersion(s, ref.dir, target)
       }
@@ -1344,204 +1347,413 @@ object Stores {
       +: rows).toDF("check", "state", "action")
   }
 
-  /** fsck for a [[Search.searchIndexWrite]] store: classifies and
-    * (with `execute`) repairs every documented crash window —
-    * generation hygiene (torn compact scratch above the pointer,
-    * expired generations below the grace), the append windows (stats
-    * behind docs/; orphaned postings whose doc never landed), and
-    * reports duplicate doc ids (an ingest replay — repair needs the
-    * source batch: delete the ids and re-append, or rebuild; fsck
-    * cannot conjure the lost rows, so this row is report-only).
-    * Returns (check, state, action); `execute = false` classifies
-    * without touching the store. */
+  /** fsck for a [[Search.searchIndexWrite]] store ([[StoreLayout.fsck]]). */
   private[graft] def searchIndexFsck(s: SparkSession, indexDir: String,
-      execute: Boolean = true): DataFrame = {
-    val fs = fsOf(s, new Path(indexDir))
-    val rows = scala.collection.mutable.ArrayBuffer[(String, String, String)]()
-    rows ++= fsckMutationLock(s, indexDir, execute)
-    rows ++= fsckGenerations(s, indexDir, Search.SearchGenKinds, execute)
-    val g = currentGen(s, indexDir)
-    def at(kind: String) = s"$indexDir/${genName(kind, g)}"
-    if (!fs.exists(new Path(at("postings")))
-        || !fs.exists(new Path(at("docs")))) {
-      // unreachable through any graft crash window (the pointer flip
-      // only publishes fully-written generations) — external damage
-      rows += (("datasets", s"current generation g$g incomplete",
-        "unrecoverable without a rebuild"))
-      return report(s, indexDir, rows.toSeq)
-    }
-    val docs = s.read.schema("doc_id BIGINT, dl INT")
-      .parquet(at("docs"))
-    // stats ≡ agg(docs/) — the append's crash-after-docs window
-    val agg = docs.agg(count(lit(1)).cast("long"),
-      coalesce(sum(col("dl").cast("long")), lit(0L))).head()
-    val stale = readMetaSidecar(s, at("stats")) match {
-      case None => true
-      case Some(st) => st("n_docs").toLong != agg.getLong(0) ||
-        st("sum_dl").toLong != agg.getLong(1)
-    }
-    if (stale) {
-      if (execute)
-        Search.writeSearchStats(s, indexDir, g,
-          agg.getLong(0), agg.getLong(1))
-      rows += (("stats", "stale (≠ agg over docs/)",
-        if (execute) "re-derived from docs/" else "would re-derive"))
-    } else rows += (("stats", "consistent", "none"))
-    // orphaned postings — the append's crash-before-docs window
-    val orphans = s.read
-      .schema("doc_id BIGINT, term STRING, tf INT, bkt INT")
-      .parquet(at("postings"))
-      .join(docs.select("doc_id"), Seq("doc_id"), "left_anti")
-      .count()
-    val compacted = orphans > 0 && execute
-    if (orphans > 0) {
-      if (execute) Search.searchIndexCompact(s, indexDir)
-      rows += (("orphan-postings", s"$orphans rows (doc never landed)",
-        if (execute) "compacted (postings ⊆ docs restored)"
-        else "would compact"))
-    } else rows += (("orphan-postings", "none", "none"))
-    // duplicate ids — ingest at-least-once replay; needs the source.
-    // Re-resolve after a compact: the repair above flipped the store
-    // to a NEW generation, so the pre-compact frame reads retired data
-    val docsNow = if (!compacted) docs
-      else s.read.schema("doc_id BIGINT, dl INT").parquet(
-        s"$indexDir/${genName("docs", currentGen(s, indexDir))}")
-    val dups = docsNow.groupBy("doc_id").count()
-      .filter(col("count") > 1).count()
-    rows += (("dup-ids",
-      if (dups == 0) "none" else s"$dups ids appended more than once",
-      if (dups == 0) "none"
-      else "report-only: re-run the batch through Stores.replayRepair " +
-        "(delete + compact + re-append, given the source batch), or rebuild"))
-    report(s, indexDir, rows.toSeq)
-  }
+      execute: Boolean = true): DataFrame =
+    Search.SearchLayout.fsck(s, indexDir, execute)
 
-  /** fsck for a [[TextDedup.dedupIndexWrite]] store: generation
-    * hygiene plus a report-only duplicate-(doc, band) check (ingest
-    * replay — repair needs the source batch). */
+  /** fsck for a [[TextDedup.dedupIndexWrite]] store. */
   private[graft] def dedupIndexFsck(s: SparkSession, indexDir: String,
-      execute: Boolean = true): DataFrame = {
-    val fs = fsOf(s, new Path(indexDir))
-    val rows = scala.collection.mutable.ArrayBuffer[(String, String, String)]()
-    rows ++= fsckMutationLock(s, indexDir, execute)
-    rows ++= fsckGenerations(s, indexDir, TextDedup.DedupGenKinds, execute)
-    val g = currentGen(s, indexDir)
-    val bands = s"$indexDir/${genName("bands", g)}"
-    if (!fs.exists(new Path(bands))) {
-      rows += (("datasets", s"current generation g$g incomplete",
-        "unrecoverable without a rebuild"))
-      return report(s, indexDir, rows.toSeq)
-    }
-    val dups = s.read.schema("doc_id BIGINT, bv STRING, band INT")
-      .parquet(bands)
-      .groupBy("doc_id", "band").count()
-      .filter(col("count") > 1)
-      .select("doc_id").distinct().count()
-    rows += (("dup-ids",
-      if (dups == 0) "none" else s"$dups ids appended more than once",
-      if (dups == 0) "none"
-      else "report-only: re-run the batch through Stores.replayRepair " +
-        "(delete + compact + re-append, given the source batch), or rebuild"))
-    report(s, indexDir, rows.toSeq)
-  }
+      execute: Boolean = true): DataFrame =
+    TextDedup.DedupLayout.fsck(s, indexDir, execute)
 
-  /** fsck for a [[Similarity.ivfPqIndexWrite]] store: generation
-    * hygiene plus a report-only duplicate-(vec, s) check (ingest
-    * replay — repair needs the source vectors). */
+  /** fsck for a [[Similarity.ivfPqIndexWrite]] store. */
   private[graft] def annIndexFsck(s: SparkSession, indexDir: String,
-      execute: Boolean = true): DataFrame = {
-    val fs = fsOf(s, new Path(indexDir))
-    val rows = scala.collection.mutable.ArrayBuffer[(String, String, String)]()
-    rows ++= fsckMutationLock(s, indexDir, execute)
-    rows ++= fsckGenerations(s, indexDir, Similarity.AnnGenKinds, execute)
-    val g = currentGen(s, indexDir)
-    val enc = s"$indexDir/${genName("enc", g)}"
-    if (!fs.exists(new Path(enc))) {
-      rows += (("datasets", s"current generation g$g incomplete",
-        "unrecoverable without a rebuild"))
-      return report(s, indexDir, rows.toSeq)
-    }
-    val dups = s.read
-      .schema("vec_id BIGINT, s INT, code BIGINT, cell BIGINT")
-      .parquet(enc)
-      .groupBy("vec_id", "s").count()
-      .filter(col("count") > 1)
-      .select("vec_id").distinct().count()
-    rows += (("dup-ids",
-      if (dups == 0) "none" else s"$dups ids appended more than once",
-      if (dups == 0) "none"
-      else "report-only: re-run the batch through Stores.replayRepair " +
-        "(delete + compact + re-append, given the source batch), or rebuild"))
-    report(s, indexDir, rows.toSeq)
-  }
-
-  /** fsck for a [[TextDedup.auditStoreWrite]] pair store: crashed-
-    * mutation lock, generation hygiene, and a report-only
-    * duplicate-pair check (an appended delta replayed twice — repair
-    * needs the source delta, so rebuild from the pipeline's own pair
-    * set or delete + compact the affected docs). */
-  private[graft] def auditStoreFsck(s: SparkSession, indexDir: String,
-      execute: Boolean = true): DataFrame = {
-    val fs = fsOf(s, new Path(indexDir))
-    val rows = scala.collection.mutable.ArrayBuffer[(String, String, String)]()
-    rows ++= fsckMutationLock(s, indexDir, execute)
-    rows ++= fsckGenerations(s, indexDir, TextDedup.AuditGenKinds, execute)
-    val g = currentGen(s, indexDir)
-    val pairs = s"$indexDir/${genName("pairs", g)}"
-    val cand = s"$indexDir/${genName("cand", g)}"
-    // BOTH datasets must exist at the current generation: a crash
-    // inside auditStoreWrite's (concurrent since r22) dataset writes
-    // can leave either half missing — before the r20 advice fix this
-    // reported healthy while residentAuditCands threw. Honest scope
-    // (r21 advice): this existence check covers the INITIAL write
-    // only — an auditStoreAppend crash between its two appends into
-    // an EXISTING generation leaves both dirs present with the cand
-    // delta lost, a window fsck cannot see without per-batch delta
-    // markers (deferred durability work; the dup checks below report
-    // REPLAYED deltas, not lost ones). The repair is the same either
-    // way: rebuild from the pipeline's own sets.
-    if (!fs.exists(new Path(pairs)) || !fs.exists(new Path(cand))) {
-      rows += (("datasets", s"current generation g$g incomplete",
-        "unrecoverable without a rebuild"))
-      return report(s, indexDir, rows.toSeq)
-    }
-    // one report-only replay check per dataset (a replayed delta
-    // double-counts): duplicate candidates skew q188's
-    // n_cand/precision exactly the way duplicate pairs skew recall.
-    // Schemas come from TextDedup's declared-read constants so a
-    // store schema change cannot silently diverge from this read.
-    def dupCheck(path: String, schema: String, label: String,
-        noun: String, rebuildFrom: String): (String, String, String) = {
-      val n = s.read.schema(schema).parquet(path)
-        .groupBy("doc_i", "doc_j").count()
-        .filter(col("count") > 1).count()
-      ((label,
-        if (n == 0) "none" else s"$n $noun appended more than once",
-        if (n == 0) "none"
-        else s"report-only: rebuild from the pipeline's $rebuildFrom " +
-          "(auditStoreWrite), or auditStoreDelete the affected docs " +
-          "and compact"))
-    }
-    rows += dupCheck(pairs, TextDedup.AuditPairSchema, "dup-pairs",
-      "pairs", "verified pair set")
-    rows += dupCheck(cand, TextDedup.AuditCandSchema, "dup-cands",
-      "candidates", "candidate set")
-    report(s, indexDir, rows.toSeq)
-  }
+      execute: Boolean = true): DataFrame =
+    Similarity.AnnLayout.fsck(s, indexDir, execute)
 
   /** Auto-detecting fsck: dispatch on the store's own layout (which
     * main dataset — at any generation — exists), so an operator can
     * point fsck at ANY graft store directory without knowing which
     * family wrote it. */
   private[graft] def storeFsck(s: SparkSession, dir: String,
-      execute: Boolean = true): DataFrame = {
-    def anyOf(name: String): Boolean = gensOf(s, dir, name).nonEmpty
-    if (anyOf("postings")) searchIndexFsck(s, dir, execute)
-    else if (anyOf("bands")) dedupIndexFsck(s, dir, execute)
-    else if (anyOf("enc")) annIndexFsck(s, dir, execute)
-    else if (anyOf("pairs")) auditStoreFsck(s, dir, execute)
-    else throw new IllegalArgumentException(
-      s"storeFsck: $dir is not a graft store directory (no postings/, " +
-        "bands/, enc/ or pairs/ dataset in any state)")
+      execute: Boolean = true): DataFrame =
+    Seq(Search.SearchLayout, TextDedup.DedupLayout, Similarity.AnnLayout,
+        TextDedup.AuditLayout)
+      .find(l => gensOf(s, dir, l.datasets.head.kind).nonEmpty)
+      .getOrElse(throw new IllegalArgumentException(
+        s"storeFsck: $dir is not a graft store directory (no postings/, " +
+          "bands/, enc/ or pairs/ dataset in any state)"))
+      .fsck(s, dir, execute)
+
+  // ───────────────── one lifecycle over four layouts ─────────────────
+
+  /** The report-only repair of a replayed doc batch — the fsck
+    * duplicate-row hint of every doc store. */
+  private final val ReplayRepairHint =
+    "report-only: re-run the batch through Stores.replayRepair " +
+      "(delete + compact + re-append, given the source batch), or rebuild"
+
+  /** One dataset of a [[StoreLayout]]: its per-generation directory
+    * `kind` and the DECLARED schema every lifecycle read uses (no
+    * inference job per read, and a partition key keeps its type at any
+    * corpus size). A non-empty `dupKey` makes fsck report rows sharing
+    * it — an appended batch replayed twice — as row `dupLabel`,
+    * counting the distinct tombstone ids among the key's columns (the
+    * whole key when it is all ids), with the report-only repair hint
+    * `dupRepair`: fsck has no source rows to rebuild from. */
+  private[graft] final case class StoreDataset(kind: String,
+      schema: String, dupKey: Seq[String] = Nil,
+      dupLabel: String = "dup-ids", dupNoun: String = "ids",
+      dupRepair: String = ReplayRepairHint)
+
+  /** A store's on-disk LAYOUT, declared once as a constant next to the
+    * store (`Similarity.AnnLayout`, `TextDedup.DedupLayout`,
+    * `TextDedup.AuditLayout`, `Search.SearchLayout`), and the ONE
+    * lifecycle written over it: tombstone subtraction ([[minusTombs]]),
+    * [[delete]], [[compact]], [[stats]], [[maintain]], the streaming
+    * [[ingest]] ledger and [[fsck]], plus the [[rebuild]]/[[append]]
+    * frames the per-store write encodings run inside. What a store
+    * needs beyond the descriptor is a handful of hooks: its partition
+    * count, and optionally its tombstone rows, compact rewrite, stats
+    * shape and extra fsck checks.
+    *
+    * Every mutation runs under [[withStoreLock]] as
+    * `<op>Write`/`Append`/`Delete`/`Compact`, and every per-generation
+    * artifact follows the generational contract of [[currentGen]].
+    *
+    * @param op       the op-name prefix (`ivfPqIndex`, `dedupIndex`,
+    *                 `auditStore`, `searchIndex`)
+    * @param datasets the per-generation datasets; the head is the main
+    *                 one (stats, maintain, [[storeFsck]]'s dispatch)
+    * @param partCol  the partition-directory column
+    * @param tombCols the row columns a tombstoned id (the first field of
+    *                 `tombSchema`) removes — a row goes when ANY is
+    * @param sidecarKinds per-generation sidecar files (search's stats);
+    *                 `statsCount`, `mainNoun`/`dirNoun` and
+    *                 `maintainExtra` name the stats column, error text
+    *                 and extra maintain columns */
+  private[graft] abstract class StoreLayout(val op: String,
+      val datasets: Seq[StoreDataset], val partCol: String,
+      val tombSchema: String, val tombCols: Seq[String],
+      sidecarKinds: Seq[String] = Nil, statsCount: String = "",
+      mainNoun: String = "", dirNoun: String = "a store",
+      maintainExtra: Seq[String] = Nil) {
+
+    /** Every per-generation artifact kind, in the order fsck reports
+      * them: datasets, generational sidecars, then the tombstone set a
+      * compact folds in. Frozen store-life state (manifest, model
+      * frames, the ingest ledger, corpus-version) is never versioned. */
+    val genKinds: Seq[String] =
+      datasets.map(_.kind) ++ sidecarKinds :+ "tombstones"
+
+    /** The tombstoned id column (the tombstone schema's first field). */
+    val tombIdCol: String =
+      org.apache.spark.sql.types.StructType.fromDDL(tombSchema).head.name
+
+    private def main: StoreDataset = datasets.head
+
+    /** HOOK: the partition count of the partitioned datasets. */
+    def partitions(s: SparkSession, dir: String): Int
+
+    def path(dir: String, kind: String, g: Long): String =
+      s"$dir/${genName(kind, g)}"
+
+    /** Dataset `kind` at generation `g`, through its declared schema. */
+    def read(s: SparkSession, dir: String, kind: String,
+        g: Long): DataFrame =
+      s.read.schema(datasets.find(_.kind == kind).get.schema)
+        .parquet(path(dir, kind, g))
+
+    /** Generation `g`'s tombstone set through [[tombSchema]]; None when
+      * no delete landed since the generation was written. Tombstones
+      * are GENERATIONAL: a compact folds g's set into g+1's datasets,
+      * and the old set stays with the grace generation for serves
+      * pinned to it. */
+    def tombstones(s: SparkSession, dir: String,
+        g: Long): Option[DataFrame] = {
+      val p = new Path(path(dir, "tombstones", g))
+      if (!fsOf(s, p).exists(p)) None
+      else Some(s.read.schema(tombSchema).parquet(p.toString))
+    }
+
+    /** `rows` minus generation `g`'s tombstones: one anti-join per
+      * tombstone column, through [[scaleHint]] — the set is ids-only
+      * and small between compacts by contract, so a serve keeps its
+      * partition-pruned scan shape and pays a broadcast hash lookup per
+      * row, never a shuffle. No tombstone set (the common case) returns
+      * `rows` untouched: zero cost until the first delete. */
+    def minusTombs(s: SparkSession, dir: String, g: Long,
+        rows: DataFrame): DataFrame =
+      tombstones(s, dir, g).fold(rows)(t => tombCols.foldLeft(rows)(
+        (df, c) => df.join(scaleHint(t.select(col(tombIdCol).as(c))),
+          Seq(c), "left_anti")))
+
+    /** The live rows of dataset `kind` at generation `g`. */
+    def live(s: SparkSession, dir: String, kind: String,
+        g: Long): DataFrame =
+      minusTombs(s, dir, g, read(s, dir, kind, g))
+
+    /** Write `rows` one file per partition directory — a partition
+      * count the write's own geometry fixes, so appends accrete at most
+      * one file per touched partition between compacts instead of
+      * (shuffle.partitions × partitions) shards. */
+    def writeParts(rows: DataFrame, n: Int, path: String,
+        mode: String): Unit =
+      rows.repartition(n, col(partCol))
+        .write.mode(mode).partitionBy(partCol).parquet(path)
+
+    /** A (re)write: under the lock, clear any prior store life under
+      * `dir` ([[clearStoreLife]] — stale tombstones would mask rewritten
+      * ids, a stale ledger would skip a fresh stream's first batches,
+      * stale generations would shadow generation 0), run `body`, and
+      * start a new coordination epoch at corpus-version 0. */
+    def rebuild(s: SparkSession, dir: String)(body: => Unit): Unit =
+      withStoreLock(s, dir, s"${op}Write") {
+        clearStoreLife(s, dir, genKinds)
+        body
+        writeStoreVersion(s, dir, 0L)
+      }
+
+    /** An append: under the lock, run `body` against the current
+      * generation, then bump the corpus version once. */
+    def append(s: SparkSession, dir: String)(body: Long => Unit): Unit =
+      withStoreLock(s, dir, s"${op}Append") {
+        body(currentGen(s, dir))
+        bumpStoreVersion(s, dir)
+      }
+
+    /** LOGICAL delete of an operator-sized id list: append the ids to
+      * the current generation's tombstone set. Serves subtract them
+      * immediately ([[minusTombs]]) at zero rewrite cost and the next
+      * [[compact]] makes the delete physical — the delete contract
+      * every append-only columnar store uses at scale. Deleting an id
+      * not in the store is a harmless no-op; an id later re-appended
+      * would be masked too (ids are never reused by contract). */
+    def delete(s: SparkSession, dir: String, ids: Seq[Long]): Unit = {
+      require(ids.nonEmpty, s"${op}Delete: ids must be non-empty")
+      import s.implicits._
+      deleteRows(s, dir, ids.toDF(tombIdCol), operatorSized = true)
+    }
+
+    /** FRAME-shaped [[delete]] (the no-collect takedown path): `ids`
+      * carries one long-castable [[tombIdCol]] column that never
+      * crosses the driver. The caller's frame is validated
+      * ([[requireLongIds]]) and pinned, so a non-deterministic ids
+      * plan cannot tombstone one id set and report another; the pin is
+      * released once the write has materialized. An empty frame
+      * appends zero rows — a no-op for every serve. */
+    def delete(s: SparkSession, dir: String, ids: DataFrame): Unit = {
+      val pinned = requireLongIds(ids, tombIdCol, s"${op}Delete")
+        .localCheckpoint()
+      try deletePinned(s, dir, pinned)
+      finally
+        org.apache.spark.sql.graft.Bridge.unpersistLocalCheckpoint(pinned)
+    }
+
+    /** [[delete]] for an ids frame the caller already validated and
+      * pinned ([[takedownAll]]'s dispatch): skips the guard+checkpoint
+      * the public form pays once per store. */
+    def deletePinned(s: SparkSession, dir: String, ids: DataFrame): Unit =
+      deleteRows(s, dir, ids, operatorSized = false)
+
+    private def deleteRows(s: SparkSession, dir: String, ids: DataFrame,
+        operatorSized: Boolean): Unit =
+      withStoreLock(s, dir, s"${op}Delete") {
+        val g = currentGen(s, dir)
+        tombRows(s, dir, g, ids, operatorSized)
+          .write.mode("append").parquet(path(dir, "tombstones", g))
+        bumpStoreVersion(s, dir)
+      }
+
+    /** HOOK: the tombstone rows a delete appends — by default the ids
+      * themselves, funnelled to one file: an operator-sized list
+      * collapses onto one task, a frame repartitions AFTER whatever
+      * plan computes its ids. */
+    protected def tombRows(s: SparkSession, dir: String, g: Long,
+        ids: DataFrame, operatorSized: Boolean): DataFrame =
+      if (operatorSized) ids.coalesce(1) else ids.repartition(1)
+
+    /** Compact into the NEXT GENERATION: rewrite every dataset's live
+      * rows (tombstones applied physically) one file per partition
+      * directory at fresh `<kind>-g<N+1>` paths, then COMMIT with the
+      * atomic generation flip — datasets, generational sidecars and the
+      * now-empty tombstone set change together — and vacuum the
+      * generations before the grace. Append/ingest small-file accretion
+      * is what it repairs; serve-equality across it is spec-pinned per
+      * store. */
+    def compact(s: SparkSession, dir: String): Unit =
+      withStoreLock(s, dir, s"${op}Compact") {
+        val n = partitions(s, dir)
+        val g = currentGen(s, dir)
+        compactInto(s, dir, g + 1, n, live(s, dir, _, g))
+        // THE commit point: generation g+1 becomes current atomically
+        writeGen(s, dir, g + 1)
+        vacuumGens(s, dir, genKinds, keepFrom = g)
+      }
+
+    /** HOOK: write generation `ng` from the pre-compact live rows. */
+    protected def compactInto(s: SparkSession, dir: String, ng: Long,
+        n: Int, live: String => DataFrame): Unit =
+      datasets.foreach(d =>
+        writeParts(live(d.kind), n, path(dir, d.kind, ng), "overwrite"))
+
+    /** Per-partition health report: (partCol, statsCount, files) plus
+      * the layout's extra columns, ordered by partition — live rows of
+      * the main dataset (tombstones subtracted) and parquet files per
+      * partition directory (the compaction trigger). The Hadoop FS
+      * listing is the authoritative partition set, so an
+      * all-tombstoned partition still reports (0 live, files > 0) —
+      * the pending-compaction state the report exists to surface — and
+      * the report works wherever the store does. */
+    def stats(s: SparkSession, dir: String): DataFrame = {
+      val g = currentGen(s, dir)
+      val root = new Path(path(dir, main.kind, g))
+      val fs = fsOf(s, root)
+      require(fs.exists(root) && fs.getFileStatus(root).isDirectory,
+        s"${op}Stats: no $mainNoun dataset under $dir — not $dirNoun " +
+          s"directory (${op}Write creates ${main.kind}/)")
+      val counts = minusTombs(s, dir, g, statsRows(read(s, dir, main.kind, g)))
+        .groupBy(partCol).agg(count(lit(1)).as("rows"), statsAggs: _*)
+      val files = partitionDirs(s, dir, g).map { case (v, p) =>
+        (v, fs.listStatus(p).count(_.getPath.getName.endsWith(".parquet")))
+      }
+      import s.implicits._
+      val partType = org.apache.spark.sql.types.StructType
+        .fromDDL(main.schema)(partCol).dataType
+      statsShape(broadcast(files.toDF(partCol, "files")
+          .select(col(partCol).cast(partType), col("files")))
+        .join(counts, Seq(partCol), "left"), counts)
+        .orderBy(partCol)
+    }
+
+    /** The main dataset's partition directories at generation `g` as
+      * (partition value, directory) — a driver-side listing, no Spark
+      * job, and the authoritative partition set. */
+    def partitionDirs(s: SparkSession, dir: String,
+        g: Long): Seq[(Long, Path)] = {
+      val root = new Path(path(dir, main.kind, g))
+      fsOf(s, root).listStatus(root).toSeq
+        .filter(st => st.isDirectory
+          && st.getPath.getName.startsWith(s"$partCol="))
+        .map(st => (st.getPath.getName.stripPrefix(s"$partCol=").toLong,
+          st.getPath))
+    }
+
+    /** The live-row count of a stats partition (0 when all dead). */
+    protected def liveCount: Column = coalesce(col("rows"), lit(0L))
+
+    /** HOOK: the main-dataset rows stats and maintain count. */
+    protected def statsRows(rows: DataFrame): DataFrame = rows
+
+    /** HOOK: extra per-partition aggregates for [[statsShape]]. */
+    protected def statsAggs: Seq[Column] = Nil
+
+    /** HOOK: the report's columns, from the listing ⟕ live counts. */
+    protected def statsShape(joined: DataFrame,
+        counts: DataFrame): DataFrame =
+      joined.select(col(partCol), liveCount.as(statsCount), col("files"))
+
+    /** The MAINTENANCE POLICY over [[stats]]: per partition,
+      * (partCol, statsCount, files, tomb, [[maintainExtra]], action)
+      * where action is `compact` when the partition's file count
+      * exceeds `maxFiles` (append/ingest small-file accretion) or its
+      * tombstoned-row share exceeds `maxTombBp` basis points (dead rows
+      * every serve still reads and anti-joins away), `retrain` where the
+      * store's `retrain` rule holds (checked first), else `ok`.
+      * `execute = true` runs [[compact]] when any partition decided
+      * `compact` — compaction is whole-store by construction, so one
+      * trigger suffices — and returns the decided rows. */
+    def maintain(s: SparkSession, dir: String, maxFiles: Int,
+        maxTombBp: Long, execute: Boolean,
+        retrain: Option[Column] = None): DataFrame = {
+      require(maxFiles >= 1 && maxTombBp >= 0,
+        s"${op}Maintain: maxFiles >= 1, maxTombBp >= 0")
+      // per-partition tombstoned-row counts: stats reports the LIVE
+      // view, the policy needs the dead rows too
+      val g = currentGen(s, dir)
+      val raw = statsRows(read(s, dir, main.kind, g))
+      val dead = tombstones(s, dir, g).fold(raw.filter(lit(false)))(t =>
+        raw.join(scaleHint(t.select(tombIdCol)), Seq(tombIdCol),
+          "left_semi"))
+      val tomb = dead.groupBy(partCol).agg(count(lit(1)).as("tomb"))
+      val (n, tc) = (col(statsCount), col("tomb"))
+      val compactWhen = col("files") > maxFiles ||
+        (n + tc > 0 && tc * 10000L > lit(maxTombBp) * (n + tc))
+      val report = stats(s, dir).join(tomb, Seq(partCol), "left")
+        .select(Seq(col(partCol), n, col("files"),
+          coalesce(tc, lit(0L)).as("tomb")) ++ maintainExtra.map(col): _*)
+        .withColumn("action", retrain
+          .fold(when(compactWhen, "compact"))(r =>
+            when(r, "retrain").when(compactWhen, "compact"))
+          .otherwise("ok"))
+        .orderBy(partCol)
+      if (!execute) report
+      else {
+        // the report is small (one row per partition) and about to
+        // drive a side effect — materializing it is the op's shape
+        val decided = report.collect()
+        if (decided.exists(_.getAs[String]("action") == "compact"))
+          compact(s, dir)
+        s.createDataFrame(java.util.Arrays.asList(decided: _*),
+          report.schema)
+      }
+    }
+
+    /** CONTINUOUS ingestion: each micro-batch of `delta` is appended by
+      * `appendBatch` under the batch-id ledger ([[ledgered]],
+      * `ingested/batch-<id>/`), so checkpoint replays skip
+      * already-applied batches and a clean stop/restart never
+      * double-appends. The caller validates the store's geometry BEFORE
+      * the stream starts. This is the serving-store maintenance loop:
+      * stream in, appends accrete, compaction amortizes. */
+    def ingest(delta: DataFrame, dir: String, checkpointDir: String)(
+        appendBatch: DataFrame => Unit)
+        : org.apache.spark.sql.streaming.StreamingQuery =
+      delta.writeStream
+        .option("checkpointLocation", checkpointDir)
+        .outputMode("append")
+        .foreachBatch { (batch: org.apache.spark.sql.Dataset[
+            org.apache.spark.sql.Row], batchId: Long) =>
+          ledgered(batch.sparkSession, dir, s"batch-$batchId",
+            s"${op}Ingest")(if (!batch.isEmpty) appendBatch(batch))
+        }
+        .start()
+
+    /** Classify and (with `execute`) repair every documented crash
+      * window: the crashed-mutation lock, generation hygiene (torn
+      * compact scratch above the pointer, expired generations below the
+      * grace, stale markers, torn sidecar temps), the current
+      * generation's datasets all present (a crash inside a write's
+      * concurrent dataset writes, or external damage — unrecoverable
+      * without a rebuild), the layout's own checks ([[fsckChecks]]),
+      * and one report-only duplicate check per dataset that declares a
+      * `dupKey`. Returns (check, state, action) rows led by the
+      * corpus-version stamp. */
+    def fsck(s: SparkSession, dir: String, execute: Boolean): DataFrame = {
+      val rows = fsckMutationLock(s, dir, execute) ++
+        fsckGenerations(s, dir, genKinds, execute)
+      val g = currentGen(s, dir)
+      val fs = fsOf(s, new Path(dir))
+      if (!datasets.forall(d => fs.exists(new Path(path(dir, d.kind, g)))))
+        report(s, dir, rows :+ (("datasets",
+          s"current generation g$g incomplete",
+          "unrecoverable without a rebuild")))
+      else {
+        val checked = fsckChecks(s, dir, g, execute)
+        // re-resolve: a repair above may have compacted into a new
+        // generation, and the pre-compact files are the grace's
+        val gNow = currentGen(s, dir)
+        report(s, dir, rows ++ checked ++
+          datasets.filter(_.dupKey.nonEmpty).map(dupRow(s, dir, gNow, _)))
+      }
+    }
+
+    /** HOOK: the layout's own fsck checks, run on a complete
+      * generation `g` before the duplicate checks. */
+    protected def fsckChecks(s: SparkSession, dir: String, g: Long,
+        execute: Boolean): Seq[(String, String, String)] = Nil
+
+    private def dupRow(s: SparkSession, dir: String, g: Long,
+        d: StoreDataset): (String, String, String) = {
+      val ids = d.dupKey.filter(tombCols.contains)
+      val dups = read(s, dir, d.kind, g).groupBy(d.dupKey.map(col): _*)
+        .count().filter(col("count") > 1)
+      val n = (if (ids == d.dupKey) dups
+        else dups.select(ids.map(col): _*).distinct()).count()
+      (d.dupLabel,
+        if (n == 0) "none" else s"$n ${d.dupNoun} appended more than once",
+        if (n == 0) "none" else d.dupRepair)
+    }
   }
 }

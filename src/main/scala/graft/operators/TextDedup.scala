@@ -1361,12 +1361,17 @@ object TextDedup {
     * [[graft.operators.Similarity]]'s IvfPqEncSchema). */
   private val DedupBandSchema = "doc_id BIGINT, bv STRING, band INT"
 
-  /** The dedup store's per-GENERATION artifacts (see
-    * [[Stores.currentGen]]): the band-partitioned signatures and the
-    * tombstone set a compact folds into the next generation. The
-    * geometry manifest, ingest ledger and corpus-version stamp are
-    * store-life state and stay unversioned. */
-  private[graft] val DedupGenKinds = Seq("bands", "tombstones")
+  /** The dedup store's [[Stores.StoreLayout]]: band-partitioned
+    * signatures (DedupNumBands partitions) with doc_id tombstones and a
+    * (doc_id, band) replay check. The geometry manifest, ingest ledger
+    * and corpus-version stamp are store-life state. */
+  private[graft] val DedupLayout: Stores.StoreLayout = new Stores.StoreLayout(
+      "dedupIndex", Seq(Stores.StoreDataset("bands", DedupBandSchema,
+        dupKey = Seq("doc_id", "band"))),
+      partCol = "band", tombSchema = "doc_id BIGINT",
+      tombCols = Seq("doc_id"), statsCount = "n_docs", mainNoun = "band") {
+    def partitions(s: SparkSession, dir: String): Int = DedupNumBands
+  }
 
   /** The (doc_id, band, bv) band view of any (`idCol`, `textCol`)
     * frame — [[bandsOf]] over [[signaturesOf]], the shared derivation
@@ -1379,9 +1384,7 @@ object TextDedup {
 
   /** Write the resident signature store: `docs` (idCol, textCol) →
     * MinHash bands under `outDir/bands/band=<b>/…`, plus a geometry
-    * manifest. Rebuild-safe: stale sidecar state from a prior store
-    * life under the same dir (tombstones, ingest ledger) is cleared —
-    * the [[Similarity.ivfPqIndexWrite]] rebuild rule. */
+    * manifest. Rebuild-safe ([[Stores.StoreLayout.rebuild]]). */
   private[graft] def dedupIndexWrite(docs: DataFrame, outDir: String,
       idCol: String = "doc_id", textCol: String = "text"): Unit =
     dedupIndexWriteBands(bandsOfSignatures(docs, idCol, textCol), outDir)
@@ -1392,8 +1395,7 @@ object TextDedup {
   private[operators] def dedupIndexWriteBands(bands: DataFrame,
       outDir: String): Unit = {
     val s = bands.sparkSession
-    Stores.withStoreLock(s, outDir, "dedupIndexWrite") {
-    Stores.clearStoreLife(s, outDir, DedupGenKinds)
+    DedupLayout.rebuild(s, outDir) {
     // the manifest is a raw sidecar file (Stores.writeMetaSidecar):
     // every lifecycle op reads it at construction, and as a one-row
     // parquet dataset each read was a full Spark job
@@ -1402,15 +1404,8 @@ object TextDedup {
       "n_hashes" -> DedupNumHashes.toString,
       "bands" -> DedupNumBands.toString,
       "rows_per_band" -> DedupRowsPerBand.toString))
-    bands.select(col("doc_id"), col("bv"), col("band"))
-      // one write task per band: each partition directory gets a
-      // single file instead of (shuffle.partitions × bands) shards
-      .repartition(DedupNumBands, col("band"))
-      .write.mode("overwrite").partitionBy("band")
-      .parquet(s"$outDir/bands")
-    // fresh corpus-version stamp (see [[Stores]]): a rebuild starts a
-    // new coordination epoch at 0
-    Stores.writeStoreVersion(s, outDir, 0L)
+    DedupLayout.writeParts(bands.select(col("doc_id"), col("bv"),
+      col("band")), DedupNumBands, s"$outDir/bands", "overwrite")
     }
   }
 
@@ -1425,19 +1420,11 @@ object TextDedup {
   private[graft] def dedupIndexAppend(docs: DataFrame, indexDir: String,
       idCol: String = "doc_id", textCol: String = "text"): Unit = {
     val s = docs.sparkSession
-    Stores.withStoreLock(s, indexDir, "dedupIndexAppend") {
+    DedupLayout.append(s, indexDir) { g =>
     checkDedupManifest(s, indexDir)
-    bandsOfSignatures(docs, idCol, textCol)
-      .select(col("doc_id"), col("bv"), col("band"))
-      // the write's one-file-per-band discipline (r16 verdict on the
-      // search append, applied to all three stores): each append lands
-      // at most one file per band, bounding small-file accretion
-      // between compacts
-      .repartition(DedupNumBands, col("band"))
-      .write.mode("append").partitionBy("band")
-      .parquet(s"$indexDir/${Stores.genName("bands",
-        Stores.currentGen(s, indexDir))}")
-    Stores.bumpStoreVersion(s, indexDir)
+    DedupLayout.writeParts(bandsOfSignatures(docs, idCol, textCol)
+        .select(col("doc_id"), col("bv"), col("band")),
+      DedupNumBands, DedupLayout.path(indexDir, "bands", g), "append")
     }
   }
 
@@ -1460,224 +1447,62 @@ object TextDedup {
     ingestVerdicts(newBands, residentBands(s, indexDir))
   }
 
-  /** The live resident band view: the partitioned scan minus the
-    * logical-delete set — broadcast anti-join, the
-    * [[Similarity.ivfPqIndexDelete]] contract (tombstones stay small
-    * between compactions; zero cost until the first delete). */
+  /** The live resident band view at the current generation — the
+    * snapshot a serve constructs against ([[Stores.currentGen]]), with
+    * the logical-delete set subtracted. */
   private def residentBands(s: SparkSession, indexDir: String): DataFrame =
-    residentBandsAt(s, indexDir, Stores.currentGen(s, indexDir))
-
-  /** [[residentBands]] pinned to generation `g` — the snapshot a serve
-    * constructs against ([[Stores.currentGen]]); compact reads the
-    * pre-flip generation through this explicitly. */
-  private def residentBandsAt(s: SparkSession, indexDir: String,
-      g: Long): DataFrame = {
-    val enc = s.read.schema(DedupBandSchema)
-      .parquet(s"$indexDir/${Stores.genName("bands", g)}")
+    DedupLayout.live(s, indexDir, "bands", Stores.currentGen(s, indexDir))
       .select(col("doc_id"), col("band"), col("bv"))
-    val p = new org.apache.hadoop.fs.Path(
-      s"$indexDir/${Stores.genName("tombstones", g)}")
-    val fs = p.getFileSystem(s.sparkContext.hadoopConfiguration)
-    if (!fs.exists(p)) enc
-    else enc.join(
-      broadcast(s.read.schema("doc_id BIGINT").parquet(p.toString)),
-      Seq("doc_id"), "left_anti")
-  }
 
-  /** LOGICAL delete: append ids to `tombstones/`; serving subtracts
-    * them immediately, [[dedupIndexCompact]] reclaims the space. A
+  /** LOGICAL delete ([[Stores.StoreLayout.delete]]): serving subtracts
+    * the ids immediately, [[dedupIndexCompact]] reclaims the space. A
     * deleted doc stops matching new batches at zero rewrite cost. */
   private[graft] def dedupIndexDelete(s: SparkSession, indexDir: String,
-      ids: Seq[Long]): Unit = {
-    require(ids.nonEmpty, "dedupIndexDelete: ids must be non-empty")
-    import s.implicits._
-    dedupIndexDeleteBody(s, indexDir, ids.toDF("doc_id").coalesce(1))
-  }
+      ids: Seq[Long]): Unit = DedupLayout.delete(s, indexDir, ids)
 
-  /** FRAME-shaped [[dedupIndexDelete]] (the no-collect takedown path,
-    * [[Stores.takedownAll]]'s DataFrame form): the ids never cross the
-    * driver; the tombstone write funnels to one file AFTER whatever
-    * plan computes the ids. Duplicate and absent ids are forgiven by
-    * the serve's anti-join semantics exactly as in the Seq form; an
-    * empty frame appends zero rows (a no-op for every serve). */
+  /** FRAME-shaped [[dedupIndexDelete]] (the no-collect takedown path):
+    * duplicate and absent ids are forgiven by the serve's anti-join
+    * exactly as in the Seq form. */
   private[graft] def dedupIndexDelete(s: SparkSession, indexDir: String,
-      ids: DataFrame): Unit = {
-    // pinned (r18 advice): the public frame-shaped entry point pins
-    // the caller's frame so a non-deterministic ids plan cannot
-    // tombstone one id set and report another; released once the
-    // write has materialized. Internal pre-pinned callers
-    // (takedownAll) take the …Pinned form below.
-    val pinned = Stores.requireLongIds(ids, "doc_id", "dedupIndexDelete")
-      .localCheckpoint()
-    try dedupIndexDeleteBody(s, indexDir, pinned.repartition(1))
-    finally
-      org.apache.spark.sql.graft.Bridge.unpersistLocalCheckpoint(pinned)
-  }
+      ids: DataFrame): Unit = DedupLayout.delete(s, indexDir, ids)
 
-  /** [[dedupIndexDelete]] for an ids frame the caller already
-    * validated and pinned ([[Stores.takedownAll]]'s dispatch): skips
-    * the guard+checkpoint the public form pays. */
-  private[operators] def dedupIndexDeletePinned(s: SparkSession,
-      indexDir: String, ids: DataFrame): Unit =
-    dedupIndexDeleteBody(s, indexDir, ids.repartition(1))
-
-  private def dedupIndexDeleteBody(s: SparkSession, indexDir: String,
-      tombRows: DataFrame): Unit = {
-    Stores.withStoreLock(s, indexDir, "dedupIndexDelete") {
-    tombRows
-      .write.mode("append").parquet(s"$indexDir/${Stores.genName(
-        "tombstones", Stores.currentGen(s, indexDir))}")
-    Stores.bumpStoreVersion(s, indexDir)
-    }
-  }
-
-  /** Compact into the NEXT GENERATION: rewrite the bands to one file
-    * per band directory with tombstones applied physically at a fresh
-    * `bands-g<N+1>` path, then COMMIT with the atomic `gen` pointer
-    * flip (see [[Stores.currentGen]]) — bands and the now-empty
-    * tombstone set change together; the pre-compact generation stays
-    * as the serve grace and this compact vacuums the generations
-    * before it. [[Similarity.ivfPqIndexCompact]]'s repair for the
-    * small-files decay appends cause, on the text store; crash
-    * windows (torn scratch above the pointer / expired generations
-    * below the grace) are classified and repaired by
-    * [[Stores.dedupIndexFsck]]. Purge note: the grace generation
-    * still carries the tombstoned bytes — two back-to-back compacts
-    * give a takedown its physical purge (see
-    * [[Search.searchIndexCompact]]). */
+  /** Compact into the NEXT GENERATION ([[Stores.StoreLayout.compact]]):
+    * one file per band directory with tombstones applied physically —
+    * the repair for the small-files decay appends cause. Crash windows
+    * are classified and repaired by [[Stores.dedupIndexFsck]]. */
   private[graft] def dedupIndexCompact(s: SparkSession,
-      indexDir: String): Unit =
-      Stores.withStoreLock(s, indexDir, "dedupIndexCompact") {
-    val g = Stores.currentGen(s, indexDir)
-    val ng = g + 1
-    residentBandsAt(s, indexDir, g)
-      .select(col("doc_id"), col("bv"), col("band"))
-      .repartition(DedupNumBands, col("band"))
-      .write.mode("overwrite").partitionBy("band")
-      .parquet(s"$indexDir/${Stores.genName("bands", ng)}")
-    Stores.writeGen(s, indexDir, ng)
-    Stores.vacuumGens(s, indexDir, DedupGenKinds, keepFrom = g)
-  }
+      indexDir: String): Unit = DedupLayout.compact(s, indexDir)
 
-  /** Per-band health report: (band, n_docs, files) — live resident
-    * docs (tombstones subtracted) and parquet files per band directory
-    * (the compaction trigger). Hadoop FS listing, so the report works
-    * wherever the store does. The listing is the authoritative band
-    * set: an all-tombstoned band still reports (0 docs, >0 files). */
+  /** Per-band health report ([[Stores.StoreLayout.stats]]):
+    * (band, n_docs, files) — live resident docs and parquet files per
+    * band directory (the compaction trigger). */
   private[graft] def dedupIndexStats(s: SparkSession,
-      indexDir: String): DataFrame = {
-    val g = Stores.currentGen(s, indexDir)
-    val root = new org.apache.hadoop.fs.Path(
-      s"$indexDir/${Stores.genName("bands", g)}")
-    val fs = root.getFileSystem(s.sparkContext.hadoopConfiguration)
-    require(fs.exists(root) && fs.getFileStatus(root).isDirectory,
-      s"dedupIndexStats: no band dataset under $indexDir — " +
-        "not a store directory (dedupIndexWrite creates bands/)")
-    val counts = residentBandsAt(s, indexDir, g)
-      .groupBy("band").agg(count(lit(1)).as("rows"))
-    val files = fs.listStatus(root)
-      .filter(st => st.isDirectory && st.getPath.getName.startsWith("band="))
-      .map(st => (st.getPath.getName.stripPrefix("band=").toInt,
-        fs.listStatus(st.getPath)
-          .count(f => f.getPath.getName.endsWith(".parquet"))))
-      .toSeq
-    import s.implicits._
-    broadcast(files.toDF("band", "files"))
-      .join(counts, Seq("band"), "left")
-      .select(col("band"),
-        coalesce(col("rows"), lit(0L)).as("n_docs"), col("files"))
-      .orderBy("band")
-  }
+      indexDir: String): DataFrame = DedupLayout.stats(s, indexDir)
 
   /** CONTINUOUS ingestion into the store: each micro-batch of `delta`
     * (idCol, textCol — new ids only) is appended under the frozen
-    * geometry, guarded by the same batch-id LEDGER as
-    * [[Similarity.ivfPqIndexIngest]] (`ingested/batch-<id>/` markers
-    * make checkpoint replays skip already-applied batches — clean
-    * stop/restart never double-appends). Same honest crash window:
-    * dying between the append and its marker replays that batch
-    * at-least-once; the repair is [[dedupIndexDelete]] of the
-    * duplicate ids + [[dedupIndexCompact]], or a rebuild. This is the
-    * crawler loop at 100 TB/day: stream in, appends accrete,
-    * compaction amortizes, and the resident state SURVIVES the JVM. */
+    * geometry, guarded by the batch-id ledger
+    * ([[Stores.StoreLayout.ingest]]). This is the crawler loop at
+    * 100 TB/day: stream in, appends accrete, compaction amortizes, and
+    * the resident state SURVIVES the JVM. */
   private[graft] def dedupIndexIngest(delta: DataFrame, indexDir: String,
       checkpointDir: String, idCol: String = "doc_id",
       textCol: String = "text")
       : org.apache.spark.sql.streaming.StreamingQuery = {
     checkDedupManifest(delta.sparkSession, indexDir)
-    delta.writeStream
-      .option("checkpointLocation", checkpointDir)
-      .outputMode("append")
-      .foreachBatch {
-        (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row],
-         batchId: Long) =>
-        val marker =
-          new org.apache.hadoop.fs.Path(s"$indexDir/ingested/batch-$batchId")
-        val fs = marker.getFileSystem(
-          batch.sparkSession.sparkContext.hadoopConfiguration)
-        if (!fs.exists(marker)) {
-          if (!batch.isEmpty)
-            dedupIndexAppend(batch, indexDir, idCol, textCol)
-          // a silently-false mkdirs would leave the marker missing and
-          // the next replay would double-append — fail the batch loudly
-          require(fs.mkdirs(marker),
-            s"dedupIndexIngest: ledger marker create failed: $marker")
-        }
-        ()
-      }
-      .start()
+    DedupLayout.ingest(delta, indexDir, checkpointDir)(
+      dedupIndexAppend(_, indexDir, idCol, textCol))
   }
 
-  /** The store MAINTENANCE POLICY — [[Similarity.ivfPqIndexMaintain]]'s
-    * decision layer on the text store: per band, (band, n_docs, files,
-    * tomb, action) where action is `compact` when the band directory's
-    * file count exceeds `maxFiles` (append/ingest small-file accretion)
-    * or the tombstoned-row share of the band exceeds `maxTombBp`
-    * (dead rows every serve's anti-join still subtracts), else `ok`.
-    * No retrain action: the banding has no trained state to rebalance
-    * — band occupancy is fixed at NumBands by construction, which is
-    * exactly why the text policy is simpler than the ANN one.
-    * `execute = true` runs [[dedupIndexCompact]] when any band decides
-    * `compact` (whole-store by construction; serve-identical,
-    * spec-pinned). */
+  /** The store MAINTENANCE POLICY ([[Stores.StoreLayout.maintain]]):
+    * per band, (band, n_docs, files, tomb, action). No retrain action:
+    * the banding has no trained state to rebalance — band occupancy is
+    * fixed at NumBands by construction, which is exactly why the text
+    * policy is simpler than the ANN one. */
   private[graft] def dedupIndexMaintain(s: SparkSession,
       indexDir: String, maxFiles: Int = 8, maxTombBp: Long = 2000L,
-      execute: Boolean = false): DataFrame = {
-    require(maxFiles >= 1 && maxTombBp >= 0,
-      "dedupIndexMaintain: maxFiles >= 1, maxTombBp >= 0")
-    val gM = Stores.currentGen(s, indexDir)
-    val raw = s.read.schema(DedupBandSchema)
-      .parquet(s"$indexDir/${Stores.genName("bands", gM)}")
-    val tombP = new org.apache.hadoop.fs.Path(
-      s"$indexDir/${Stores.genName("tombstones", gM)}")
-    val tombFs = tombP.getFileSystem(s.sparkContext.hadoopConfiguration)
-    val dead =
-      if (!tombFs.exists(tombP)) raw.filter(lit(false))
-      else raw.join(
-        broadcast(s.read.schema("doc_id BIGINT").parquet(tombP.toString)),
-        Seq("doc_id"), "left_semi")
-    val tomb = dead.groupBy("band").agg(count(lit(1)).as("tomb"))
-    val report = dedupIndexStats(s, indexDir)
-      .join(tomb, Seq("band"), "left")
-      .select(col("band"), col("n_docs"), col("files"),
-        coalesce(col("tomb"), lit(0L)).as("tomb"))
-      .withColumn("action",
-        when(col("files") > maxFiles
-          || (col("n_docs") + col("tomb") > 0
-            && col("tomb") * 10000L
-               > lit(maxTombBp) * (col("n_docs") + col("tomb"))),
-          "compact").otherwise("ok"))
-      .orderBy("band")
-    if (execute) {
-      val decided = report.collect()
-      if (decided.exists(_.getAs[String]("action") == "compact"))
-        dedupIndexCompact(s, indexDir)
-      import s.implicits._
-      decided.map(r => (r.getInt(0), r.getLong(1), r.getInt(2),
-          r.getLong(3), r.getString(4)))
-        .toSeq.toDF("band", "n_docs", "files", "tomb", "action")
-    } else report
-  }
+      execute: Boolean = false): DataFrame =
+    DedupLayout.maintain(s, indexDir, maxFiles, maxTombBp, execute)
 
   /** Validate a store's manifest against this library's frozen banding
     * geometry — a store written under a DIFFERENT banding would not
@@ -1820,10 +1645,6 @@ object TextDedup {
   // takedown composes: run [[Stores.takedownAll]] over the doc-store
   // families, then [[auditStoreDelete]] with the same ids frame.
 
-  /** Per-generation artifacts: the verified pair set, the candidate
-    * set, and the doc-id tombstones a compact folds in. */
-  private[graft] val AuditGenKinds = Seq("pairs", "cand", "tombstones")
-
   /** Bucket count of the doc_i hash partitioning. Fixed in the
     * manifest: a future bucket change must rebuild, not mis-prune. */
   private val AuditBuckets = 8
@@ -1832,25 +1653,40 @@ object TextDedup {
     * the no-schema-inference discipline ([[DedupBandSchema]]). Types
     * are normalized AT THE WRITER, so both jaccard branches (count
     * long vs size int) land identically. */
-  // private[graft]: Stores.auditStoreFsck reads both datasets with
-  // these same declared schemas — one constant per dataset, so a
-  // schema change cannot silently diverge from fsck's read
-  private[graft] val AuditPairSchema =
+  private val AuditPairSchema =
     "doc_i BIGINT, doc_j BIGINT, n_common BIGINT, n_i INT, n_j INT, " +
       "jaccard DOUBLE, bk INT"
-  private[graft] val AuditCandSchema = "doc_i BIGINT, doc_j BIGINT, bk INT"
+  private val AuditCandSchema = "doc_i BIGINT, doc_j BIGINT, bk INT"
 
-  private def withAuditBk(df: DataFrame): DataFrame =
-    df.withColumn("bk",
-      pmod(xxhash64(col("doc_i")), lit(AuditBuckets)).cast("int"))
+  /** The report-only repair of a replayed audit delta. */
+  private def auditRepair(from: String): String =
+    s"report-only: rebuild from the pipeline's $from (auditStoreWrite), " +
+      "or auditStoreDelete the affected docs and compact"
+
+  /** The audit store's [[Stores.StoreLayout]]: the verified pair set
+    * and the candidate set, bucket-partitioned by doc_i, with DOC-id
+    * tombstones subtracted on EITHER endpoint. One report-only replay
+    * check per dataset — a replayed delta double-counts: duplicate
+    * candidates skew q188's n_cand/precision exactly the way duplicate
+    * pairs skew recall. */
+  private[graft] val AuditLayout: Stores.StoreLayout = new Stores.StoreLayout(
+      "auditStore", Seq(
+        Stores.StoreDataset("pairs", AuditPairSchema, Seq("doc_i", "doc_j"),
+          "dup-pairs", "pairs", auditRepair("verified pair set")),
+        Stores.StoreDataset("cand", AuditCandSchema, Seq("doc_i", "doc_j"),
+          "dup-cands", "candidates", auditRepair("candidate set"))),
+      partCol = "bk", tombSchema = "doc_id BIGINT",
+      tombCols = Seq("doc_i", "doc_j")) {
+    def partitions(s: SparkSession, dir: String): Int = AuditBuckets
+  }
 
   /** One pair dataset's bucket-partitioned write (shared by write /
-    * append / compact): type-normalize, bucket, one file per bucket. */
+    * append): type-normalized rows, bucketed, one file per bucket. */
   private def writeAuditSet(rows: DataFrame, path: String,
       mode: String): Unit =
-    withAuditBk(rows)
-      .repartition(AuditBuckets, col("bk"))
-      .write.mode(mode).partitionBy("bk").parquet(path)
+    AuditLayout.writeParts(rows.withColumn("bk",
+      pmod(xxhash64(col("doc_i")), lit(AuditBuckets)).cast("int")),
+      AuditBuckets, path, mode)
 
   private def normalizedPairs(pairs: DataFrame): DataFrame =
     pairs.select(col("doc_i").cast("long").as("doc_i"),
@@ -1867,13 +1703,12 @@ object TextDedup {
     * endpoints, intersection stats, jaccard) and the LSH candidate set
     * under `outDir/{pairs,cand}/bk=<b>/…`, with the banding-geometry
     * manifest (candidates are only meaningful in the band space that
-    * generated them) and a fresh corpus-version stamp. Rebuild-safe:
-    * prior-life generations/markers/tombstones are cleared first. */
+    * generated them) and a fresh corpus-version stamp. Rebuild-safe
+    * ([[Stores.StoreLayout.rebuild]]). */
   private[graft] def auditStoreWrite(pairs: DataFrame, cand: DataFrame,
       outDir: String): Unit = {
     val s = pairs.sparkSession
-    Stores.withStoreLock(s, outDir, "auditStoreWrite") {
-      Stores.clearStoreLife(s, outDir, AuditGenKinds)
+    AuditLayout.rebuild(s, outDir) {
       Stores.writeMetaSidecar(s, s"$outDir/manifest", Seq(
         "shingle_k" -> DedupShingleK.toString,
         "n_hashes" -> DedupNumHashes.toString,
@@ -1893,7 +1728,6 @@ object TextDedup {
           "overwrite"),
         writeAuditSet(normalizedCands(cand), s"$outDir/cand",
           "overwrite"))
-      Stores.writeStoreVersion(s, outDir, 0L)
     }
   }
 
@@ -1909,107 +1743,49 @@ object TextDedup {
   private[graft] def auditStoreAppend(pairsDelta: DataFrame,
       candDelta: DataFrame, indexDir: String): Unit = {
     val s = pairsDelta.sparkSession
-    Stores.withStoreLock(s, indexDir, "auditStoreAppend") {
+    AuditLayout.append(s, indexDir) { g =>
       checkAuditManifest(s, indexDir)
-      val g = Stores.currentGen(s, indexDir)
       writeAuditSet(normalizedPairs(pairsDelta),
-        s"$indexDir/${Stores.genName("pairs", g)}", "append")
+        AuditLayout.path(indexDir, "pairs", g), "append")
       writeAuditSet(normalizedCands(candDelta),
-        s"$indexDir/${Stores.genName("cand", g)}", "append")
-      Stores.bumpStoreVersion(s, indexDir)
+        AuditLayout.path(indexDir, "cand", g), "append")
     }
   }
 
-  /** DOC-level logical delete: tombstone the ids; serves subtract
-    * every pair touching a tombstoned doc on EITHER endpoint,
-    * [[auditStoreCompact]] reclaims the rows. Frame-shaped (the
-    * takedown path — ids never cross the driver); guard+pin per the
-    * public frame-delete contract. */
+  /** DOC-level logical delete ([[Stores.StoreLayout.delete]]):
+    * tombstone the ids; serves subtract every pair touching a
+    * tombstoned doc on EITHER endpoint, [[auditStoreCompact]] reclaims
+    * the rows. Frame-shaped (the takedown path — ids never cross the
+    * driver). */
   private[graft] def auditStoreDelete(s: SparkSession, indexDir: String,
-      ids: DataFrame): Unit = {
-    val pinned = Stores.requireLongIds(ids, "doc_id", "auditStoreDelete")
-      .localCheckpoint()
-    try Stores.withStoreLock(s, indexDir, "auditStoreDelete") {
-      pinned.repartition(1)
-        .write.mode("append").parquet(s"$indexDir/${Stores.genName(
-          "tombstones", Stores.currentGen(s, indexDir))}")
-      Stores.bumpStoreVersion(s, indexDir)
-    } finally
-      org.apache.spark.sql.graft.Bridge.unpersistLocalCheckpoint(pinned)
-  }
+      ids: DataFrame): Unit = AuditLayout.delete(s, indexDir, ids)
 
-  /** Seq sugar over the frame delete (operator-sized lists). */
+  /** Seq form of [[auditStoreDelete]] (operator-sized lists). */
   private[graft] def auditStoreDelete(s: SparkSession, indexDir: String,
-      ids: Seq[Long]): Unit = {
-    require(ids.nonEmpty, "auditStoreDelete: ids must be non-empty")
-    import s.implicits._
-    auditStoreDelete(s, indexDir, ids.toDF("doc_id"))
-  }
+      ids: Seq[Long]): Unit = AuditLayout.delete(s, indexDir, ids)
 
-  /** Compact into the next generation: rewrite both live sets with
-    * tombstones applied physically, commit with the atomic gen-pointer
-    * flip, vacuum the generations before the grace ([[Stores
-    * .currentGen]] snapshot semantics — identical to the other three
-    * stores; two back-to-back compacts purge physically). */
+  /** Compact into the next generation ([[Stores.StoreLayout.compact]]):
+    * rewrite both live sets with tombstones applied physically —
+    * snapshot semantics identical to the other three stores; two
+    * back-to-back compacts purge physically. */
   private[graft] def auditStoreCompact(s: SparkSession,
-      indexDir: String): Unit =
-    Stores.withStoreLock(s, indexDir, "auditStoreCompact") {
-      val g = Stores.currentGen(s, indexDir)
-      val ng = g + 1
-      writeAuditSet(residentAuditPairsAt(s, indexDir, g)
-          .select("doc_i", "doc_j", "n_common", "n_i", "n_j", "jaccard"),
-        s"$indexDir/${Stores.genName("pairs", ng)}", "overwrite")
-      writeAuditSet(residentAuditCandsAt(s, indexDir, g)
-          .select("doc_i", "doc_j"),
-        s"$indexDir/${Stores.genName("cand", ng)}", "overwrite")
-      Stores.writeGen(s, indexDir, ng)
-      Stores.vacuumGens(s, indexDir, AuditGenKinds, keepFrom = g)
-    }
+      indexDir: String): Unit = AuditLayout.compact(s, indexDir)
 
   /** The live verified pair set (tombstones subtracted on both
-    * endpoints — broadcast anti-joins, tombstones stay small between
-    * compacts). Declared read schema; `bk` dropped for consumers. */
+    * endpoints). Declared read schema; `bk` dropped for consumers. */
   private[graft] def residentAuditPairs(s: SparkSession,
       indexDir: String): DataFrame = {
     checkAuditManifest(s, indexDir)
-    residentAuditPairsAt(s, indexDir, Stores.currentGen(s, indexDir))
+    AuditLayout.live(s, indexDir, "pairs", Stores.currentGen(s, indexDir))
+      .select("doc_i", "doc_j", "n_common", "n_i", "n_j", "jaccard")
   }
 
   /** The live candidate set (same tombstone semantics). */
   private[graft] def residentAuditCands(s: SparkSession,
       indexDir: String): DataFrame = {
     checkAuditManifest(s, indexDir)
-    residentAuditCandsAt(s, indexDir, Stores.currentGen(s, indexDir))
-  }
-
-  private def residentAuditPairsAt(s: SparkSession, indexDir: String,
-      g: Long): DataFrame =
-    subtractAuditTombstones(s, indexDir, g,
-      s.read.schema(AuditPairSchema)
-        .parquet(s"$indexDir/${Stores.genName("pairs", g)}")
-        .select("doc_i", "doc_j", "n_common", "n_i", "n_j", "jaccard"))
-
-  private def residentAuditCandsAt(s: SparkSession, indexDir: String,
-      g: Long): DataFrame =
-    subtractAuditTombstones(s, indexDir, g,
-      s.read.schema(AuditCandSchema)
-        .parquet(s"$indexDir/${Stores.genName("cand", g)}")
-        .select("doc_i", "doc_j"))
-
-  private def subtractAuditTombstones(s: SparkSession, indexDir: String,
-      g: Long, rows: DataFrame): DataFrame = {
-    val p = new org.apache.hadoop.fs.Path(
-      s"$indexDir/${Stores.genName("tombstones", g)}")
-    val fs = p.getFileSystem(s.sparkContext.hadoopConfiguration)
-    if (!fs.exists(p)) rows
-    else {
-      val tomb = s.read.schema("doc_id BIGINT").parquet(p.toString)
-      rows
-        .join(broadcast(tomb.select(col("doc_id").as("doc_i"))),
-          Seq("doc_i"), "left_anti")
-        .join(broadcast(tomb.select(col("doc_id").as("doc_j"))),
-          Seq("doc_j"), "left_anti")
-    }
+    AuditLayout.live(s, indexDir, "cand", Stores.currentGen(s, indexDir))
+      .select("doc_i", "doc_j")
   }
 
   private def checkAuditManifest(s: SparkSession,

@@ -57,43 +57,10 @@ object Bench {
     * whose cache accesses vary with scale would break this silently;
     * keep data-dependent branching behind key-invariant gates. */
   private[graft] def deriveReleasePlan(
-      spark: SparkSession, sfDir: String): Map[String, Seq[String]] = {
-    val last = scala.collection.mutable.LinkedHashMap[String, String]()
-    var current = ""
-    val bc = graft.operators.TextDedup.BranchConf
-    val prevBranch = spark.conf.getOption(bc)
-    spark.conf.set(bc, "count")
-    val lmc = graft.operators.Curation.LmBroadcastConf
-    val prevLm = spark.conf.getOption(lmc)
-    spark.conf.set(lmc, "on")
-    // replay against a COLD disk-index memo: in the bench JVM q182
-    // builds the index (touching the model-frame caches) and q183
-    // memo-hits — a warm memo here would skip the build and derive a
-    // different (wrong) last consumer for pq-book/ivf-cent
-    graft.operators.Similarity.resetDiskIndexMemo()
-    graft.operators.TextDedup.resetDiskDedupMemo()
-    graft.operators.TextDedup.resetDiskAuditMemo()
-    graft.operators.Search.resetDiskSearchMemo()
-    try CacheRegistry.withAccessHook(
-      (k: String) => last(k.takeWhile(_ != ':')) = current) {
-      SparkEntry.queries.toSeq.sortBy(_._1).foreach { case (name, fn) =>
-        current = name
-        fn(spark, sfDir)
-      }
-    } finally {
-      prevBranch match {
-        case Some(v) => spark.conf.set(bc, v)
-        case None => spark.conf.unset(bc)
-      }
-      prevLm match {
-        case Some(v) => spark.conf.set(lmc, v)
-        case None => spark.conf.unset(lmc)
-      }
+      spark: SparkSession, sfDir: String): Map[String, Seq[String]] =
+    replayAccesses(spark, sfDir).toMap.toSeq.groupBy(_._2).map {
+      case (q, kvs) => q -> kvs.map(_._1).sorted
     }
-    last.toSeq.groupBy(_._2).map { case (q, kvs) =>
-      q -> kvs.map(_._1).toSeq.sorted
-    }
-  }
 
   /** Which query's timed section ABSORBS each cache build in Bench's
     * sorted run order — the other half of the lifecycle ledger
@@ -153,42 +120,40 @@ object Bench {
     * driver delta be classified as (cache attribution | wio tide |
     * real regression) from the repo alone. */
   private[graft] def deriveFirstConsumers(
-      spark: SparkSession, sfDir: String): Map[String, String] = {
-    val first = scala.collection.mutable.LinkedHashMap[String, String]()
+      spark: SparkSession, sfDir: String): Map[String, String] =
+    replayAccesses(spark, sfDir).distinctBy(_._1).toMap
+
+  /** The ledger replay both derivations fold over: construct every
+    * query's plan in Bench's sorted order with the registry's access
+    * hook armed, and return each access as (key prefix, query) in
+    * access order. The jaccard branch and the LM broadcast branch are
+    * pinned for the replay and restored after. The store memos start
+    * cold: in the bench JVM q182 builds the ANN index (touching the
+    * model-frame caches) and q183 memo-hits, so a warm memo would skip
+    * the build and derive a different (wrong) consumer for
+    * pq-book/ivf-cent, and the q182/q184 index builds must derive as
+    * q182/q184 themselves. */
+  private def replayAccesses(
+      spark: SparkSession, sfDir: String): Seq[(String, String)] = {
+    val accesses = scala.collection.mutable.ArrayBuffer[(String, String)]()
     var current = ""
-    val bc = graft.operators.TextDedup.BranchConf
-    val prevBranch = spark.conf.getOption(bc)
-    spark.conf.set(bc, "count")
-    val lmc = graft.operators.Curation.LmBroadcastConf
-    val prevLm = spark.conf.getOption(lmc)
-    spark.conf.set(lmc, "on")
-    // cold disk-index memos, same reason as deriveReleasePlan: the
-    // absorbers of the q182/q184 index builds must derive as q182/q184
-    // themselves
-    graft.operators.Similarity.resetDiskIndexMemo()
-    graft.operators.TextDedup.resetDiskDedupMemo()
-    graft.operators.TextDedup.resetDiskAuditMemo()
-    graft.operators.Search.resetDiskSearchMemo()
-    try CacheRegistry.withAccessHook(
-      (k: String) => {
-        val p = k.takeWhile(_ != ':')
-        if (!first.contains(p)) first(p) = current
-      }) {
+    val pins = Seq(graft.operators.TextDedup.BranchConf -> "count",
+      graft.operators.Curation.LmBroadcastConf -> "on")
+    val prev = pins.map { case (k, _) => k -> spark.conf.getOption(k) }
+    pins.foreach { case (k, v) => spark.conf.set(k, v) }
+    graft.operators.Stores.resetStoreMemos()
+    val hook: String => Unit = k =>
+      accesses.synchronized { accesses += k.takeWhile(_ != ':') -> current }
+    try CacheRegistry.withAccessHook(hook) {
       SparkEntry.queries.toSeq.sortBy(_._1).foreach { case (name, fn) =>
         current = name
         fn(spark, sfDir)
       }
-    } finally {
-      prevBranch match {
-        case Some(v) => spark.conf.set(bc, v)
-        case None => spark.conf.unset(bc)
-      }
-      prevLm match {
-        case Some(v) => spark.conf.set(lmc, v)
-        case None => spark.conf.unset(lmc)
-      }
+    } finally prev.foreach {
+      case (k, Some(v)) => spark.conf.set(k, v)
+      case (k, None) => spark.conf.unset(k)
     }
-    first.toMap
+    accesses.toSeq
   }
 
   def main(args: Array[String]): Unit = {

@@ -821,7 +821,7 @@ object Curation {
       // which evaluates the tot rollup a second time (the expansion
       // frame still needs tt/vsz for the missing-word term), and at
       // sf0.1 that duplicated vocab×K pass costs more than the
-      // corpus×K ln it saves (JobCount: 24→30 jobs, taskTime 79→98 s,
+      // corpus×K ln it saves (tools.Profile: 24→30 jobs, taskTime 79→98 s,
       // cold wall 7.0→8.4 s; warm wall equal). At open-web scale the
       // calculus flips (corpus×K ≫ vocab×K) — revisit with a
       // registry-cached annotated model if q164 ever dominates a real
@@ -936,7 +936,7 @@ object Curation {
       // derived (w, lw) broadcast — the q164 experiment's twin — was
       // tried in r22 and REVERTED on measurement: the extra
       // vocab-sized lmw materialization pass costs more than the
-      // per-pool-row ln it saves at sf0.1 (JobCount, quiet box:
+      // per-pool-row ln it saves at sf0.1 (tools.Profile, quiet box:
       // taskTime 34.9 → 42.6 s, wall 2.77 → 3.10 s, jobs 17 = 17),
       // the ln being fused into the corpus pass's codegen anyway.
       val sc = pool

@@ -694,9 +694,9 @@ object Similarity {
     * parquet read runs a schema-inference Spark job per call (~0.1–
     * 0.4 s of scheduler floor that was pure overhead on each of the
     * q182/q186/q187 serve constructions and inside every store
-    * bootstrap — 5 of q187's 47 first-touch jobs, measured by
-    * tools.JobTrace). The WRITE normalizes the frames to these exact
-    * types, so the store format is pinned at the writer and the
+    * bootstrap — 5 of q187's 47 first-touch jobs, named by
+    * tools.Profile's job lines). The WRITE normalizes the frames to
+    * these exact types, so the store format is pinned at the writer and the
     * declared reads can never mis-type a user-supplied model frame. */
   private val IvfPqBooksSchema = "cs INT, cb_id BIGINT, cbv ARRAY<BIGINT>"
   private val IvfPqCentsSchema = "cl BIGINT, c ARRAY<DOUBLE>"

@@ -133,8 +133,8 @@ object Stores {
     // un-hinted tiny join inside a one-partition bootstrap gets
     // planned as a broadcast hash join, and every BroadcastExchange
     // runs as its OWN Spark job — pure scheduler floor when both
-    // sides are one partition of kilobytes (tools.JobTrace attributed
-    // ~4 of q187's first-touch jobs to these). Disabling the
+    // sides are one partition of kilobytes (tools.Profile's job lines
+    // attribute ~4 of q187's first-touch jobs to these). Disabling the
     // threshold folds those joins into their consuming write jobs as
     // extra stages of the SAME job. Explicit broadcast() HINTS (the
     // model-frame joins — tiny at ANY scale) are unaffected: hints
@@ -216,6 +216,17 @@ object Stores {
       case None =>
         java.nio.file.Files.createTempDirectory(prefix).toString
     }
+
+  /** Forget every memoized store directory (ANN, dedup, audit, search
+    * and the coordinated pair), so the next consumer of each store
+    * builds it again — the cold first touch a fresh Bench JVM sees.
+    * Ledger replays and job-count pins run from this state. */
+  private[graft] def resetStoreMemos(): Unit = {
+    Similarity.resetDiskIndexMemo()
+    TextDedup.resetDiskDedupMemo()
+    TextDedup.resetDiskAuditMemo()
+    Search.resetDiskSearchMemo()
+  }
 
   /** Run two INDEPENDENT store actions concurrently (r22, guide §2.6
     * "overlap independent jobs"): a store bootstrap is a chain of

@@ -1376,9 +1376,7 @@ object TextDedup {
   /** The (doc_id, band, bv) band view of any (`idCol`, `textCol`)
     * frame — [[bandsOf]] over [[signaturesOf]], the shared derivation
     * every store entry point and its parity spec run. */
-  // private[graft], not [operators]: tools.StoreBuildDecomp times this
-  // compute half against the full store build
-  private[graft] def bandsOfSignatures(docs: DataFrame,
+  private[operators] def bandsOfSignatures(docs: DataFrame,
       idCol: String = "doc_id", textCol: String = "text"): DataFrame =
     bandsOf(signaturesOf(docs, idCol, textCol))
 

@@ -63,13 +63,7 @@ object Cli {
       System.err.println("usage: Cli <data dir> \"<sql>;\"")
       sys.exit(2)
     }
-    val spark = SparkSession.builder()
-      .master(s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")}]")
-      .config("spark.sql.shuffle.partitions",
-        sys.env.getOrElse("SPARK_GRAFT_CPUS", "4"))
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = localSession(4)
     try {
       run(spark, args(0), args.drop(1).mkString(" ")).foreach(println)
       spark.stop()

@@ -1,7 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
-
 import graft.Bench
 
 /** Prints the cache release plan derived from the REAL query definitions
@@ -12,12 +10,7 @@ import graft.Bench
   */
 object ReleasePlan {
   def main(args: Array[String]): Unit = {
-    val spark = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", 4)
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = localSession(4)
     val dir = args.headOption.getOrElse("/root/testdata/sf0.001")
     val plan = Bench.deriveReleasePlan(spark, dir)
     println("  val releaseAfter: Map[String, Seq[String]] = Map(")

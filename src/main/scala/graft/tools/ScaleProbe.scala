@@ -147,13 +147,8 @@ object ScaleProbe {
     val mults = args.lift(1).getOrElse("1,3,10,30")
       .split(",").map(_.trim.toInt).toSeq
     val scratch = args.lift(2).getOrElse("target/scaleprobe")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = localSession(32)
+    val cpus = spark.sparkContext.defaultParallelism
 
     val points = scala.collection.mutable.ArrayBuffer.empty[Point]
     // discarded 1× round absorbs JVM/codegen warm-up
@@ -162,9 +157,9 @@ object ScaleProbe {
       val dir = s"$scratch/m$m"
       val docs = scaledDocuments(spark, baseDir, m)
       val embs = scaledEmbeddings(spark, baseDir, m)
-      docs.repartition(cpus.toInt)
+      docs.repartition(cpus)
         .write.mode("overwrite").parquet(s"$dir/documents.parquet")
-      embs.repartition(cpus.toInt)
+      embs.repartition(cpus)
         .write.mode("overwrite").parquet(s"$dir/embeddings.parquet")
       // the overwrite replaced the files a memoized scan may reference
       Tables.invalidate(spark)

@@ -7,11 +7,20 @@ import org.apache.spark.sql.classic.ExpressionUtils
 /** Column ⇄ Expression bridge. Spark 4 made these conversions
   * `private[sql]` (columnNodeSupport.scala); third-party expression
   * libraries conventionally expose them through a package-located shim
-  * like this one. Only the two conversions are exposed — no other
-  * internals leak past this file. */
+  * like this one. The conversions and the few package-private helpers
+  * below are the only Spark internals graft reaches — none leak past
+  * this file. */
 object Bridge {
   def column(e: Expression): Column = ExpressionUtils.column(e)
   def expression(c: Column): Expression = ExpressionUtils.expression(c)
+
+  /** Block until the listener bus has delivered every event posted so
+    * far (Spark's own 10 s limit, then a TimeoutException). Jobs start
+    * synchronously inside an action, so after the action returns this
+    * makes a listener's job, stage and task counts exact. The bus's
+    * `waitUntilEmpty` is `private[spark]`, hence this shim. */
+  def drainListenerBus(sc: org.apache.spark.SparkContext): Unit =
+    sc.listenerBus.waitUntilEmpty()
 
   /** Release the storage blocks behind a `localCheckpoint()`ed frame.
     *

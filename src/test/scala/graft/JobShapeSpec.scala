@@ -1,8 +1,7 @@
 package graft
 
-import java.util.concurrent.atomic.AtomicInteger
-
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+import graft.operators.Stores
+import graft.tools.Profile
 
 /** Pins the round-19/20 absorbed-bootstrap JOB-COUNT cuts so they
   * cannot silently rot: the r19 cut removed whole CLASSES of overhead
@@ -16,7 +15,7 @@ import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
   * re-introducing any class adds jobs in steps of ~2–8; each bound
   * carries headroom for AQE's data-dependent wobble at fixture scale
   * but not for a class coming back. Job counts are deterministic for
-  * a fixed (data, config) — the JobCount tool's standing rationale —
+  * a fixed (data, config) — tools.Profile's standing rationale —
   * and every pin here runs against cold memos and a cold registry
   * exactly like the tool's standalone measurement. Only q187 was
   * pinned in r19; the r19 verdict's ask #3 extends the pin to every
@@ -34,53 +33,30 @@ class JobShapeSpec extends SparkTestBase {
 
   private val dir = "/root/testdata/sf0.001"
 
-  /** First-touch scheduler-job count of `name` against cold memos and
-    * a cold registry, tables pre-resolved (the PlanConstructionSpec
-    * warm-up discipline), listener drained to quiescence. */
-  private def firstTouchJobs(name: String): Int = {
+  /** `name`'s first touch as tools.Profile records it, against cold
+    * store memos and a cold registry, tables pre-resolved (the
+    * PlanConstructionSpec warm-up discipline). */
+  private def firstTouch(name: String): Profile.Touch = {
     CacheRegistry.clear(spark)
-    graft.operators.Similarity.resetDiskIndexMemo()
-    graft.operators.TextDedup.resetDiskDedupMemo()
-    graft.operators.TextDedup.resetDiskAuditMemo()
-    graft.operators.Search.resetDiskSearchMemo()
+    Stores.resetStoreMemos()
     Tables.names.foreach(Tables(spark, dir, _))
-    val jobs = new AtomicInteger
-    val listener = new SparkListener {
-      override def onJobStart(j: SparkListenerJobStart): Unit =
-        jobs.incrementAndGet()
-    }
-    spark.sparkContext.addSparkListener(listener)
-    try {
-      SparkEntry.queries(name)(spark, dir).count()
-      // listener events drain asynchronously — poll until quiet
-      var settled = 0
-      var last = -1
-      while (settled < 4) {
-        Thread.sleep(250)
-        val now = jobs.get
-        if (now == last) settled += 1 else { settled = 0; last = now }
-      }
-      jobs.get
-    } finally {
-      spark.sparkContext.removeSparkListener(listener)
+    try Profile.touch(spark, dir, name)
+    finally {
       CacheRegistry.clear(spark)
-      graft.operators.Similarity.resetDiskIndexMemo()
-      graft.operators.TextDedup.resetDiskDedupMemo()
-      graft.operators.TextDedup.resetDiskAuditMemo()
-      graft.operators.Search.resetDiskSearchMemo()
+      Stores.resetStoreMemos()
     }
   }
 
   private def pin(name: String, bound: Int, rationale: String): Unit =
     test(s"$name first-touch schedules at most $bound jobs " +
         s"($rationale)") {
-      val n = firstTouchJobs(name)
+      val n = firstTouch(name).jobs.size
       info(s"$name first-touch jobs: $n")
       assert(n <= bound,
         s"$name first-touch scheduled $n jobs (bound $bound) — an " +
           "overhead-job class (schema-inference read, tiny-bootstrap " +
           "broadcast, separate stats/bounds aggregate) likely " +
-          s"regressed; run tools.JobTrace $name to name the new jobs")
+          s"regressed; run tools.Profile $name to name the new jobs")
     }
 
   pin("q187_coord_takedown", 33,
@@ -108,4 +84,16 @@ class JobShapeSpec extends SparkTestBase {
   pin("q134_session_cooccurrence", 8,
     "the r20-traced floor: cache build + pair join + top-k; one-split " +
       "events drop the exchanges above the scan, 13 → 8 here")
+
+  // AQE stage and broadcast jobs run on pool threads whose own call
+  // site is `withThreadLocalCaptured at CompletableFuture.java`; the
+  // profile must still name the query action that owns each of them
+  test("q188 first touch: every job is labelled by its owning action, " +
+      "none only by CompletableFuture") {
+    val jobs = firstTouch("q188_disk_lsh_audit").jobs
+    jobs.foreach(j => info(s"job ${j.id} exec=${j.execution} ${j.label}"))
+    val unowned = jobs.filter(_.label.contains("CompletableFuture"))
+    assert(jobs.nonEmpty && unowned.isEmpty,
+      s"jobs labelled only by their pool thread: ${unowned.mkString("; ")}")
+  }
 }

@@ -3,6 +3,7 @@ package graft
 import java.util.concurrent.ConcurrentHashMap
 
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+import org.apache.spark.sql.graft.Bridge
 
 /** Pins the rule QueryDef documents: query CONSTRUCTORS are plan
   * definitions, not executions — building a plan launches no Spark
@@ -101,10 +102,7 @@ class PlanConstructionSpec extends SparkTestBase {
     // discipline): a store built by an earlier suite in the same
     // session would memo-hit here and skip its build jobs, flipping
     // the eager set's exact-equality pin on suite order
-    graft.operators.Similarity.resetDiskIndexMemo()
-    graft.operators.TextDedup.resetDiskDedupMemo()
-    graft.operators.TextDedup.resetDiskAuditMemo()
-    graft.operators.Search.resetDiskSearchMemo()
+    graft.operators.Stores.resetStoreMemos()
     val bc = graft.operators.TextDedup.BranchConf
     spark.conf.set(bc, "count")
     // pin the LM broadcast branch the same way: auto's one-time doc
@@ -119,14 +117,8 @@ class PlanConstructionSpec extends SparkTestBase {
       }
       sc.setLocalProperty(TagProp, null)
       // jobs start synchronously inside the constructors; listener
-      // delivery is async — poll until the count quiesces
-      var prev = -1
-      var same = 0
-      while (same < 3) {
-        val now = jobsByQuery.values().stream().mapToInt(_.intValue).sum
-        if (now == prev) same += 1 else { same = 0; prev = now }
-        Thread.sleep(200)
-      }
+      // delivery is async
+      Bridge.drainListenerBus(sc)
     } finally {
       spark.conf.unset(bc)
       spark.conf.unset(lmc)

@@ -4,6 +4,7 @@ import java.util.concurrent.atomic.AtomicInteger
 
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graft.Bridge
 
 import graft.{Graft, SparkTestBase}
 
@@ -19,7 +20,7 @@ class StoreLifecycleSpec extends SparkTestBase {
     java.nio.file.Files.createTempDirectory(prefix).toString
 
   /** Scheduler jobs started in job group `group` while `body` runs,
-    * with the listener bus drained to quiescence afterwards. */
+    * with the listener bus drained afterwards. */
   private def jobsIn(group: String)(body: => Unit): Int = {
     val jobs = new AtomicInteger
     val listener = new SparkListener {
@@ -32,13 +33,7 @@ class StoreLifecycleSpec extends SparkTestBase {
     try {
       spark.sparkContext.setJobGroup(group, group)
       try body finally spark.sparkContext.clearJobGroup()
-      var settled = 0
-      var last = -1
-      while (settled < 4) {
-        Thread.sleep(250)
-        val now = jobs.get
-        if (now == last) settled += 1 else { settled = 0; last = now }
-      }
+      Bridge.drainListenerBus(spark.sparkContext)
       jobs.get
     } finally spark.sparkContext.removeSparkListener(listener)
   }

@@ -247,7 +247,7 @@ object Graft {
     * `textCol`) frame: word-3-gram shingles → 8-hash MinHash → 4×2
     * banding → distinct (doc_i, doc_j), doc_i < doc_j, ids sharing ≥1
     * band. Candidates are density-bound, never all-pairs (measured
-    * ~linear in tools.ScaleProbe); verify survivors with an exact
+    * near-linear in GrowthLawSpec); verify survivors with an exact
     * measure after. Docs with <3 words are dropped. Same definitions
     * as the q41/q44/q117 pipeline — plus per-bucket pair-space tiling
     * by default (a mass-duplicated boilerplate doc would otherwise
@@ -257,8 +257,8 @@ object Graft {
     * Long.MaxValue at broadcastable (small-corpus) scale to pin the
     * untiled broadcast-friendly plan — measured fastest there, while
     * the tiled default is the only variant that does not serialize at
-    * the scale past broadcasting (tools.SkewProbe numbers in
-    * BASELINE.md). See [[operators.TextDedup.minhashCandidatePairs]]. */
+    * the scale past broadcasting (GrowthLawSpec pins the tiled task
+    * share). See [[operators.TextDedup.minhashCandidatePairs]]. */
   def minhashCandidatePairs(docs: DataFrame, idCol: String,
       textCol: String,
       tilePairs: Long = operators.Similarity.AutoSaltTilePairs): DataFrame =
@@ -295,7 +295,7 @@ object Graft {
     * when its cosine to ANY earlier (lower id) vector of the same
     * cluster reaches `threshold`. Returns (vec_id, cluster,
     * max_prior_sim, keep). `k` grows with the corpus to hold |cluster|
-    * flat (measured in tools.ScaleProbe); the pair join's shuffle key
+    * flat (pinned in GrowthLawSpec); the pair join's shuffle key
     * is the cluster id. q161 is this at k=8.
     * See [[operators.Similarity.semDedup]]. */
   def semDedup(df: DataFrame, idCol: String, vecCol: String, k: Int,

@@ -13,9 +13,8 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * oracles cast back to BIGINT; `year()`/`length()` return BIGINT, cast to
   * INTEGER; `date_trunc('month', ts)` returns DATE, cast to TIMESTAMP).
   *
-  * Queries without a SQL-expressible oracle (streaming, approximate
-  * sketches) set `oracle = None`; the driver then records a weaker
-  * rows-only check.
+  * Every query carries an oracle; the field stays an `Option` because
+  * `SparkEntry.oracleSql` reads it as one.
   *
   * STANDING RULE — constructors define plans, they do not execute:
   * `fn(spark, dir)` must launch ZERO Spark jobs (no `.head()`,
@@ -26,8 +25,10 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * conf gate whose branches consume identical cache keys (the
   * jaccard-pairs probe, `TextDedup.BranchConf`, is the pattern).
   * `PlanConstructionSpec` enforces this, with the eager-by-design
-  * exceptions (q109 connector write, q110 ANALYZE, and the three
-  * iterative materializers q89/q121/q135) pinned exactly there.
+  * exceptions pinned exactly there: q109 (connector write), q110
+  * (ANALYZE), the iterative materializers q121, q135 and q173, and the
+  * disk-store queries q117 and q182–q187, whose first construction
+  * builds their store.
   */
 final case class QueryDef(
     name: String,
@@ -38,8 +39,4 @@ object QueryDef {
   def apply(name: String, oracle: String)(
       fn: (SparkSession, String) => DataFrame): QueryDef =
     QueryDef(name, fn, Some(oracle))
-
-  def noOracle(name: String)(
-      fn: (SparkSession, String) => DataFrame): QueryDef =
-    QueryDef(name, fn, None)
 }

@@ -43,14 +43,14 @@ object Similarity {
 
   /** Auto-salt clamp: tiles are task-parallelism, not asymptotics —
     * past a few× the core count more salt only buys build-side
-    * replication (the same reasoning as ScaleProbe's manual cap 16,
-    * with headroom for bigger executor fleets). */
+    * replication (the reasoning behind the old manual cap of 16, with
+    * headroom for bigger executor fleets; see GrowthLawSpec's tiling). */
   private[graft] val AutoSaltMax = 64
 
   /** Shared physical discipline of every SALTED pair join — the ONE
     * definition both `lshNearDupPairs` (bucket, __h) and
     * `TextDedup.bandedPairsTiled` (band, bv, __h) call, written after
-    * tools.SkewProbe measured both failure modes on the minhash twin:
+    * GrowthLawSpec's wall-clock forerunner measured both failure modes:
     * (a) the probe side repartitions by the full tile key with an
     * EXPLICIT count — a bare repartition is advisory, and AQE's
     * byte-based coalescing merges byte-LIGHT tiles straight back onto
@@ -144,8 +144,8 @@ object Similarity {
     *    hold MEAN occupancy flat (recall is the documented tradeoff).
     *  - `salt` vs bucket SKEW: similar vectors co-bucket BY DESIGN, so
     *    a dense cluster defeats the occupancy math no matter how many
-    *    planes (measured in tools.ScaleProbe at 30×: max bucket 17% of
-    *    the corpus, and 16× more buckets only halved Σ|bucket|²) — and
+    *    planes (GrowthLawSpec: the max bucket grows at α 0.80 with the
+    *    planes scaled; 16× more buckets only halved Σ|bucket|²) — and
     *    one hot bucket serializes its whole |b|² pair space on one
     *    task. Salting splits each bucket's pair space into salt×salt
     *    tiles — (a-replica, b-hash) becomes part of the shuffle key —
@@ -231,8 +231,8 @@ object Similarity {
     * max_prior_sim, keep), unordered.
     *
     * `k` is THE scale knob: the pair join costs Σ|C|², so K grows with
-    * the corpus to hold |C| fixed (the growth law tools.ScaleProbe
-    * measures); the join's shuffle key IS the cluster id. q161 is this
+    * the corpus to hold |C| fixed (the growth law GrowthLawSpec
+    * pins); the join's shuffle key IS the cluster id. q161 is this
     * at k=8 with its DuckDB oracle. */
   private[graft] def semDedup(vs: DataFrame, k: Int,
       threshold: Double): DataFrame = {
@@ -602,7 +602,7 @@ object Similarity {
     * (session, dir) — if the parquet under `dir` is rewritten, release
     * the index (`CacheRegistry.releaseByPrefix(s, "pq-enc")`, likewise
     * "ivf-cell") alongside `Tables.invalidate`, or the next search
-    * serves encodings of the dead corpus. ScaleProbe's per-multiplier
+    * serves encodings of the dead corpus. GrowthLawSpec's per-multiplier
     * `CacheRegistry.clear` is the working example. */
   private[graft] def pqEncodings(s: SparkSession, dir: String): DataFrame =
     CacheRegistry.cached(s, s"pq-enc:$dir") {

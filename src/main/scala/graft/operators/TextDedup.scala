@@ -130,8 +130,8 @@ object TextDedup {
     * registry signature cache, exactly what [[lshCandidatePairs]]'s
     * cache body built before the store rewiring. The store build
     * ([[diskAuditDir]]) and the store-fed ≡ chain specs call this; the
-    * growth probe (tools.ScaleProbe `minhash_banded`) measures it so
-    * the recorded law stays the JOIN's law, not build+write. */
+    * `minhash_banded` law of GrowthLawSpec counts its candidates so
+    * the pinned law stays the JOIN's law, not build+write. */
   private[graft] def chainCandidatePairs(s: SparkSession,
       dir: String): DataFrame =
     bandedPairsOf(bandsOf(signatures(s, dir)))
@@ -164,8 +164,8 @@ object TextDedup {
     * (spec-pinned, forced multi-tile included) — pure physical
     * parallelism, cold buckets pay zero replication.
     *
-    * MEASURED tradeoff (tools.SkewProbe, 60k docs + a 10k-copy
-    * boilerplate bucket, quiet round): tiled 23 s vs untiled-SMJ 72 s
+    * MEASURED tradeoff (wall clock, before GrowthLawSpec; 60k docs + a
+    * 10k-copy boilerplate bucket): tiled 23 s vs untiled-SMJ 72 s
     * (the non-broadcastable regime — the tiling's 3–5× win) vs
     * untiled-BROADCAST 5 s (at broadcastable scale, BHJ parallelism
     * follows the probe's input partitioning and the hot bucket spreads
@@ -228,8 +228,8 @@ object TextDedup {
     * bucket's whole pair space on one task; `tilePairs` is the per-tile
     * pair budget, result-identical at any value — pass Long.MaxValue
     * to pin the untiled physical plan). Candidate count is
-    * near-dup-density-bound, not corpus-bound (growth measured ~linear
-    * in tools.ScaleProbe).
+    * near-dup-density-bound, not corpus-bound (GrowthLawSpec pins its
+    * growth near-linear).
     * Verify survivors with an exact measure (q42's Jaccard) after. */
   private[graft] def minhashCandidatePairs(docs: DataFrame, idCol: String,
       textCol: String,

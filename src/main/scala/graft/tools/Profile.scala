@@ -42,19 +42,28 @@ object Profile {
   final case class Job(id: Int, stages: Int, execution: Option[Long],
       label: String)
 
-  /** What one construct-and-count of a query scheduled. */
+  /** What one measured body scheduled and moved. Input records count
+    * file rows exactly and a cached block's columnar batches; input
+    * bytes count a cached block's whole size but miss most of a Parquet
+    * scan. `maxTaskShuffleWritten` is the busiest task's shuffle
+    * output, which carries the pairs a pair-join task produced. */
   final case class Touch(jobs: Seq[Job], stages: Int, tasks: Int,
-      taskSeconds: Double, wallSeconds: Double)
+      taskSeconds: Double, wallSeconds: Double, inputBytes: Long,
+      inputRecords: Long, shuffleRecords: Long, maxTaskShuffleWritten: Long)
 
-  /** Construct `name` over `sfDir` and count it, recording every job,
-    * completed stage and task started meanwhile; the listener bus is
+  /** Construct `name` over `sfDir` and count it. */
+  def touch(spark: SparkSession, sfDir: String, name: String): Touch =
+    measure(spark)(SparkEntry.queries(name)(spark, sfDir).count())._2
+
+  /** Run `body`, recording every job, completed stage and task started
+    * meanwhile with its input and shuffle counts; the listener bus is
     * drained before the records are read. */
-  def touch(spark: SparkSession, sfDir: String, name: String): Touch = {
+  def measure[A](spark: SparkSession)(body: => A): (A, Touch) = {
     val jobs = new ConcurrentLinkedQueue[SparkListenerJobStart]()
     val executions = new ConcurrentHashMap[Long, String]()
     val stages = new AtomicInteger
     val tasks = new AtomicInteger
-    val taskMs = new AtomicLong
+    val taskMs, inBytes, inRecords, shRecords, shWMax = new AtomicLong
     val listener = new SparkListener {
       override def onJobStart(j: SparkListenerJobStart): Unit = jobs.add(j)
       override def onStageCompleted(s: SparkListenerStageCompleted): Unit =
@@ -62,6 +71,13 @@ object Profile {
       override def onTaskEnd(t: SparkListenerTaskEnd): Unit = {
         tasks.incrementAndGet()
         if (t.taskInfo != null) taskMs.addAndGet(t.taskInfo.duration)
+        Option(t.taskMetrics).foreach { m =>
+          inBytes.addAndGet(m.inputMetrics.bytesRead)
+          inRecords.addAndGet(m.inputMetrics.recordsRead)
+          shRecords.addAndGet(m.shuffleReadMetrics.recordsRead)
+          shWMax.accumulateAndGet(
+            m.shuffleWriteMetrics.recordsWritten, math.max)
+        }
       }
       override def onOtherEvent(e: SparkListenerEvent): Unit = e match {
         case s: SparkListenerSQLExecutionStart =>
@@ -71,12 +87,12 @@ object Profile {
     }
     val sc = spark.sparkContext
     sc.addSparkListener(listener)
-    val wall = try {
+    val (result, wall) = try {
       val t0 = System.nanoTime()
-      SparkEntry.queries(name)(spark, sfDir).count()
+      val r = body
       val dt = (System.nanoTime() - t0) / 1e9
       Bridge.drainListenerBus(sc)
-      dt
+      (r, dt)
     } finally sc.removeSparkListener(listener)
     val records = jobs.asScala.toSeq.sortBy(_.jobId).map { j =>
       val exec = Option(j.properties)
@@ -86,7 +102,8 @@ object Profile {
         j.stageInfos.map(_.name.takeWhile(_ != '\n')).distinct.mkString(" | "))
       Job(j.jobId, j.stageInfos.size, exec, label)
     }
-    Touch(records, stages.get, tasks.get, taskMs.get / 1000.0, wall)
+    (result, Touch(records, stages.get, tasks.get, taskMs.get / 1000.0, wall,
+      inBytes.get, inRecords.get, shRecords.get, shWMax.get))
   }
 
   def main(args: Array[String]): Unit = {

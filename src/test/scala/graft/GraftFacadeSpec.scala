@@ -539,7 +539,7 @@ class GraftFacadeSpec extends SparkTestBase {
       sc.setLocalProperty(key, "1")
       SparkEntry.queries("q42_jaccard_pairs")(spark, "/root/testdata/sf0.001")
       sc.setLocalProperty(key, null)
-      Thread.sleep(800) // listener delivery is async
+      org.apache.spark.sql.graft.Bridge.drainListenerBus(sc)
       assert(tagged.get == 0, "pinned branch must construct without jobs")
     } finally {
       sc.setLocalProperty(key, null)

@@ -2,33 +2,33 @@ package graft.tools
 
 import org.apache.spark.sql.functions._
 
-import graft.SparkTestBase
+import graft.{Replicas, SparkTestBase}
 
-/** Pins the ScaleProbe GENERATOR invariants the BASELINE.md growth
-  * table's methodology rests on. If a generator edit silently broke
-  * replica decorrelation, the measured "near-linear" exponents would
-  * be an artifact (correlated replicas = quadratic cross-replica dup
-  * mass); these properties make that a build failure instead. */
+/** Pins the [[graft.Replicas]] generator invariants GrowthLawSpec's
+  * laws rest on. If a generator edit silently broke replica
+  * decorrelation, the measured "near-linear" exponents would be an
+  * artifact (correlated replicas = quadratic cross-replica dup mass);
+  * these properties make that a build failure instead. */
 class ScaleProbeSpec extends SparkTestBase {
   import spark.implicits._
 
   private val sf = "/root/testdata/sf0.001"
 
   test("signFlips: deterministic, ±1-valued, identity at replica 0") {
-    assert(ScaleProbe.signFlips(0, 8) == Seq.fill(8)(1f))
-    val a = ScaleProbe.signFlips(3, 64)
-    assert(a == ScaleProbe.signFlips(3, 64), "rerun must reproduce")
+    assert(Replicas.signFlips(0, 8) == Seq.fill(8)(1f))
+    val a = Replicas.signFlips(3, 64)
+    assert(a == Replicas.signFlips(3, 64), "rerun must reproduce")
     assert(a.forall(v => v == 1f || v == -1f))
     assert(a.contains(-1f) && a.contains(1f),
       "a replica pattern must actually mix signs")
-    assert(a != ScaleProbe.signFlips(4, 64),
+    assert(a != Replicas.signFlips(4, 64),
       "different replicas must get different patterns")
   }
 
   test("scaledEmbeddings: sign flip is an exact isometry per replica") {
     val base = graft.Tables(spark, sf, "embeddings")
       .select(col("vec_id"), col("embedding"))
-    val scaled = ScaleProbe.scaledEmbeddings(spark, sf, 2)
+    val scaled = Replicas.scaledEmbeddings(spark, sf, 2)
     assert(scaled.count() == 2 * base.count())
     // intra-replica dot products are preserved BIT-exactly (multiplying
     // by ±1 is exact in IEEE float): compare the replica-1 copy of each
@@ -53,7 +53,7 @@ class ScaleProbeSpec extends SparkTestBase {
   }
 
   test("scaledDocuments: replicas share ZERO tokens; lengths recomputed") {
-    val scaled = ScaleProbe.scaledDocuments(spark, sf, 2)
+    val scaled = Replicas.scaledDocuments(spark, sf, 2)
     val toks = scaled
       .select((col("doc_id") >= 1000000000L).as("rep"),
         explode(split(col("text"), " ")).as("t"))
@@ -66,29 +66,8 @@ class ScaleProbeSpec extends SparkTestBase {
       =!= col("n_chars"))
     assert(bad.count() == 0, "n_chars must match the rewritten text")
     // determinism: same multiplier twice → identical frames
-    val again = ScaleProbe.scaledDocuments(spark, sf, 2)
+    val again = Replicas.scaledDocuments(spark, sf, 2)
     assert(scaled.exceptAll(again).count() == 0
       && again.exceptAll(scaled).count() == 0)
-  }
-
-  test("build-inclusive pq rows release the WHOLE materialized index") {
-    // the probe's dropIndex must release every registry frame the ANN
-    // serving index comprises, or the "build-inclusive" pq rows would
-    // silently ride a resident piece of it and stop being comparable
-    // with the r12/r13 tables (which re-derived everything inline) —
-    // the exact gap the r14 pq-book/ivf-cent model caches opened until
-    // reviewed. That set is, by the release-ledger's own derivation,
-    // the prefixes whose LAST bench consumers are the final ANN
-    // queries in sorted run order — q181 (recall audit: pq-enc,
-    // ivf-cell) and q187 (whose coordinated store build reads the
-    // pq-book/ivf-cent model frames for its initial ANN write, making
-    // it the model frames' last consumer since it sorts after q182);
-    // BenchReleaseSpec drift-gates releaseAfter against the real query
-    // definitions, so a future ANN cache lands there first and this
-    // equality then forces the probe to follow.
-    assert(ScaleProbe.AnnIndexPrefixes.toSet ==
-      (graft.Bench.releaseAfter("q181_ann_recall") ++
-        graft.Bench.releaseAfter("q187_coord_takedown")).toSet,
-      "ScaleProbe.AnnIndexPrefixes must track the ANN release set")
   }
 }

@@ -40,22 +40,18 @@ object Bench {
     * registry's access hook armed. Plan construction launches no Spark
     * jobs outside the eager-by-design constructors pinned (exactly) in
     * PlanConstructionSpec (connector write, ANALYZE, the three
-    * iterative materializers, the on-disk store builds+probes): the
-    * one data-adaptive constructor — the
-    * jaccard-pairs branch probe — is pinned to its `count` branch here
-    * via [[graft.operators.TextDedup.BranchConf]], which is
-    * lifecycle-safe because both branches consume the same cached
-    * inputs (also spec-pinned). Bench itself does NOT call this
-    * (a pre-pass would move cache builds out of the timed sections and
-    * silently change the methodology BASELINE.md records).
+    * iterative materializers, the on-disk store builds+probes), and
+    * the replay runs the same `auto` plans Bench runs: no session conf
+    * is set. Bench itself does NOT call this (a pre-pass would move
+    * cache builds out of the timed sections and silently change the
+    * methodology BASELINE.md records).
     *
     * Scale-invariance assumption: the derivation replays at whatever
     * `sfDir` the caller passes (the spec uses sf0.001) while Bench runs
     * at sf0.1 — valid because no query's set of `cached` KEYS depends
-    * on the data (the only data-dependent plan branch is the jaccard
-    * probe, whose branches share their cache keys). A future query
-    * whose cache accesses vary with scale would break this silently;
-    * keep data-dependent branching behind key-invariant gates. */
+    * on the data. The data-dependent choices (the jaccard-pairs probe,
+    * the LM broadcast rule) pick between branches that read no
+    * registry key; keep any future one the same way (QueryDef). */
   private[graft] def deriveReleasePlan(
       spark: SparkSession, sfDir: String): Map[String, Seq[String]] =
     replayAccesses(spark, sfDir).toMap.toSeq.groupBy(_._2).map {
@@ -67,8 +63,8 @@ object Bench {
     * ([[releaseAfter]] is the release half). HAND-PASTED from
     * `tools.ReleasePlan` output; `BenchReleaseSpec` re-derives it via
     * [[deriveFirstConsumers]] and fails on drift, so the attribution
-    * table BASELINE.md records (the r13 verdict's ask #2) can never
-    * silently rot when the inventory changes. */
+    * (the r13 verdict's ask #2) can never silently rot when the
+    * inventory changes. */
   private[graft] val buildAbsorbers: Map[String, String] = Map(
     "bm25" -> "q115_bm25_topk",
     "cms-hashed" -> "q126_countmin_audit",
@@ -114,9 +110,9 @@ object Bench {
     * this records first access during PLAN CONSTRUCTION; a query whose
     * action materializes only part of the persisted frame (e.g. a
     * plan whose limit stops after one cache partition) can defer the
-    * rest of the build cost to the NEXT consumer — so the quiet
-    * per-query medians BASELINE.md records alongside this table are
-    * the runtime confirmation, and the two together let a per-query
+    * rest of the build cost to the NEXT consumer — so a per-query
+    * timing (tools.Profile's first touch and second run) is the
+    * runtime confirmation, and the two together let a per-query
     * driver delta be classified as (cache attribution | wio tide |
     * real regression) from the repo alone. */
   private[graft] def deriveFirstConsumers(
@@ -126,32 +122,23 @@ object Bench {
   /** The ledger replay both derivations fold over: construct every
     * query's plan in Bench's sorted order with the registry's access
     * hook armed, and return each access as (key prefix, query) in
-    * access order. The jaccard branch and the LM broadcast branch are
-    * pinned for the replay and restored after. The store memos start
-    * cold: in the bench JVM q182 builds the ANN index (touching the
-    * model-frame caches) and q183 memo-hits, so a warm memo would skip
-    * the build and derive a different (wrong) consumer for
-    * pq-book/ivf-cent, and the q182/q184 index builds must derive as
-    * q182/q184 themselves. */
+    * access order. The store memos start cold: in the bench JVM q182
+    * builds the ANN index (touching the model-frame caches) and q183
+    * memo-hits, so a warm memo would skip the build and derive a
+    * different (wrong) consumer for pq-book/ivf-cent, and the q182/q184
+    * index builds must derive as q182/q184 themselves. */
   private def replayAccesses(
       spark: SparkSession, sfDir: String): Seq[(String, String)] = {
     val accesses = scala.collection.mutable.ArrayBuffer[(String, String)]()
     var current = ""
-    val pins = Seq(graft.operators.TextDedup.BranchConf -> "count",
-      graft.operators.Curation.LmBroadcastConf -> "on")
-    val prev = pins.map { case (k, _) => k -> spark.conf.getOption(k) }
-    pins.foreach { case (k, v) => spark.conf.set(k, v) }
     graft.operators.Stores.resetStoreMemos()
     val hook: String => Unit = k =>
       accesses.synchronized { accesses += k.takeWhile(_ != ':') -> current }
-    try CacheRegistry.withAccessHook(hook) {
+    CacheRegistry.withAccessHook(hook) {
       SparkEntry.queries.toSeq.sortBy(_._1).foreach { case (name, fn) =>
         current = name
         fn(spark, sfDir)
       }
-    } finally prev.foreach {
-      case (k, Some(v)) => spark.conf.set(k, v)
-      case (k, None) => spark.conf.unset(k)
     }
     accesses.toSeq
   }
@@ -272,44 +259,15 @@ object Bench {
     // build + signature digest (signatures derive from the shared shingle
     // cache), q42 pays the jaccard-pairs join, q43/q44/q89/q92 ride the
     // caches; q45 pays the normalized-embedding cache build.
-    //
-    // SPARK_GRAFT_BENCH_ORDER is the r15-verdict order-dependence
-    // instrument for the driver-only q134–q138 segment inflation:
-    // `reverse` / `shuffled[:seed]` re-run the SAME inventory in a
-    // different position order, so a slowdown that follows the QUERY
-    // separates from one that follows its POSITION in the run (box
-    // state ~50 queries in). Diagnostic-only: a non-sorted order breaks
-    // the releaseAfter attribution (frames release after their
-    // SORTED-order last consumer, so earlier consumers in the new order
-    // rebuild them) — totals are incomparable with the anchor and the
-    // line carries an "order" tag so it can never be read as a judged
-    // run. The driver sets no env ⇒ judged runs stay sorted.
-    val orderTag = sys.env.getOrElse("SPARK_GRAFT_BENCH_ORDER", "sorted")
-    val sortedQ = SparkEntry.queries.toSeq.sortBy(_._1)
-    val ordered = orderTag match {
-      case "sorted" => sortedQ
-      case "reverse" => sortedQ.reverse
-      case s if s == "shuffled" || s.startsWith("shuffled:") =>
-        // guarded parse: a malformed seed gets the same descriptive
-        // error as an unknown order value, not a bare NumberFormat
-        val seed = s.split(":", 2).lift(1) match {
-          case None => 16L
-          case Some(raw) => scala.util.Try(raw.toLong).getOrElse(
-            throw new IllegalArgumentException(
-              s"SPARK_GRAFT_BENCH_ORDER='$s' — want sorted|reverse|shuffled[:seed]"))
-        }
-        new scala.util.Random(seed).shuffle(sortedQ)
-      case other => throw new IllegalArgumentException(
-        s"SPARK_GRAFT_BENCH_ORDER='$other' — want sorted|reverse|shuffled[:seed]")
-    }
+    val ordered = SparkEntry.queries.toSeq.sortBy(_._1)
     // Mid-inventory marker pair (r15 verdict ask #1): the pre/post
     // probes bracket the whole run, but the driver-only q134–q138
     // inflation needs the box state AT THE SEGMENT — re-run both probes
-    // immediately before q134's timed section (wherever the order puts
-    // it). Outside any timed section, so the judged total is untouched;
-    // ~24 chars on the line. Reading: wum/wiom ≈ wu/wio with q134 still
-    // inflated ⇒ the segment itself; wum/wiom elevated ⇒ ambient drift
-    // reached the segment's position first.
+    // immediately before q134's timed section. Outside any timed
+    // section, so the judged total is untouched; ~24 chars on the
+    // line. Reading: wum/wiom ≈ wu/wio with q134 still inflated ⇒ the
+    // segment itself; wum/wiom elevated ⇒ ambient drift reached the
+    // segment's position first.
     var wum = -1.0
     var wiom = -1.0
     // Late marker pair (r17 verdict ask #1c): the "sixth sighting"
@@ -343,10 +301,9 @@ object Bench {
     val wio2 = wioProbe()
     println(renderJson(results, wu, wio, wu2, wio2,
       new java.io.File(sfDir).getName,
-      compact = compactFromEnv(sys.env),
+      compact = true,
       mid = if (wum >= 0) Some((wum, wiom)) else None,
-      late = if (wul >= 0) Some((wul, wiol)) else None,
-      orderTag = orderTag))
+      late = if (wul >= 0) Some((wul, wiol)) else None))
     spark.stop()
   }
 
@@ -400,9 +357,7 @@ object Bench {
     * `"failed":[]` key is dropped when EMPTY (absent ⇒ pass; a
     * non-empty list still always renders — failures stay loud). The
     * judged TOTAL and the four markers keep 2-decimal seconds
-    * unchanged. Opt-out only (env SPARK_GRAFT_BENCH_COMPACT=0 restores
-    * the legacy seconds render — the driver sets no env, so the code
-    * default is the format the driver sees);
+    * unchanged. `main` always renders compact;
     * BenchJsonSpec pins the compact worst-case width and
     * round-trips both formats, so flipping the flag is a decision,
     * not an emergency. Compact mode emits whichever render is SHORTER:
@@ -410,26 +365,16 @@ object Bench {
     * ("126" vs "13"), so a slow-regime line falls back to the default
     * render (absent "u" key ⇒ seconds) rather than blowing the tail
     * window in the one regime the contingency exists for. */
-  /** Compact render is the DEFAULT (round 15): the driver launches
-    * Bench with no env of ours, so an env-opt-IN flag could never fire
-    * on the judged run. `SPARK_GRAFT_BENCH_COMPACT=0` restores the
-    * legacy seconds render for side-by-side format checks. */
-  private[graft] def compactFromEnv(env: Map[String, String]): Boolean =
-    !env.get("SPARK_GRAFT_BENCH_COMPACT").contains("0")
-
   /** `mid` is the optional mid-inventory marker pair (wum, wiom) —
     * the same two probes re-run right before [[MidMarkerQuery]]'s timed
     * section; `late` the pair (wul, wiol) before [[LateMarkerQuery]]'s
-    * (the disk-tail bracket); `orderTag` != "sorted" renders an
-    * explicit "order" key so a diagnostic reordered run can never be
-    * mistaken for a judged (sorted, anchor-comparable) line. */
+    * (the disk-tail bracket). */
   private[graft] def renderJson(
       results: Seq[(String, Double, Boolean)], wu: Double, wio: Double,
       wu2: Double, wio2: Double, sfBasename: String,
       compact: Boolean = false,
       mid: Option[(Double, Double)] = None,
-      late: Option[(Double, Double)] = None,
-      orderTag: String = "sorted"): String = {
+      late: Option[(Double, Double)] = None): String = {
     // Locale.ROOT: a default locale with decimal COMMAS would render
     // {"value":12,34,...} — invalid JSON, the r01–r03 dead-bench mode
     def fmt(p: String, v: Double): String =
@@ -472,9 +417,7 @@ object Bench {
         s""","wum":${fm(wum)},"wiom":${fm(wiom)}""" } +
         late.fold("") { case (wul, wiol) =>
           s""","wul":${fm(wul)},"wiol":${fm(wiol)}""" }
-      val orderKey =
-        if (orderTag == "sorted") "" else s""","order":"$orderTag""""
-      s"""{"metric":"total","value":${f(total)},"wu":${fm(wu)},"wio":${fm(wio)},"wu2":${fm(wu2)},"wio2":${fm(wio2)}$midKeys$orderKey$unit,"queries":$qs$failed,"sf":$sfJson}"""
+      s"""{"metric":"total","value":${f(total)},"wu":${fm(wu)},"wio":${fm(wio)},"wu2":${fm(wu2)},"wio2":${fm(wio2)}$midKeys$unit,"queries":$qs$failed,"sf":$sfJson}"""
     }
     if (!compact) render(ds = false)
     else {

@@ -1024,16 +1024,6 @@ object Graft {
       df: DataFrame, idCol: String, vecCol: String): DataFrame =
     operators.Similarity.int8CodedVectors(df, idCol, vecCol)
 
-  /** Conf key gating the adaptive exact-Jaccard pair strategy behind
-    * q42/q89 ("count" | "prefix" | "auto"). CONTRACT: `auto` (the
-    * default) is construction-EAGER — it runs a one-row shingle-df
-    * stats job at PLAN-CONSTRUCTION time to pick the branch, the only
-    * constructor-time Spark job in the library (deliberate: the choice
-    * is data-dependent by design). Pin "count" or "prefix" before
-    * building plans in contexts that must stay job-free until the
-    * first action (release planning, plan audits, dry runs). */
-  val jaccardBranchConf: String = operators.TextDedup.BranchConf
-
   /** Codegen'd vector math over ARRAY<DOUBLE> columns: dot, norm,
     * cosine (fused native expression), LSH bucketing. See
     * [[functions.VectorFunctions]]. */

@@ -21,9 +21,11 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * `.count()`, `.collect()`, eager writes). `Bench.deriveReleasePlan`,
   * the release-plan spec, and plan audits all replay construction and
   * rely on it being free; a constructor-time job also blurs Bench's
-  * timed/untimed boundary. Data-dependent plan choices go behind a
-  * conf gate whose branches consume identical cache keys (the
-  * jaccard-pairs probe, `TextDedup.BranchConf`, is the pattern).
+  * timed/untimed boundary. A data-dependent plan choice comes from
+  * what construction observes without a job (a relation's planned
+  * size, a store's manifest) or runs inside an eager-by-design build,
+  * and its branches share their cache keys (the LM broadcast rule,
+  * `Curation.lmBroadcasts`, is the pattern).
   * `PlanConstructionSpec` enforces this, with the eager-by-design
   * exceptions pinned exactly there: q109 (connector write), q110
   * (ANALYZE), the iterative materializers q121, q135 and q173, and the

@@ -37,44 +37,23 @@ object Curation {
   private def T(s: SparkSession, dir: String, n: String): DataFrame =
     Tables(s, dir, n)
 
-  /** Conf gating the broadcast hint on VOCAB-SIZED LM model frames
-    * (q103's freq table, q105's global counts, q138's bigram model,
-    * q164's class-conditional counts, q165's dsir-lm): "on" pins the
-    * hint, "off" pins the shuffle join, "auto" (default) gates on a
-    * memoized corpus doc count — the r14 verdict's one `weak` mark was
-    * shipping the hint UNCONDITIONALLY: at sf0.1 the vocab is ~155k
-    * rows and broadcast wins, but an open-web (bi)gram table is not
-    * broadcastable and an unconditional hint becomes an executor OOM,
-    * not a plan choice. Both branches are result-identical
-    * (CurationSpec pins all five queries under "on" vs "off"); the
-    * jaccard BranchConf discipline applied to the LM family. Contexts
-    * that must construct plans job-free (PlanConstructionSpec, the
-    * Bench ledger derivations) pin "on"; neither branch touches the
-    * cache registry, so the derived lifecycle is branch-invariant by
-    * construction. */
-  private[graft] val LmBroadcastConf = "spark.graft.lm.broadcast"
+  /** Broadcast ceiling for the VOCAB-SIZED LM model frames (q103's
+    * freq table, q105's global counts, q138's bigram model, q164's
+    * class-conditional counts, q165's dsir-lm), read against the
+    * planned size of the corpus they are trained on. At sf0.1 the
+    * vocab is ~155k rows and broadcast wins, but an open-web (bi)gram
+    * table is not broadcastable, and an unconditional hint becomes an
+    * executor OOM rather than a plan choice. Vocab grows sublinearly in
+    * docs (Heaps' law), so the corpus size is a proxy that needs no
+    * vocabulary scan. sf0.1's documents.parquet holds ~119 B per doc,
+    * so the ceiling is ~2M docs: a low-million-row vocab, tens of MB
+    * broadcast. Past it the scoring joins shuffle. */
+  private[graft] val LmBroadcastMaxBytes: BigInt = BigInt(238000000L)
 
-  /** Auto-branch threshold: broadcast while the corpus holds at most
-    * this many docs. Vocab grows sublinearly in docs (Heaps' law), so
-    * doc count is a cheap, memoizable proxy for "does the vocab frame
-    * fit an executor" that needs NO vocabulary scan at plan time —
-    * 2M docs ≈ low-million-row vocab ≈ tens of MB broadcast, inside
-    * any sane executor; past it, let the scoring joins shuffle (the
-    * documented fallback, now executable). */
-  private val LmBroadcastMaxDocs = 2000000L
-
-  private val docCounts =
-    new java.util.concurrent.ConcurrentHashMap[String, java.lang.Long]()
-
-  /** Reset the auto-branch doc-count memo (r15 advice): the memo is
-    * per-JVM-lifetime, so a corpus that GROWS under the same dir in a
-    * long-lived session (e.g. streaming ingest) would keep a stale
-    * sub-threshold verdict and broadcast a vocab frame that no longer
-    * fits. Call this alongside `Tables.invalidate` after a corpus
-    * rewrite — or pin [[LmBroadcastConf]] to "off" for sessions over
-    * mutating corpora. The ledger derivations need no reset because
-    * they pin "on" (the memo is never consulted there). */
-  private[graft] def resetLmDocCountMemo(): Unit = docCounts.clear()
+  /** The broadcast rule: whether a corpus of `corpusBytes` planned
+    * bytes ships its LM model frames by broadcast. */
+  private[graft] def lmBroadcasts(corpusBytes: BigInt): Boolean =
+    corpusBytes <= LmBroadcastMaxBytes
 
   /** The (lbl, w, c) class-conditional unigram count frame — THE one
     * corpus-shuffled model build the two corpus-LM classifiers share
@@ -96,21 +75,16 @@ object Curation {
         .agg(sum("tf").as("c"))
     }
 
-  /** Apply the [[LmBroadcastConf]] branch to a vocab-sized model
-    * frame. The auto probe is one memoized metadata-cheap count of the
-    * documents table per (session-lifetime, dir) — never a vocabulary
-    * scan, never a registry access; [[resetLmDocCountMemo]] is the
-    * staleness hook for long-lived sessions over mutating corpora. */
+  /** Hint a vocab-sized model frame by [[lmBroadcasts]] over the
+    * `documents` relation's planned size: the optimizer's statistics
+    * of the file listing, so no Spark job runs and no registry key is
+    * read. Both sides are result-identical (CurationSpec). */
   private def lmHint(s: SparkSession, dir: String,
       model: DataFrame): DataFrame =
-    s.conf.get(LmBroadcastConf, "auto") match {
-      case "on" => broadcast(model)
-      case "off" => model
-      case _ =>
-        val n: Long = docCounts.computeIfAbsent(dir,
-          d => Long.box(T(s, d, "documents").count()))
-        if (n <= LmBroadcastMaxDocs) broadcast(model) else model
-    }
+    if (lmBroadcasts(
+        T(s, dir, "documents").queryExecution.optimizedPlan.stats.sizeInBytes))
+      broadcast(model)
+    else model
 
   /** Probability-proportional-to-size systematic sample of ≤ `n` rows:
     * rows are laid on a line in md5(`idCol`)-shuffled order, each
@@ -368,10 +342,9 @@ object Curation {
         .select(col("doc_id"), explode(split(col("text"), " ")).as("t"))
       val f = tok.groupBy("t").agg(count(lit(1)).as("c"))
       val n = f.agg(sum("c").as("total"))
-      // size-gated hint (LmBroadcastConf): broadcast while the vocab
-      // fits an executor (any capped/BPE vocab, or auto's doc-count
-      // gate); open-web raw-token vocabs take the shuffle branch —
-      // both branches result-identical, spec-pinned
+      // size-gated hint (lmHint): broadcast while the corpus plans
+      // under LmBroadcastMaxBytes; past it the join shuffles — both
+      // sides result-identical, spec-pinned
       tok.join(lmHint(s, dir, f), Seq("t"))
         .crossJoin(broadcast(n))
         .groupBy("doc_id")
@@ -473,8 +446,8 @@ object Curation {
     //    a narrow map, no positional self-join; the count model is
     //    map-side combined and broadcast back (vocab² possible pairs but
     //    only observed pairs materialize — same size-gated branch as
-    //    q103: past LmBroadcastConf's auto gate the scoring joins
-    //    shuffle instead). The occurrence stream is deliberately scanned
+    //    q103: past LmBroadcastMaxBytes the scoring joins shuffle
+    //    instead). The occurrence stream is deliberately scanned
     //    twice (model + scoring) rather than cached as per-doc bigram
     //    counts: a (doc, w1, w2) rollup has docs×bigram-vocab groups —
     //    4.7M at sf0.1 vs the model's 961 — and the measured round-11

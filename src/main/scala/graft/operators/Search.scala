@@ -1025,10 +1025,7 @@ object Search {
     * was a full Spark job. */
   private def checkSearchManifest(s: SparkSession,
       indexDir: String): Int = {
-    val man = Stores.readMetaSidecar(s, s"$indexDir/manifest")
-      .getOrElse(throw new IllegalStateException(
-        s"no manifest sidecar under $indexDir — not a search store " +
-          "(searchIndexWrite creates it)"))
+    val man = Stores.readManifest(s, indexDir)
     require(man("tokenizer") == SearchTokenizer,
       s"index at $indexDir was written with tokenizer " +
         s"'${man("tokenizer")}' — this library serves '$SearchTokenizer'")

@@ -731,13 +731,9 @@ object Similarity {
   }
 
   /** The store's cell count — THE kIvf lookup of append, compact and
-    * maintain: the manifest's kIvf, a driver-side sidecar read.
-    * Counting cents/ (a Spark job for one int the write already
-    * recorded) is only the pre-manifest fallback. */
+    * maintain: the manifest's kIvf, a driver-side sidecar read. */
   private def annKIvf(s: SparkSession, dir: String): Int =
-    Stores.readMetaSidecar(s, s"$dir/manifest").map(_("kIvf").toInt)
-      .getOrElse(s.read.schema(IvfPqCentsSchema)
-        .parquet(s"$dir/cents").count().toInt)
+    Stores.readManifest(s, dir)("kIvf").toInt
 
   /** Write the IVF-PQ serving index as an ON-DISK parquet dataset
     * PARTITIONED BY CELL — the physical layout every "at 100 TB the
@@ -879,7 +875,7 @@ object Similarity {
     require(nprobe >= 1 && m >= 1 && subDim >= 1 && coarseK >= 1 &&
       topK >= 1, "ivfPqIndexServe: all knobs must be >= 1")
     val s = codes.sparkSession
-    val manifestKIvf = checkIndexManifest(s, indexDir, m, subDim, nprobe)
+    val kIvf = checkIndexManifest(s, indexDir, m, subDim, nprobe)
     val books = s.read.schema(IvfPqBooksSchema).parquet(s"$indexDir/books")
     val qv = codes.filter(col("vec_id") === queryId)
       .select(col("v").as("qv0"))
@@ -899,7 +895,7 @@ object Similarity {
     // eager argmin over the kIvf-row centroid frame — that job is the
     // pruning guarantee, not overhead.
     val probedCells: Seq[Long] =
-      if (manifestKIvf.exists(nprobe >= _))
+      if (nprobe >= kIvf)
         AnnLayout.partitionDirs(s, indexDir, gServe).map(_._1).sorted
       else s.read.schema(IvfPqCentsSchema).parquet(s"$indexDir/cents")
         .crossJoin(broadcast(qv))
@@ -1052,22 +1048,16 @@ object Similarity {
       coarseK >= 1 && topK >= 1,
       "ivfPqIndexServeBatch: all knobs must be >= 1")
     val s = codes.sparkSession
-    val manifestKIvf = checkIndexManifest(s, indexDir, m, subDim, nprobe)
+    val kIvf = checkIndexManifest(s, indexDir, m, subDim, nprobe)
     val books = s.read.schema(IvfPqBooksSchema).parquet(s"$indexDir/books")
     val cents = s.read.schema(IvfPqCentsSchema).parquet(s"$indexDir/cents")
-    // kIvf from the manifest (ONE sidecar round-trip, returned by the
-    // geometry check): counting cents/ here billed every batch-serve
-    // construction a Spark job for one int the write already
-    // recorded. The count() fallback only runs for a pre-manifest
-    // store.
-    val kIvf = manifestKIvf.getOrElse(cents.count().toInt)
     val gServe = Stores.currentGen(s, indexDir)
     // exhaustive batches (nprobe ≥ kIvf) need every cell — the
     // partition filter is the store's own directory listing, no
     // probe job (the ivfPqIndexServe discipline); pruned batches
     // still run the per-query argmin + distinct-cells collect.
     val cellsNeeded: Seq[Long] =
-      if (manifestKIvf.exists(nprobe >= _))
+      if (nprobe >= kIvf)
         AnnLayout.partitionDirs(s, indexDir, gServe).map(_._1).sorted
       else {
         val qs = codes.filter(col("vec_id") < qMax)
@@ -1102,26 +1092,22 @@ object Similarity {
     * the mismatch dies here with both geometries named. `nprobe` is
     * checked against the indexed kIvf when the caller has one (the
     * in-memory twins validate it against their own knob; the disk
-    * paths learn kIvf only from the manifest). A pre-manifest index
-    * (no `manifest/` directory) skips validation for compatibility.
-    * One tiny one-row read per construction — the serve paths are
-    * construction-eager already, by design. */
+    * paths learn kIvf only from the manifest). A directory without a
+    * manifest is rejected ([[Stores.readManifest]]). Returns the
+    * indexed kIvf, so a serve construction reads the sidecar once. */
   private def checkIndexManifest(s: SparkSession, indexDir: String,
-      m: Int, subDim: Int, nprobe: Int = Int.MinValue): Option[Int] =
-    Stores.readMetaSidecar(s, s"$indexDir/manifest").map { man =>
-      val (im, isd, ik) =
-        (man("m").toInt, man("subDim").toInt, man("kIvf").toInt)
-      require(m == im && subDim == isd,
-        s"index at $indexDir was written with m=$im subDim=$isd — " +
-          s"got m=$m subDim=$subDim; a mismatched geometry would rank " +
-          "in the wrong code space")
-      require(nprobe == Int.MinValue || nprobe <= ik,
-        s"nprobe=$nprobe exceeds the index's kIvf=$ik cells")
-      // returned so serve constructions need ONE manifest round-trip
-      // (r19 review: each serve read the sidecar twice — here and a
-      // second readMetaSidecar for kIvf — two FS RTTs where one does)
-      ik
-    }
+      m: Int, subDim: Int, nprobe: Int = Int.MinValue): Int = {
+    val man = Stores.readManifest(s, indexDir)
+    val (im, isd, ik) =
+      (man("m").toInt, man("subDim").toInt, man("kIvf").toInt)
+    require(m == im && subDim == isd,
+      s"index at $indexDir was written with m=$im subDim=$isd — " +
+        s"got m=$m subDim=$subDim; a mismatched geometry would rank " +
+        "in the wrong code space")
+    require(nprobe == Int.MinValue || nprobe <= ik,
+      s"nprobe=$nprobe exceeds the index's kIvf=$ik cells")
+    ik
+  }
 
   /** LOGICAL delete from an on-disk index ([[Stores.StoreLayout.delete]]):
     * a deleted vector stops surfacing immediately, at zero rewrite

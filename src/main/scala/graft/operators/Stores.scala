@@ -652,8 +652,7 @@ object Stores {
   }
 
   /** Read a [[writeMetaSidecar]] file as a key→value map; None when
-    * absent (store families that allow pre-manifest stores skip
-    * validation on None). */
+    * absent. */
   private[graft] def readMetaSidecar(s: SparkSession,
       path: String): Option[Map[String, String]] = {
     val p = new Path(path)
@@ -672,6 +671,15 @@ object Stores {
       }.toMap)
     }
   }
+
+  /** A store's manifest. All four writers record one and every reader
+    * validates against it, so a directory without one is rejected by
+    * name rather than served in an unknown geometry. */
+  private[graft] def readManifest(s: SparkSession,
+      dir: String): Map[String, String] =
+    readMetaSidecar(s, s"$dir/manifest").getOrElse(
+      throw new IllegalStateException(s"no manifest sidecar under $dir " +
+        "— not a store this library wrote (each store write creates it)"))
 
   /** (store_dir, corpus_version) for an audit view over many stores. */
   private[graft] def storeVersions(s: SparkSession,
@@ -1185,11 +1193,7 @@ object Stores {
     case DedupStore(dir) =>
       TextDedup.dedupIndexAppend(pinned, dir, idCol, textCol)
     case AnnStore(dir) =>
-      val g = readMetaSidecar(s, s"$dir/manifest").getOrElse(
-        throw new IllegalStateException(
-          s"appendAll: ANN store $dir has no manifest — cannot " +
-            "recover its frozen (m, subDim) geometry; append " +
-            "directly with ivfPqIndexAppend or rebuild"))
+      val g = readManifest(s, dir)
       Similarity.ivfPqIndexAppend(
         Similarity.int8CodedVectors(pinned, idCol, vecCol),
         dir, g("m").toInt, g("subDim").toInt)

@@ -52,7 +52,7 @@ object TextDedup {
     * construction dominates every text-similarity query (~4s of each of
     * q42/q43/q44 at sf0.1), and the driver runs them in one session —
     * computing them once is the single biggest bench win. */
-  private[operators] def docShingles(s: SparkSession, dir: String): DataFrame =
+  private[graft] def docShingles(s: SparkSession, dir: String): DataFrame =
     CacheRegistry.cached(s, s"shingles:$dir") {
       T(s, dir, "documents")
         // documents is one parquet file → one input partition; without a
@@ -330,7 +330,7 @@ object TextDedup {
   }
 
   /** count-join path: exact intersection counts from the postings join. */
-  private[operators] def countJoinPairs(docs: DataFrame): DataFrame = {
+  private[graft] def countJoinPairs(docs: DataFrame): DataFrame = {
     val postings = docs.select(col("doc_id"), size(col("sh")).as("n"),
       explode(col("sh")).as("s"))
     postings.as("a").join(postings.as("b"),
@@ -348,7 +348,7 @@ object TextDedup {
 
   /** prefix-filter path: candidates from rare-shingle prefixes, then
     * exact array_intersect verification. */
-  private[operators] def prefixVerifyPairs(docs: DataFrame): DataFrame = {
+  private[graft] def prefixVerifyPairs(docs: DataFrame): DataFrame = {
     val a = docs.select(col("doc_id").as("doc_i"), col("sh").as("sh_i"))
     val b = docs.select(col("doc_id").as("doc_j"), col("sh").as("sh_j"))
     prefixCandidates(docs)
@@ -364,27 +364,20 @@ object TextDedup {
           .as("jaccard"))
   }
 
-  /** Conf gate over the adaptive branch probe: `auto` (default) runs the
-    * one-row df-stats job above at plan-construction time — the ONLY
-    * constructor-time Spark job in the inventory, and a deliberate one
-    * (the branch choice is data-dependent by design). Contexts that must
-    * construct plans WITHOUT launching jobs (deriveReleasePlan, the
-    * release-plan spec, plan audits) pin the branch instead; both
-    * branches consume the same cached inputs (spec-pinned), so the
-    * derived cache lifecycle is branch-invariant. */
-  private[graft] val BranchConf = "spark.graft.jaccard.branch"
-
-  private[operators] def jaccardPairsPlan(docs: DataFrame): DataFrame =
-    docs.sparkSession.conf.get(BranchConf, "auto") match {
-      case "count" => countJoinPairs(docs)
-      case "prefix" => prefixVerifyPairs(docs)
-      case _ =>
-        val postings = docs.select(col("doc_id"), size(col("sh")).as("n"),
-          explode(col("sh")).as("s"))
-        val (sum2, sum1) = shingleDfStats(postings)
-        if (sum2 <= PrefixAmplificationCap * sum1) countJoinPairs(docs)
-        else prefixVerifyPairs(docs)
-    }
+  /** Exact-Jaccard pairs on the branch the data picks: one one-row
+    * df-stats job at plan construction ([[shingleDfStats]]), then the
+    * count-join or the prefix path by the amplification cap. The job
+    * runs only inside the eager audit-store build
+    * ([[chainJaccardPairs]]); every registry consumer reads the
+    * persisted store. Both branches read only `docs`, so neither
+    * touches the cache registry (PlanConstructionSpec). */
+  private[graft] def jaccardPairsPlan(docs: DataFrame): DataFrame = {
+    val postings = docs.select(col("doc_id"), size(col("sh")).as("n"),
+      explode(col("sh")).as("s"))
+    val (sum2, sum1) = shingleDfStats(postings)
+    if (sum2 <= PrefixAmplificationCap * sum1) countJoinPairs(docs)
+    else prefixVerifyPairs(docs)
+  }
 
   private def jaccardPairs(s: SparkSession, dir: String): DataFrame =
     // pairs are consumed repeatedly (q42 result, q117's truth set, the
@@ -1419,7 +1412,7 @@ object TextDedup {
       idCol: String = "doc_id", textCol: String = "text"): Unit = {
     val s = docs.sparkSession
     DedupLayout.append(s, indexDir) { g =>
-    checkDedupManifest(s, indexDir)
+    checkBandingManifest(s, indexDir)
     DedupLayout.writeParts(bandsOfSignatures(docs, idCol, textCol)
         .select(col("doc_id"), col("bv"), col("band")),
       DedupNumBands, DedupLayout.path(indexDir, "bands", g), "append")
@@ -1441,7 +1434,7 @@ object TextDedup {
   private[operators] def dedupIndexServeBands(newBands: DataFrame,
       indexDir: String): DataFrame = {
     val s = newBands.sparkSession
-    checkDedupManifest(s, indexDir)
+    checkBandingManifest(s, indexDir)
     ingestVerdicts(newBands, residentBands(s, indexDir))
   }
 
@@ -1487,7 +1480,7 @@ object TextDedup {
       checkpointDir: String, idCol: String = "doc_id",
       textCol: String = "text")
       : org.apache.spark.sql.streaming.StreamingQuery = {
-    checkDedupManifest(delta.sparkSession, indexDir)
+    checkBandingManifest(delta.sparkSession, indexDir)
     DedupLayout.ingest(delta, indexDir, checkpointDir)(
       dedupIndexAppend(_, indexDir, idCol, textCol))
   }
@@ -1502,23 +1495,30 @@ object TextDedup {
       execute: Boolean = false): DataFrame =
     DedupLayout.maintain(s, indexDir, maxFiles, maxTombBp, execute)
 
-  /** Validate a store's manifest against this library's frozen banding
-    * geometry — a store written under a DIFFERENT banding would not
-    * error on its own: the (band, bv) equality join would simply match
-    * almost nothing and admit near-duplicates with full confidence,
-    * the silent-wrong failure mode the ANN manifest guard exists for.
-    * A pre-manifest store (no `manifest/`) skips validation. */
-  private def checkDedupManifest(s: SparkSession, indexDir: String): Unit =
-    Stores.readMetaSidecar(s, s"$indexDir/manifest").foreach { m =>
-      val got = (m("shingle_k").toInt, m("n_hashes").toInt,
-        m("bands").toInt, m("rows_per_band").toInt)
-      val want = (DedupShingleK, DedupNumHashes, DedupNumBands,
-        DedupRowsPerBand)
-      require(got == want,
-        s"store at $indexDir was written with (shingle_k, n_hashes, " +
-          s"bands, rows_per_band)=$got — this library bands with " +
-          s"$want; a mismatched geometry would silently admit dups")
-    }
+  /** Validate a dedup or audit store's manifest against this
+    * library's frozen banding geometry, plus the audit store's
+    * `extra` bucket count — a store written under a DIFFERENT banding
+    * would not error on its own: the (band, bv) equality join would
+    * simply match almost nothing and admit near-duplicates with full
+    * confidence (or mis-prune bucket probes), the silent-wrong failure
+    * mode the ANN manifest guard exists for. A directory without a
+    * manifest is rejected ([[Stores.readManifest]]). */
+  private def checkBandingManifest(s: SparkSession, indexDir: String,
+      extra: (String, Int)*): Unit = {
+    val m = Stores.readManifest(s, indexDir)
+    val fields = Seq("shingle_k" -> DedupShingleK,
+      "n_hashes" -> DedupNumHashes, "bands" -> DedupNumBands,
+      "rows_per_band" -> DedupRowsPerBand) ++ extra
+    val want = fields.map(_._2)
+    val got = fields.map { case (k, _) => m(k).toInt }
+    require(got == want,
+      s"store at $indexDir was written with " +
+        s"${fields.map(_._1).mkString("(", ", ", ")")}=" +
+        s"${got.mkString("(", ",", ")")} — this library bands with " +
+        s"${want.mkString("(", ",", ")")}; a " +
+        "mismatched geometry would match candidates from a different " +
+        "band space")
+  }
 
   /** Cheap driver-side version key of the corpus behind `dir`: the
     * documents dataset's file listing (name:length:mtime per file,
@@ -1742,7 +1742,7 @@ object TextDedup {
       candDelta: DataFrame, indexDir: String): Unit = {
     val s = pairsDelta.sparkSession
     AuditLayout.append(s, indexDir) { g =>
-      checkAuditManifest(s, indexDir)
+      checkBandingManifest(s, indexDir, "buckets" -> AuditBuckets)
       writeAuditSet(normalizedPairs(pairsDelta),
         AuditLayout.path(indexDir, "pairs", g), "append")
       writeAuditSet(normalizedCands(candDelta),
@@ -1773,7 +1773,7 @@ object TextDedup {
     * endpoints). Declared read schema; `bk` dropped for consumers. */
   private[graft] def residentAuditPairs(s: SparkSession,
       indexDir: String): DataFrame = {
-    checkAuditManifest(s, indexDir)
+    checkBandingManifest(s, indexDir, "buckets" -> AuditBuckets)
     AuditLayout.live(s, indexDir, "pairs", Stores.currentGen(s, indexDir))
       .select("doc_i", "doc_j", "n_common", "n_i", "n_j", "jaccard")
   }
@@ -1781,25 +1781,10 @@ object TextDedup {
   /** The live candidate set (same tombstone semantics). */
   private[graft] def residentAuditCands(s: SparkSession,
       indexDir: String): DataFrame = {
-    checkAuditManifest(s, indexDir)
+    checkBandingManifest(s, indexDir, "buckets" -> AuditBuckets)
     AuditLayout.live(s, indexDir, "cand", Stores.currentGen(s, indexDir))
       .select("doc_i", "doc_j")
   }
-
-  private def checkAuditManifest(s: SparkSession,
-      indexDir: String): Unit =
-    Stores.readMetaSidecar(s, s"$indexDir/manifest").foreach { m =>
-      val got = (m("shingle_k").toInt, m("n_hashes").toInt,
-        m("bands").toInt, m("rows_per_band").toInt, m("buckets").toInt)
-      val want = (DedupShingleK, DedupNumHashes, DedupNumBands,
-        DedupRowsPerBand, AuditBuckets)
-      require(got == want,
-        s"audit store at $indexDir was written with (shingle_k, " +
-          s"n_hashes, bands, rows_per_band, buckets)=$got — this " +
-          s"library expects $want; a mismatched geometry would audit " +
-          "candidates from a different band space (or mis-prune " +
-          "bucket probes)")
-    }
 
   /** The on-disk audit store behind the whole LSH-audit family — built
     * once per (corpus dir, corpus version) from the chain computations

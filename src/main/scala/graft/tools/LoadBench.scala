@@ -5,11 +5,11 @@ import graft.Bench
 /** Standing pressure rehearsal (r10 VERDICT ask #2): run the EXACT
   * Bench under the contention that actually broke the r9 gate — the
   * r9 failure was a 2–6× driver-box load amplification on identical
-  * code, and BASELINE.md's analysis shows the amplifier is
+  * code, and the r10 analysis found the amplifier to be
   * CPU/stage-count contention, not storage. Rehearsing under load each
   * re-anchor is the only way to see the next breach coming.
   *
-  * Protocol (matches the r10 one-off recorded in BASELINE.md):
+  * Protocol (the r10 one-off's):
   * 16 external busy-loop processes (`SPARK_GRAFT_LOAD` overrides) spun
   * up before the session starts, plus a constrained driver heap via
   * `SPARK_DRIVER_MEM=4g` (the heap is fixed at JVM launch — set the env

@@ -20,7 +20,7 @@ object ReleasePlan {
     println("  )")
     // build-attribution half (r13 verdict ask #2): which query's timed
     // section absorbs each cache build in sorted run order — paste into
-    // Bench.buildAbsorbers AND BASELINE.md's attribution table.
+    // Bench.buildAbsorbers.
     // MUST derive on a COLD registry: nested accesses (a build closure
     // calling cached() for its input) only fire while the build RUNS,
     // so deriving over the frames the release-plan replay just built

@@ -24,8 +24,8 @@ class BenchReleaseSpec extends SparkTestBase {
   }
 
   test("buildAbsorbers matches the derived first-consumer attribution") {
-    // the other half of the lifecycle ledger: BASELINE.md's cache-build
-    // attribution table is pasted from this map, so a new query that
+    // the other half of the lifecycle ledger: per-query timings are
+    // read against this map (BASELINE.md, Method), so a new query that
     // silently becomes a cache's first consumer (shifting which timed
     // section absorbs the build) must fail here, not confuse the next
     // round's per-query delta forensics

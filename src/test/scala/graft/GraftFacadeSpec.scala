@@ -504,50 +504,6 @@ class GraftFacadeSpec extends SparkTestBase {
     assert(audit.count() == 1, "both survivors share one stratum")
   }
 
-  test("jaccardBranchConf is the documented construction-eager gate") {
-    // the facade constant IS the operator's conf key (one definition),
-    // and pinning it suppresses the auto probe's constructor-time job —
-    // the deeper job-free property is pinned in PlanConstructionSpec.
-    // Jobs are attributed via a submit-time local property (the
-    // PlanConstructionSpec pattern): a raw before/after job-count diff
-    // is flaky — stray ASYNC broadcast jobs from earlier tests can land
-    // between the two reads.
-    assert(Graft.jaccardBranchConf == "spark.graft.jaccard.branch")
-    val sc = spark.sparkContext
-    val key = "graft.facade.branchtest"
-    val tagged = new java.util.concurrent.atomic.AtomicInteger(0)
-    val listener = new org.apache.spark.scheduler.SparkListener {
-      override def onJobStart(
-          s: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
-        if (s.properties.getProperty(key) == "1") tagged.incrementAndGet()
-    }
-    // metastore warm-up first (the PlanConstructionSpec discipline):
-    // the FIRST touch of a parquet table runs a schema-read job that
-    // must not charge to the plan construction under test
-    graft.Tables(spark, "/root/testdata/sf0.001", "documents")
-    // ... and the AUDIT STORE memo too (r22): since r21 q42's plan
-    // reads through the on-disk pair store, so a first-in-JVM (or
-    // post-reset — other suites call resetDiskAuditMemo) touch runs
-    // the store BUILD's jobs at construction. That bootstrap cost is
-    // PlanConstructionSpec's subject; this test pins only that the
-    // pinned BRANCH adds no probe job, so construct once untagged to
-    // absorb the build before the tagged read below.
-    SparkEntry.queries("q42_jaccard_pairs")(spark, "/root/testdata/sf0.001")
-    spark.conf.set(Graft.jaccardBranchConf, "count")
-    sc.addSparkListener(listener)
-    try {
-      sc.setLocalProperty(key, "1")
-      SparkEntry.queries("q42_jaccard_pairs")(spark, "/root/testdata/sf0.001")
-      sc.setLocalProperty(key, null)
-      org.apache.spark.sql.graft.Bridge.drainListenerBus(sc)
-      assert(tagged.get == 0, "pinned branch must construct without jobs")
-    } finally {
-      sc.setLocalProperty(key, null)
-      sc.removeSparkListener(listener)
-      spark.conf.unset(Graft.jaccardBranchConf)
-    }
-  }
-
   test("pagerank on a symmetric pair splits rank evenly") {
     val edges = Seq((1L, 2L), (2L, 1L)).toDF("src", "dst")
     val r = Graft.pagerank(edges, iters = 2).as[(Long, Long, Long)]

@@ -6,10 +6,11 @@ import java.sql.Timestamp
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graft.Hints.withoutBroadcastHints
 import org.apache.spark.sql.streaming.StreamingQuery
 
 import graft.functions.VectorFunctions.lshBucket
-import graft.operators.{Curation, Search, Similarity, Stores, TextDedup,
+import graft.operators.{Search, Similarity, Stores, TextDedup,
   TimeSeriesJoins}
 import graft.streaming.StreamingOps
 import graft.streaming.StreamingOps.{BandCollision, Doc, TimedDoc}
@@ -395,12 +396,12 @@ class GrowthLawSpec extends SparkTestBase {
   }
 
   test("LM gate: records read grow near-linearly on both branches") {
+    // the hinted plan, and the same plan with its broadcast hints
+    // stripped: the shuffle side past the corpus-size ceiling
     val a = growth("lm_gate") { (_, dir) =>
-      Seq("on", "off").map { branch =>
-        wide.conf.set(Curation.LmBroadcastConf, branch)
-        try branch -> queryRecords("q103_unigram_logprob", dir)
-        finally wide.conf.unset(Curation.LmBroadcastConf)
-      }
+      val q103 = () => SparkEntry.queries("q103_unigram_logprob")(wide, dir)
+      Seq("hinted" -> records(wide)(drain(q103())),
+        "stripped" -> records(wide)(drain(withoutBroadcastHints(q103()))))
     }
     a.keys.foreach(assertAlpha(a, _, 1.2))
   }

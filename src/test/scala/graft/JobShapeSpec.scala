@@ -25,9 +25,10 @@ import graft.tools.Profile
   * (cold everything, tables pre-resolved) + ~5 headroom, except where
   * `Tables`' one-split rule (one-partition fixture tables, so no
   * exchange above them) lowered a count: there the bound IS the new
-  * measured count — the higher one where the count depends on which
-  * branch memos earlier suites left warm (q117 and q164 read one job
-  * apart alone and in the full run).
+  * measured count — the higher one where the count depends on what
+  * earlier suites left warm (q117 reads 14 alone, up to 15 in a full
+  * run; q164 reads 17 both ways, its LM broadcast rule running no
+  * job).
   */
 class JobShapeSpec extends SparkTestBase {
 
@@ -65,8 +66,8 @@ class JobShapeSpec extends SparkTestBase {
   pin("q186_rag_fuse_disk", 24, "r19 cut: 29 → 19 at sf0.1; 18 here")
   pin("q182_ivfpq_disk", 17, "r19 cut: 18 → 12 at sf0.1; 11 here")
   pin("q185_bm25_disk", 15, "r19 cut: 12 → 10 at sf0.1; 9 here")
-  pin("q164_nb_source", 18, "r19 cut: 23 → 18 at sf0.1; one-split " +
-    "tables cut the fixture-scale LM branch 23 → 17–18 here")
+  pin("q164_nb_source", 17, "r19 cut: 23 → 18 at sf0.1; one-split " +
+    "tables and the job-free LM size rule: 17 here")
   pin("q188_disk_lsh_audit", 12,
     "the r20 pair store: first touch reads the store instead of " +
       "rebuilding the 21-job LSH chain; 12 here with one-split tables")

@@ -1,6 +1,7 @@
 package graft.operators
 
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graft.Hints.withoutBroadcastHints
 
 import graft.{SparkEntry, SparkTestBase}
 
@@ -399,42 +400,54 @@ class CurationSpec extends SparkTestBase {
     // (q103 freq, q105 global counts, q138 bigram model, q164
     // class-conditional counts, q165 dsir-lm) shipped an UNCONDITIONAL
     // broadcast hint — an OOM, not a plan choice, on an open-web
-    // vocab. The gate (Curation.LmBroadcastConf) must be pure physical
-    // choice: identical rows either way.
-    val lmc = Curation.LmBroadcastConf
+    // vocab. The size rule (Curation.lmBroadcasts) must be pure
+    // physical choice: the hinted plan and the same plan with its
+    // broadcast hints stripped return identical rows.
     val five = Seq("q103_unigram_logprob", "q105_source_kl",
       "q138_bigram_logprob", "q164_nb_source", "q165_dsir_select")
-    def run(branch: String, q: String): Seq[String] = {
-      spark.conf.set(lmc, branch)
-      try SparkEntry.queries(q)(spark, sf).collect().map(_.toString).toSeq
-      finally spark.conf.unset(lmc)
-    }
+    def rows(df: org.apache.spark.sql.DataFrame): Seq[String] =
+      df.collect().map(_.toString).toSeq
     for (q <- five) {
-      val on = run("on", q)
-      val off = run("off", q)
+      val hinted = SparkEntry.queries(q)(spark, sf)
+      val on = rows(hinted)
+      val off = rows(withoutBroadcastHints(hinted))
       assert(on.nonEmpty && on == off,
         s"$q: branch results diverge (on=${on.size} off=${off.size} rows)")
     }
-    // and the gate is what it claims — a HINT choice, not a plan
+    // and the rule is what it claims — a HINT choice, not a plan
     // transform: with the planner's own size-based broadcasting
-    // disabled, only the "on" branch still hash-broadcasts (the hint
+    // disabled, only the hinted plan still hash-broadcasts (the hint
     // FORCES it past any size estimate — exactly the OOM mechanism at
-    // open-web vocab), while "off" leaves the strategy to the planner
-    // (which at sf0.001 stats happily broadcasts on its own — that
-    // adaptivity is the point of dropping the hint).
-    def plan(branch: String): String = {
-      spark.conf.set(lmc, branch)
+    // open-web vocab), while the stripped plan leaves the strategy to
+    // the planner.
+    def plan(f: org.apache.spark.sql.DataFrame =>
+        org.apache.spark.sql.DataFrame): String = {
       spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-      try SparkEntry.queries("q103_unigram_logprob")(spark, sf)
+      try f(SparkEntry.queries("q103_unigram_logprob")(spark, sf))
         .queryExecution.sparkPlan.toString
-      finally {
-        spark.conf.unset(lmc)
-        spark.conf.unset("spark.sql.autoBroadcastJoinThreshold")
-      }
+      finally spark.conf.unset("spark.sql.autoBroadcastJoinThreshold")
     }
-    assert(plan("on").contains("BroadcastHashJoin"),
-      "the hint branch must force the broadcast past the size estimate")
-    assert(!plan("off").contains("BroadcastHashJoin"),
-      "the shuffle branch must leave the strategy to the planner")
+    assert(plan(identity).contains("BroadcastHashJoin"),
+      "the hint must force the broadcast past the size estimate")
+    assert(!plan(withoutBroadcastHints).contains("BroadcastHashJoin"),
+      "the stripped plan must leave the strategy to the planner")
+  }
+
+  test("LM broadcast rule: the corpus's planned bytes pick the side; " +
+      "every fixture broadcasts") {
+    val max = Curation.LmBroadcastMaxBytes
+    assert(Curation.lmBroadcasts(max) && !Curation.lmBroadcasts(max + 1),
+      "the ceiling itself broadcasts, one byte over shuffles")
+    // the size is the documents relation's planned statistics — the
+    // file listing's bytes, so the rule runs no job
+    for (d <- Seq("sf0.001", "sf0.01", "sf0.1")) {
+      val dir = s"/root/testdata/$d"
+      val planned = graft.Tables(spark, dir, "documents")
+        .queryExecution.optimizedPlan.stats.sizeInBytes
+      val onDisk = new java.io.File(s"$dir/documents.parquet").length
+      assert(planned == BigInt(onDisk),
+        s"$d: planned $planned B, file $onDisk B")
+      assert(Curation.lmBroadcasts(planned), s"$d must broadcast")
+    }
   }
 }

@@ -177,11 +177,14 @@ class DedupIndexSpec extends SparkTestBase {
     }
     geometryError(TextDedup.dedupIndexServe(docsDf(corpus.drop(3)), idx))
     geometryError(TextDedup.dedupIndexAppend(docsDf(corpus.drop(3)), idx))
-    // a pre-manifest store still serves (compatibility)
+    // a manifest-less store is rejected, naming its directory
     val fs = new org.apache.hadoop.fs.Path(idx).getFileSystem(
       spark.sparkContext.hadoopConfiguration)
     fs.delete(new org.apache.hadoop.fs.Path(s"$idx/manifest"), true)
-    assert(serveSeq(corpus.drop(3), idx).nonEmpty)
+    val e = intercept[IllegalStateException](
+      TextDedup.dedupIndexServe(docsDf(corpus.drop(3)), idx))
+    assert(e.getMessage.contains(s"no manifest sidecar under $idx"),
+      s"the error must name the directory: ${e.getMessage}")
   }
 
   test("rebuild over a used dir clears stale tombstones and ingest ledger") {

@@ -436,7 +436,7 @@ class DiskIndexSpec extends SparkTestBase {
   }
 
   test("the manifest rejects a wrong geometry on every entry path; " +
-      "a pre-manifest index still serves") {
+      "a manifest-less index is rejected, naming its directory") {
     // a wrong m/subDim would not error on its own — it would slice the
     // query into a different subvector geometry than the encodings and
     // rank garbage with full confidence — so the manifest row the
@@ -467,12 +467,17 @@ class DiskIndexSpec extends SparkTestBase {
       Similarity.ivfPqIndexServe(codesDf(corpus), idx, queryId = 8L,
         nprobe = 7, m = 2, subDim = 2, coarseK = 10, topK = 6))
     assert(np.getMessage.contains("kIvf=2"), np.getMessage)
-    // compatibility: an index written before the manifest existed
-    // (manifest/ absent) skips validation and serves as before
-    val pre = serveable(idx)
+    // every writer records a manifest, so a directory without one is
+    // refused on the serve paths, naming the directory
     deleteRecursively(new java.io.File(s"$idx/manifest"))
-    assert(serveable(idx) == pre,
-      "a manifest-less index must serve exactly as before")
+    def noManifest(body: => Any): Unit = {
+      val e = intercept[IllegalStateException](body)
+      assert(e.getMessage.contains(s"no manifest sidecar under $idx"),
+        s"the error must name the directory: ${e.getMessage}")
+    }
+    noManifest(serveable(idx))
+    noManifest(Similarity.ivfPqIndexServeBatch(codesDf(corpus), idx,
+      qMax = 2L, nprobe = 2, m = 2, subDim = 2, coarseK = 10, topK = 6))
   }
 
   test("maintenance policy: decisions on a fragmented/tombstoned/skewed " +

@@ -54,7 +54,7 @@ class StoreCoordinationSpec extends SparkTestBase {
     val dir = tmp()
     val p = s"$dir/manifest"
     assert(Stores.readMetaSidecar(spark, p).isEmpty,
-      "an absent sidecar must read None (the pre-manifest skip path)")
+      "an absent sidecar must read None")
     Stores.writeMetaSidecar(spark, p,
       Seq("n_buckets" -> "8", "tokenizer" -> "ws-split"))
     assert(Stores.readMetaSidecar(spark, p)

@@ -255,10 +255,8 @@ object Bench {
     // signatures, jaccard pairs) and whichever query runs first pays the
     // build; map order is hash-arbitrary, which made per-query numbers
     // incomparable across rounds (r5: the build landed on q44/q89; r4: on
-    // q42). Sorted, attribution is deterministic: q41 pays the shingle
-    // build + signature digest (signatures derive from the shared shingle
-    // cache), q42 pays the jaccard-pairs join, q43/q44/q89/q92 ride the
-    // caches; q45 pays the normalized-embedding cache build.
+    // q42). Sorted, attribution is deterministic: [[buildAbsorbers]]
+    // names the query that pays each cache build.
     val ordered = SparkEntry.queries.toSeq.sortBy(_._1)
     // Mid-inventory marker pair (r15 verdict ask #1): the pre/post
     // probes bracket the whole run, but the driver-only q134–q138

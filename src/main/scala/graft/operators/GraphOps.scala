@@ -45,28 +45,32 @@ object GraphOps {
     // iteration scans a materialized edge list; at cluster scale this is
     // the standard "cache the graph structure, iterate over ranks" split
     // (ranks stay lazy — they change every round, the structure doesn't).
-    val deg = edges.groupBy("src").agg(count(lit(1)).as("d"))
-      .localCheckpoint()
+    // a graph that fits one partition runs as one
+    // (Stores.onePartition): no exchange, no broadcast job
+    val e = Stores.onePartition(edges)
+    val deg = Stores.onePartition(
+      e.groupBy("src").agg(count(lit(1)).as("d")).localCheckpoint())
     // The iterated edge list needs ONLY (src, dst): the per-node divide
     // already folds the degree into `c`, so joining deg here (the old
     // shape) materialized an unused `d` per EDGE and paid an extra |E|
     // join at build time — r16 verdict ask #1, cut as pure waste.
-    val ed = edges.select("src", "dst").localCheckpoint()
+    val ed = Stores.onePartition(e.select("src", "dst").localCheckpoint())
     var r: DataFrame = deg.select(col("src").as("id"), lit(1000000L).as("r"))
     for (_ <- 1 to iters) {
       // divide once per NODE (floor(r/d) is constant across a node's out-
       // edges), then sum the per-edge contributions grouped by dst: the
       // edge join carries a single long instead of repeating the divide
       // |E| times — same math, same oracle.
-      val c = r.join(deg, col("id") === col("src"))
+      val c = Stores.shapedJoin(r, deg)(_.join(_, col("id") === col("src")))
         .select(col("id").as("cid"), floor(col("r") * 1.0 / col("d")).as("c"))
-      r = ed.join(c, col("src") === col("cid"))
+      r = Stores.shapedJoin(ed, c)(_.join(_, col("src") === col("cid")))
         .groupBy("dst")
         .agg((lit(150000L)
           + floor(lit(85) * sum(col("c")) * 1.0 / 100)).as("r"))
         .select(col("dst").as("id"), col("r"))
     }
-    deg.select(col("src").as("id"), col("d")).join(r, "id")
+    Stores.shapedJoin(deg.select(col("src").as("id"), col("d")), r)(
+      _.join(_, "id"))
   }
 
   val defs: Seq[QueryDef] = Seq(

@@ -14,14 +14,7 @@ import graft.{QueryDef, Tables}
   * Scale notes (100 TB posture):
   *  - decontamination joins the HUGE side (train postings) against the
   *    SMALL side (eval-set n-gram vocabulary): the vocab broadcasts, so
-  *    the train scan never shuffles to find contaminated docs. When the
-  *    eval vocab outgrows the broadcast threshold but its Bloom sketch
-  *    still fits (a few MB at fpp 3% for tens of millions of n-grams),
-  *    `bloomPrefilteredContaminated` broadcasts the sketch instead:
-  *    Bloom filters have NO false negatives, so dropping
-  *    might-contain=false postings before the exact verify join loses
-  *    nothing, and the shuffle carries only the tiny maybe-contaminated
-  *    remainder (spec-verified equal to the exact path);
+  *    the train scan never shuffles to find contaminated docs;
   *  - masking is a pure narrow map (regexp over one column) — embarrassingly
   *    parallel, stays inside whole-stage codegen;
   *  - stopword removal computes the stoplist with one partial-agg'd
@@ -39,100 +32,13 @@ object Scrub {
     graft.plans.HexWindowToLong.md5Bucket(col("doc_id"), 100)
 
   /** doc_ids of TRAIN docs sharing ≥1 shingle with the eval vocabulary —
-    * exact broadcast-semi-join path (the default: eval vocabs fit in a
-    * broadcast at any realistic eval-set size). */
+    * an exact broadcast semi join (eval vocabs fit in a broadcast at
+    * any realistic eval-set size). */
   private[operators] def contaminatedIds(
       train: DataFrame, testVocab: DataFrame): DataFrame =
     train.select(col("doc_id"), explode(col("sh")).as("tok"))
       .join(broadcast(testVocab), Seq("tok"), "left_semi")
       .select("doc_id").distinct()
-
-  /** Bloom-prefiltered variant for when the eval vocab exceeds the raw
-    * broadcast threshold but its sketch fits: build the sketch with the
-    * native distributed `bloom_filter_agg` (partial sketches OR-merged
-    * map-side), broadcast the one-row binary, drop definite-negative
-    * postings at the scan with the codegen'd `might_contain` (no false
-    * negatives → zero recall loss), then verify the small maybe-set with
-    * an exact shuffle semi join that removes the sketch's false
-    * positives. Output is bit-identical to [[contaminatedIds]] (ScrubSpec
-    * proves it) — the sketch's false-positive SET may differ from the
-    * old driver-side Guava sketch, but false positives never survive the
-    * verify join, so the result cannot depend on them.
-    *
-    * Everything is plan-internal (no driver-collected filter, no Scala
-    * broadcast variable, no closure UDF), so nothing needs eager
-    * materialization or early teardown; the result and the thrice-read
-    * vocab frame live in [[graft.CacheRegistry]] — repeated calls reuse
-    * one persisted copy and `CacheRegistry.clear(session)` releases
-    * both. Keyed by a 128-bit SHA-256 prefix of each input's
-    * canonicalized plan JSON — a 32-bit semanticHash would invite
-    * silent cross-input aliasing at the birthday bound, and the plan's
-    * toString is unusable as key material because it elides argument
-    * lists past spark.sql.debug.maxToStringFields; toJSON renders every
-    * field untruncated. */
-  private[operators] def bloomPrefilteredContaminated(
-      train: DataFrame, testVocab: DataFrame): DataFrame = {
-    val spark = train.sparkSession
-    def planKey(df: DataFrame): String = {
-      val canon = df.queryExecution.analyzed.canonicalized.toJSON
-      java.security.MessageDigest.getInstance("SHA-256")
-        .digest(canon.getBytes("UTF-8")).take(16)
-        .map("%02x".format(_)).mkString
-    }
-    val key = s"bloom-contam:${planKey(train)}:${planKey(testVocab)}"
-    graft.CacheRegistry.cached(spark, key) {
-      // the vocab feeds three consumers (sizing count, the sketch
-      // aggregate, the verify join) — registry-persisted so the
-      // explode+distinct scan this path exists to amortize runs once
-      val tv = graft.CacheRegistry.cached(
-        spark, s"bloom-vocab:${planKey(testVocab)}")(testVocab)
-      val expected = math.max(tv.count(), 1L)
-      val bits = graft.plans.BloomSketch.optimalNumBits(expected, 0.03)
-      // BloomFilterAggregate silently clamps its sizing to the runtime-
-      // filter conf caps (4M items / 64M bits by default) — at the
-      // large-vocab scale this path exists for, a clamped sketch's real
-      // fpp quietly approaches 1 and the prefilter stops filtering.
-      // Raise the caps only for the duration of the (eager, distributed)
-      // sketch build, then restore: leaving them raised would let
-      // Spark's own InjectRuntimeFilter build arbitrarily large runtime
-      // sketches for every later join in the session.
-      // CONCURRENCY CAVEAT (r13 verdict): set-then-restore of SESSION
-      // confs is not safe if two queries CONSTRUCT simultaneously on
-      // one SparkSession — a concurrent constructor could observe (or
-      // clobber) the raised caps. Harmless under Bench/Verify's
-      // sequential driver and any one-thread-per-session notebook; a
-      // multi-threaded driver should construct this query's plan under
-      // external serialization, or on a cloned session
-      // (SparkSession.cloneSession inherits confs copy-on-write).
-      val capConfs = Seq(
-        "spark.sql.optimizer.runtime.bloomFilter.maxNumItems" -> expected,
-        "spark.sql.optimizer.runtime.bloomFilter.maxNumBits" -> bits)
-      val saved = capConfs.map { case (c, _) => c -> spark.conf.get(c) }
-      val sketch: Array[Byte] =
-        try {
-          capConfs.foreach { case (c, needed) =>
-            if (spark.conf.get(c).toLong < needed)
-              spark.conf.set(c, needed.toString)
-          }
-          // the aggregate runs NOW (partial sketches OR-merged map-side)
-          // so the conf window can close; only the final binary reaches
-          // the driver — inherent to any constant/scalar-subquery probe
-          tv.agg(graft.plans.BloomSketch
-            .bloomFilterAgg(xxhash64(col("tok")), expected, bits).as("bf"))
-            .head().getAs[Array[Byte]]("bf")
-        } finally saved.foreach { case (c, v) => spark.conf.set(c, v) }
-      // might_contain requires its sketch as a constant or scalar
-      // subquery; binding the built sketch as a literal keeps the cached
-      // result frame re-executable with no dependency on session confs
-      train.select(col("doc_id"), explode(col("sh")).as("tok"))
-        .filter(graft.plans.BloomSketch
-          .mightContain(lit(sketch), xxhash64(col("tok"))))
-        // exact verify: shuffle semi join (hint the small side away from
-        // broadcast to exercise the shape the bloom path exists for)
-        .join(tv.hint("shuffle_hash"), Seq("tok"), "left_semi")
-        .select("doc_id").distinct()
-    }
-  }
 
   val defs: Seq[QueryDef] = Seq(
 

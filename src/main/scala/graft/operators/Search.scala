@@ -699,12 +699,13 @@ object Search {
       * ids need no normalizing shuffle. */
     override protected def tombRows(s: SparkSession, dir: String, g: Long,
         ids: DataFrame, operatorSized: Boolean): DataFrame = {
-      val novel0 = tombstones(s, dir, g).fold(ids)(t =>
-        ids.join(t.select("doc_id"), Seq("doc_id"), "left_anti"))
-      val novel = if (operatorSized) broadcast(novel0) else novel0
-      val looked = read(s, dir, "docs", g)
-        .join(novel, Seq("doc_id"), "left_semi")
-      if (operatorSized) looked.coalesce(1) else looked.repartition(1)
+      val novel = tombstones(s, dir, g).fold(ids)(t => Stores.shapedJoin(
+        ids, t.select("doc_id"))(_.join(_, Seq("doc_id"), "left_anti")))
+      val docs = read(s, dir, "docs", g)
+      if (operatorSized)
+        docs.join(broadcast(novel), Seq("doc_id"), "left_semi").coalesce(1)
+      else Stores.onePartition(Stores.shapedJoin(docs, novel)(
+        _.join(_, Seq("doc_id"), "left_semi")), _.repartition(1))
     }
 
     /** Postings keep only rows whose doc survives in the compacted docs
@@ -716,8 +717,8 @@ object Search {
     override protected def compactInto(s: SparkSession, dir: String,
         ng: Long, n: Int, live: String => DataFrame): Unit = {
       val liveDocs = live("docs")
-      writeParts(live("postings")
-          .join(liveDocs.select("doc_id"), Seq("doc_id"), "left_semi")
+      writeParts(Stores.shapedJoin(live("postings"), liveDocs.select("doc_id"))(
+          _.join(_, Seq("doc_id"), "left_semi"))
           .select("doc_id", "term", "tf", "bkt"),
         n, path(dir, "postings", ng), "overwrite")
       writeDocsWithStats(liveDocs, dir, ng)
@@ -1200,14 +1201,7 @@ object Search {
   private[graft] def diskSearchDir(s: SparkSession, dir: String): String =
     diskSearchDirs.computeIfAbsent(dir, _ => {
       val out = Stores.storeScratchDir(s, "graft-searchidx-q185")
-      // bootstrap shuffles sized from the corpus being indexed (the
-      // CC-loop discipline — see Stores.withBootstrapShuffle): the
-      // build is a chain of small actions whose 32-task stages over
-      // bench-scale data were most of q185's absorbed cost
-      val docs = T(s, dir, "documents")
-      Stores.withBootstrapShuffle(s, Seq(docs)) {
-        searchIndexWrite(docs, out)
-      }
+      searchIndexWrite(Stores.onePartition(T(s, dir, "documents")), out)
       out
     })
 
@@ -1266,11 +1260,9 @@ object Search {
       dir: String): String =
     diskChunkSearchDirs.computeIfAbsent(dir, _ => {
       val out = Stores.storeScratchDir(s, "graft-searchidx-q186")
-      val docs = T(s, dir, "documents")
-      Stores.withBootstrapShuffle(s, Seq(docs)) {
-        searchIndexWrite(chunkCorpus(docs), out,
-          idCol = "chunk_id", textCol = "chunk_text")
-      }
+      searchIndexWrite(
+        chunkCorpus(Stores.onePartition(T(s, dir, "documents"))), out,
+        idCol = "chunk_id", textCol = "chunk_text")
       out
     })
 
@@ -1330,10 +1322,9 @@ object Search {
     * q187's oracle states directly. The takedown arrives as DATA (the
     * frame-shaped [[Stores.takedownAll]], r18): the id slice never
     * crosses the driver, so the same bootstrap runs unchanged when the
-    * takedown batch is compliance-feed-sized. The whole bootstrap runs
-    * under [[Stores.withBootstrapShuffle]] sized from the corpus —
-    * ~25 small actions whose 32-task stages over bench-scale slices
-    * were most of q187's absorbed cost (the CC-loop discipline). */
+    * takedown batch is compliance-feed-sized. Its inputs pass through
+    * [[Stores.onePartition]]: at bench scale its ~25 small actions run
+    * one task each instead of a stage per shuffle. */
   private val coordDirs =
     new java.util.concurrent.ConcurrentHashMap[String, (String, String)]()
 
@@ -1343,60 +1334,57 @@ object Search {
       val root = Stores.storeScratchDir(s, "graft-coord-q187")
       val cs = s"$root/chunksearch"
       val ann = s"$root/ann"
-      val docs = T(s, dir, "documents")
-      Stores.withBootstrapShuffle(s,
-          Seq(docs, T(s, dir, "embeddings"))) {
-        // the two stores' initial builds touch disjoint inputs
-        // (chunked docs vs int8 codes + model frames) and disjoint
-        // output dirs — run them CONCURRENTLY (r22, guide §2.6 /
-        // Stores.inParallel): the absorbed section's cost at bench
-        // scale is its serial job-chain length, and these five write
-        // jobs collapse to the longer branch's three
-        Stores.inParallel(s)(
-          searchIndexWrite(
-            chunkCorpus(docs.filter(col("doc_id") % 3 =!= 0)), cs,
-            idCol = "chunk_id", textCol = "chunk_text"),
-          Similarity.ivfPqIndexWrite(
-            Similarity.int8Codes(s, dir).filter(col("vec_id") % 3 =!= 0),
-            ann, kIvf = 4, m = 4, subDim = 16, k = 8,
-            codebooks = Some(Similarity.pqBooks(s, dir)),
-            centroids = Some(Similarity.ivfCentroidIdx(s, dir))))
-        val stores = Seq(Stores.ChunkSearchStore(cs, ChunkIdBase),
-          Stores.AnnStore(ann))
-        // LEFT join (r22 correctness fix, caught by the first full
-        // sf0.1 oracle replay): the lexical chunk store must absorb
-        // EVERY appended document — the oracle's destination corpus is
-        // `documents` minus the takedown slice — while the ANN store
-        // appends only the vector-carrying rows (int8CodedVectors
-        // drops NULL/zero embeddings via its absmax > 0 gate). The old
-        // INNER join silently dropped every `% 3 == 0` doc without an
-        // embedding row from the chunk store; invisible at
-        // sf0.001/sf0.01 (embeddings cover all docs there — the SFs
-        // the driver's gate replays), ~20% of the appended slice's
-        // chunks lost at sf0.1 (2000 embeddings / 5000 docs), read as
-        // lex_rank off by 4 in the fused top-10.
-        val delta = docs.filter(col("doc_id") % 3 === 0)
-          .join(T(s, dir, "embeddings"),
-            col("doc_id") === col("vec_id"), "left")
-          .select(col("doc_id"), col("text"), col("embedding").as("emb"))
-        Stores.appendAll(delta, "q187-bootstrap", stores)
-        // takedown as DATA — the frame-shaped form: the id slice is a
-        // plan, never a driver-side literal list (r17 missing #1)
-        Stores.takedownAll(s,
-          docs.filter(col("doc_id") % 7 === 3).select("doc_id"), stores)
-        // and COMPACT both stores, so the serve q187's oracle replays
-        // reads generation 1 through the atomic pointer flip — the
-        // generational compact itself (tombstones folded, stats
-        // re-derived, grace retained) sits under the external gate, not
-        // just the spec pin. Compaction is corpus-neutral, so the
-        // oracle is untouched; stamps don't bump, so alignment holds.
-        // Concurrent across the two stores (r22): each compact is its
-        // own store's generational rewrite + pointer flip — no shared
-        // artifact, no cross-store ordering to preserve.
-        Stores.inParallel(s)(
-          searchIndexCompact(s, cs),
-          Similarity.ivfPqIndexCompact(s, ann))
-      }
+      val docs = Stores.onePartition(T(s, dir, "documents"))
+      // the two stores' initial builds touch disjoint inputs
+      // (chunked docs vs int8 codes + model frames) and disjoint
+      // output dirs — run them CONCURRENTLY (r22, guide §2.6 /
+      // Stores.inParallel): the absorbed section's cost at bench
+      // scale is its serial job-chain length, and these five write
+      // jobs collapse to the longer branch's three
+      Stores.inParallel(s)(
+        searchIndexWrite(
+          chunkCorpus(docs.filter(col("doc_id") % 3 =!= 0)), cs,
+          idCol = "chunk_id", textCol = "chunk_text"),
+        Similarity.ivfPqIndexWrite(Stores.onePartition(
+          Similarity.int8Codes(s, dir).filter(col("vec_id") % 3 =!= 0)),
+          ann, kIvf = 4, m = 4, subDim = 16, k = 8,
+          codebooks = Some(Similarity.pqBooks(s, dir)),
+          centroids = Some(Similarity.ivfCentroidIdx(s, dir))))
+      val stores = Seq(Stores.ChunkSearchStore(cs, ChunkIdBase),
+        Stores.AnnStore(ann))
+      // LEFT join (r22 correctness fix, caught by the first full
+      // sf0.1 oracle replay): the lexical chunk store must absorb
+      // EVERY appended document — the oracle's destination corpus is
+      // `documents` minus the takedown slice — while the ANN store
+      // appends only the vector-carrying rows (int8CodedVectors
+      // drops NULL/zero embeddings via its absmax > 0 gate). The old
+      // INNER join silently dropped every `% 3 == 0` doc without an
+      // embedding row from the chunk store; invisible at
+      // sf0.001/sf0.01 (embeddings cover all docs there — the SFs
+      // the driver's gate replays), ~20% of the appended slice's
+      // chunks lost at sf0.1 (2000 embeddings / 5000 docs), read as
+      // lex_rank off by 4 in the fused top-10.
+      val delta = Stores.shapedJoin(docs.filter(col("doc_id") % 3 === 0),
+          T(s, dir, "embeddings"))(
+          _.join(_, col("doc_id") === col("vec_id"), "left"))
+        .select(col("doc_id"), col("text"), col("embedding").as("emb"))
+      Stores.appendAll(delta, "q187-bootstrap", stores)
+      // takedown as DATA — the frame-shaped form: the id slice is a
+      // plan, never a driver-side literal list (r17 missing #1)
+      Stores.takedownAll(s,
+        docs.filter(col("doc_id") % 7 === 3).select("doc_id"), stores)
+      // and COMPACT both stores, so the serve q187's oracle replays
+      // reads generation 1 through the atomic pointer flip — the
+      // generational compact itself (tombstones folded, stats
+      // re-derived, grace retained) sits under the external gate, not
+      // just the spec pin. Compaction is corpus-neutral, so the
+      // oracle is untouched; stamps don't bump, so alignment holds.
+      // Concurrent across the two stores (r22): each compact is its
+      // own store's generational rewrite + pointer flip — no shared
+      // artifact, no cross-store ordering to preserve.
+      Stores.inParallel(s)(
+        searchIndexCompact(s, cs),
+        Similarity.ivfPqIndexCompact(s, ann))
       (cs, ann)
     })
 }

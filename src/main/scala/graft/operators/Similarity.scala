@@ -400,11 +400,8 @@ object Similarity {
       k: Int, codebooks: Option[DataFrame] = None): DataFrame = {
     val sub = pqSubvectors(codes, m, subDim)
     val cb = codebooks.getOrElse(pqSeedCodebooks(codes, m, subDim, k))
-    // scaleHint, not a bare broadcast: inside a one-partition store
-    // bootstrap the hint's BroadcastExchange job is pure scheduler
-    // floor (Stores.TinyBootstrapConf); everywhere else the model
-    // frame broadcasts as before
-    sub.join(Stores.scaleHint(cb), col("s") === col("cs"))
+    Stores.shapedJoin(sub, cb, atScale = broadcast(_))(
+      _.join(_, col("s") === col("cs")))
       .groupBy("vec_id", "s")
       .agg(min(struct(pqDist2(col("sc"), col("cbv")).as("d"),
         col("cb_id").as("cb"))).as("m0"))
@@ -566,6 +563,10 @@ object Similarity {
     codes.orderBy("vec_id").limit(kIvf)
       .select(col("vec_id").as("cl"), col("v").as("c"))
 
+  /** 0 on every row, NULL ids included — not a literal, so the optimizer
+    * keeps a join on it an equi-join. */
+  private def zeroKey(id: Column): Column = coalesce(id * 0, lit(0L))
+
   /** IVF cell assignment (vec_id, cell): every vector's nearest coarse
     * centroid — the kmeans/semDedup broadcast-argmin shape (only n
     * pre-reduced rows shuffle). At scale this frame is the OTHER half
@@ -581,8 +582,13 @@ object Similarity {
     * index it joins. */
   private[graft] def ivfAssign(codes: DataFrame, kIvf: Int,
       centroids: Option[DataFrame] = None): DataFrame =
-    codes.crossJoin(Stores.scaleHint(
-        centroids.getOrElse(ivfCentroids(codes, kIvf))))
+    // the cross join is written as a hash join on a key that is 0 on
+    // every row: a hash join plans at one partition with no exchange,
+    // where a CartesianProduct or nested-loop join needs one
+    Stores.shapedJoin(codes.withColumn("z", zeroKey(col("vec_id"))),
+        centroids.getOrElse(ivfCentroids(codes, kIvf))
+          .withColumn("cz", zeroKey(col("cl"))), atScale = broadcast(_))(
+        _.join(_, col("z") === col("cz")))
       .select(col("vec_id"),
         struct(graft.plans.L2DistanceSq.l2DistSq(col("v"), col("c"))
           .as("dist"), col("cl")).as("dc"))
@@ -670,14 +676,10 @@ object Similarity {
   private[graft] def diskIndexDir(s: SparkSession, dir: String): String =
     diskIdxDirs.computeIfAbsent(dir, _ => {
       val out = Stores.storeScratchDir(s, "graft-annidx-q182")
-      val codes = int8Codes(s, dir)
-      // bootstrap shuffles sized from the vectors being indexed
-      // (Stores.withBootstrapShuffle — the CC-loop discipline)
-      Stores.withBootstrapShuffle(s, Seq(codes)) {
-        ivfPqIndexWrite(codes, out, kIvf = 4, m = 4,
-          subDim = 16, k = 8, codebooks = Some(pqBooks(s, dir)),
-          centroids = Some(ivfCentroidIdx(s, dir)))
-      }
+      ivfPqIndexWrite(Stores.onePartition(int8Codes(s, dir)), out,
+        kIvf = 4, m = 4, subDim = 16, k = 8,
+        codebooks = Some(pqBooks(s, dir)),
+        centroids = Some(ivfCentroidIdx(s, dir)))
       out
     })
 

@@ -62,131 +62,56 @@ object Stores {
   private def fsOf(s: SparkSession, p: Path): FileSystem =
     p.getFileSystem(s.sparkContext.hadoopConfiguration)
 
-  /** Run a driver-coordinated store-bootstrap section with
-    * `spark.sql.shuffle.partitions` sized from the section's INPUT
-    * frames' optimizer statistics — the connected-components loop's
-    * shuffle-sizing discipline (r17, `TextDedup.connectedComponents`)
-    * applied to the other eager multi-action sections in the repo: a
-    * store build/append/compact chain is ~10–30 small Spark actions
-    * whose shuffles are bounded by the corpus slice being indexed, and
-    * at test scale each action otherwise pays a 32-task stage over
-    * kilobytes (the r17 probe decomposition: ~0.2–0.45 s per action of
-    * scheduler floor, THE cost of the q182/q184–q187 absorbed builds).
-    * One partition per 64 MB of estimated input bytes keeps a 100 TB
-    * build at full session parallelism (the clamp is the session
-    * setting — this can only shrink below it, never grow a small
-    * session) and a bench-scale build at one task per stage.
-    * Correctness-invariant: partition count changes physical
-    * parallelism and output file counts only — every store artifact's
-    * CONTENT is integer-exact aggregates/joins, so serves hash
-    * identically (spec-pinned per store). Explicit `repartition(n,
-    * col)` calls inside the section (the one-file-per-bucket/cell
-    * writes) are unaffected.
-    *
-    * CONCURRENCY CONTRACT (r18 advice, restated; r19 advice #3's two
-    * proposed deletions were ATTEMPTED in r20 and are both
-    * structurally blocked in Spark 4, so the contract stays, now with
-    * evidence): the override mutates SESSION-global conf for the
-    * bootstrap body, and the store bootstraps sit behind
-    * `computeIfAbsent` memos — safe because Bench/Verify/the metered
-    * pipeline run queries SEQUENTIALLY on one session. (1) A
-    * thread-local override (`SQLConf.withExistingConf` over a cloned
-    * conf) does NOT work: classic Dataset actions plan and execute on
-    * `SQLExecution.withThreadLocalCaptured` threads, which capture
-    * the active session, local properties, and artifact state but
-    * NOT `existingConf` — measured: every bootstrapped first-touch
-    * job count regressed to its pre-cut level (q187 29 → 58) because
-    * the planning threads read the untouched session conf. (2) A
-    * cloned `spark.newSession()` does not work either: the bootstrap
-    * bodies consume CacheRegistry frames bound to the original
-    * session, and a Dataset executes under the conf of
-    * `df.sparkSession`, not of whichever session wraps the call — a
-    * clone would either fork the registry (rebuilding every shared
-    * cache) or silently keep planning under the original session.
-    * A deployment that serves queries CONCURRENTLY with store
-    * bootstraps must therefore run bootstraps on their own session
-    * WITH their own cache lifecycle, accepting the rebuild. */
-  private[graft] def withBootstrapShuffle[A](s: SparkSession,
-      inputs: Seq[DataFrame])(body: => A): A = {
-    val est = inputs.map(
-      _.queryExecution.optimizedPlan.stats.sizeInBytes).sum
-    val sessionParts = s.sessionState.conf.numShufflePartitions
-    val np = (BigInt(1).max(BigInt(sessionParts)
-      .min(est / BootstrapBytesPerPartition + 1))).toInt
-    val key = "spark.sql.shuffle.partitions"
-    val prev = s.conf.get(key)
-    s.conf.set(key, np.toString)
-    // When the whole bootstrap input fits ONE partition, adaptive
-    // execution has nothing to adapt — no skew to split, no partitions
-    // to coalesce — but it still materializes every shuffle stage as
-    // its own Spark JOB, and on a multi-action bootstrap that job
-    // floor IS the cost (measured on q187: 74 jobs with AQE, 48
-    // without, identical results — the scheduler round-trips the r17
-    // probe decomposition priced at ~0.2–0.45 s each under load).
-    // At scale np = the session setting and AQE stays on (skew joins,
-    // runtime coalescing — the reasons it exists). Scoped to the
-    // bootstrap body and restored in the finally, like the partition
-    // override; serves constructed outside keep their session AQE.
-    val aqeKey = "spark.sql.adaptive.enabled"
-    val prevAqe = s.conf.get(aqeKey)
-    // Same one-partition reasoning for AUTO-broadcast (r19): an
-    // un-hinted tiny join inside a one-partition bootstrap gets
-    // planned as a broadcast hash join, and every BroadcastExchange
-    // runs as its OWN Spark job — pure scheduler floor when both
-    // sides are one partition of kilobytes (tools.Profile's job lines
-    // attribute ~4 of q187's first-touch jobs to these). Disabling the
-    // threshold folds those joins into their consuming write jobs as
-    // extra stages of the SAME job. Explicit broadcast() HINTS (the
-    // model-frame joins — tiny at ANY scale) are unaffected: hints
-    // override the threshold, which is exactly the split we want. At
-    // scale np > 1 and the planner keeps its normal economics.
-    val abtKey = "spark.sql.autoBroadcastJoinThreshold"
-    val prevAbt = s.conf.get(abtKey)
-    // save-and-restore like the other keys, NOT a bare unset: a
-    // bootstrap nested inside another one-partition bootstrap would
-    // otherwise clear the outer body's flag on exit and silently
-    // re-broadcast the rest of the outer section (no current nesting
-    // exists; the restore keeps it from mattering if one appears)
-    val prevTiny = s.conf.getOption(TinyBootstrapConf)
-    if (np == 1) {
-      s.conf.set(aqeKey, "false")
-      s.conf.set(abtKey, "-1")
-      s.conf.set(TinyBootstrapConf, "true")
-    }
-    try body finally {
-      s.conf.set(key, prev)
-      s.conf.set(aqeKey, prevAqe)
-      s.conf.set(abtKey, prevAbt)
-      prevTiny match {
-        case Some(v) => s.conf.set(TinyBootstrapConf, v)
-        case None => s.conf.unset(TinyBootstrapConf)
-      }
-    }
-  }
+  /** Planned bytes one partition holds: a store build's input, a join's
+    * probe side or a CC graph at most this size plans as ONE partition. */
+  private val OnePartitionBytes = BigInt(64L * 1024 * 1024)
 
-  /** Conf flag raised while a ONE-PARTITION bootstrap body runs (see
-    * [[withBootstrapShuffle]]). Explicit tiny-side broadcast() hints
-    * consult it through [[scaleHint]]: a hint overrides the disabled
-    * auto-broadcast threshold, so without this gate every model-frame
-    * join inside a bootstrap still spawned its own BroadcastExchange
-    * job — scheduler floor for a join the one-partition shuffle
-    * planner folds into the consuming write job for free. */
-  private[operators] val TinyBootstrapConf = "spark.graft.bootstrap.tiny"
+  /** Whether `df` fits one partition: its planned size does, or its plan
+    * already is one partition (it descends from a one-partition input
+    * through row-size-growing projections, whose estimates can cross
+    * the line). */
+  private def fitsOnePartition(df: DataFrame): Boolean =
+    df.queryExecution.optimizedPlan.stats.sizeInBytes <= OnePartitionBytes ||
+      isOnePartition(df)
 
-  /** `broadcast(df)` everywhere EXCEPT inside a one-partition
-    * bootstrap section, where the plain frame joins fold into the
-    * consuming action (see [[TinyBootstrapConf]]). The hint is the
-    * 100 TB-correct shape — model frames are K×M rows against a
-    * corpus-sized probe — and stays on for every serve and every
-    * at-scale build (np > 1 never raises the flag). Result-identical
-    * either way: join strategy is physical only. */
-  private[operators] def scaleHint(df: DataFrame): DataFrame =
-    if (df.sparkSession.conf.get(TinyBootstrapConf, "false") == "true") df
-    else broadcast(df)
+  /** The one-partition rule for store builds, shaped in the plan (the
+    * store analogue of `Tables`' one-split rule): `df` whose planned size
+    * fits `OnePartitionBytes` is handed out as one partition
+    * ([[org.apache.spark.sql.graft.OnePartition]], planned as
+    * `coalesce(1)`). It then reports `SinglePartition`, so
+    * EnsureRequirements plans no exchange above it and a multi-action
+    * build over bench-scale data runs one task per job, with no AQE
+    * stage or broadcast jobs — the scheduler floor that was most of the
+    * q182/q184–q188 absorbed builds. A larger input keeps its
+    * partitioning, and AQE sizes the build's shuffles from map-output
+    * bytes. Job-free: it reads the planned size and partitioning only,
+    * and physical parallelism never changes a store artifact's content;
+    * `atScale` shapes the larger input instead. */
+  private[graft] def onePartition(df: DataFrame,
+      atScale: DataFrame => DataFrame = identity): DataFrame =
+    if (fitsOnePartition(df)) marked(df) else atScale(df)
 
-  /** One shuffle partition per 64 MB of estimated bootstrap input —
-    * the CC loop's constant, shared. */
-  private val BootstrapBytesPerPartition = BigInt(64L * 1024 * 1024)
+  private def marked(df: DataFrame): DataFrame =
+    org.apache.spark.sql.graft.OnePartition.mark(df, OnePartitionBytes)
+
+  /** Whether `df`'s rows are planned as one partition. */
+  private def isOnePartition(df: DataFrame): Boolean =
+    df.queryExecution.sparkPlan.outputPartitioning.numPartitions == 1
+
+  /** The equi-join `join(probe, other)` shaped by the probe's planned
+    * size. A probe that fits one partition joins at one task: both sides
+    * and the output are one partition ([[onePartition]]) and `other`
+    * carries a SHUFFLE_HASH hint, so the join plans no exchange and no
+    * broadcast job. A larger probe joins `atScale(other)`: `broadcast`
+    * for a model frame or tombstone set (K×M rows against a
+    * corpus-sized probe), the planner's own choice for data.
+    * Result-identical either way: join strategy is physical only. */
+  private[operators] def shapedJoin(probe: DataFrame, other: DataFrame,
+      atScale: DataFrame => DataFrame = identity)(
+      join: (DataFrame, DataFrame) => DataFrame): DataFrame =
+    if (fitsOnePartition(probe))
+      marked(join(marked(probe), onePartition(other).hint("shuffle_hash")))
+    else join(probe, atScale(other))
 
   /** Root directory for the process's on-disk store builds (r22, the
     * durable-location posture the store docs have promised since r15):
@@ -770,11 +695,10 @@ object Stores {
     val docsPath = s"$dir/${genName("docs", currentGen(s, dir))}"
     val chunks = s.read.schema("doc_id BIGINT").parquet(docsPath)
     if (b == null) return chunks.select("doc_id").filter(lit(false))
-    chunks
-      .filter(col("doc_id") >= b._1 * base
-        && col("doc_id") < (b._2 + 1) * base)
-      .join(guarded.select(col("doc_id").as("__td_doc")),
-        expr(s"doc_id div ${base}L") === col("__td_doc"), "left_semi")
+    shapedJoin(chunks.filter(col("doc_id") >= b._1 * base
+        && col("doc_id") < (b._2 + 1) * base),
+        guarded.select(col("doc_id").as("__td_doc")))(_.join(_,
+        expr(s"doc_id div ${base}L") === col("__td_doc"), "left_semi"))
       .select("doc_id").distinct()
   }
 
@@ -1155,7 +1079,7 @@ object Stores {
       // the same loud divergence, the same marker-skipping re-run.
       forAllStores(s, stores) { ref =>
         ledgered(s, ref.dir, s"named-$batchId", "appendAll")(
-          appendOne(s, ref, pinned, idCol, textCol, vecCol))
+          appendOne(s, ref, onePartition(pinned), idCol, textCol, vecCol))
         // convergent stamp, same rule as takedownAll: SET to the
         // pre-computed target so a crashed run's re-run aligns the list
         writeStoreVersion(s, ref.dir, target)
@@ -1483,16 +1407,16 @@ object Stores {
     }
 
     /** `rows` minus generation `g`'s tombstones: one anti-join per
-      * tombstone column, through [[scaleHint]] — the set is ids-only
+      * tombstone column, through [[shapedJoin]] — the set is ids-only
       * and small between compacts by contract, so a serve keeps its
-      * partition-pruned scan shape and pays a broadcast hash lookup per
-      * row, never a shuffle. No tombstone set (the common case) returns
+      * partition-pruned scan shape and pays a hash lookup per row,
+      * never a shuffle. No tombstone set (the common case) returns
       * `rows` untouched: zero cost until the first delete. */
     def minusTombs(s: SparkSession, dir: String, g: Long,
         rows: DataFrame): DataFrame =
       tombstones(s, dir, g).fold(rows)(t => tombCols.foldLeft(rows)(
-        (df, c) => df.join(scaleHint(t.select(col(tombIdCol).as(c))),
-          Seq(c), "left_anti")))
+        (df, c) => shapedJoin(df, t.select(col(tombIdCol).as(c)),
+          atScale = broadcast(_))(_.join(_, Seq(c), "left_anti"))))
 
     /** The live rows of dataset `kind` at generation `g`. */
     def live(s: SparkSession, dir: String, kind: String,
@@ -1502,10 +1426,11 @@ object Stores {
     /** Write `rows` one file per partition directory — a partition
       * count the write's own geometry fixes, so appends accrete at most
       * one file per touched partition between compacts instead of
-      * (shuffle.partitions × partitions) shards. */
+      * (shuffle.partitions × partitions) shards. Rows already planned as
+      * one partition are written by their one task as they are. */
     def writeParts(rows: DataFrame, n: Int, path: String,
         mode: String): Unit =
-      rows.repartition(n, col(partCol))
+      (if (isOnePartition(rows)) rows else rows.repartition(n, col(partCol)))
         .write.mode(mode).partitionBy(partCol).parquet(path)
 
     /** A (re)write: under the lock, clear any prior store life under
@@ -1577,7 +1502,8 @@ object Stores {
       * plan computes its ids. */
     protected def tombRows(s: SparkSession, dir: String, g: Long,
         ids: DataFrame, operatorSized: Boolean): DataFrame =
-      if (operatorSized) ids.coalesce(1) else ids.repartition(1)
+      if (operatorSized) ids.coalesce(1)
+      else onePartition(ids, _.repartition(1))
 
     /** Compact into the NEXT GENERATION: rewrite every dataset's live
       * rows (tombstones applied physically) one file per partition
@@ -1679,8 +1605,8 @@ object Stores {
       val g = currentGen(s, dir)
       val raw = statsRows(read(s, dir, main.kind, g))
       val dead = tombstones(s, dir, g).fold(raw.filter(lit(false)))(t =>
-        raw.join(scaleHint(t.select(tombIdCol)), Seq(tombIdCol),
-          "left_semi"))
+        shapedJoin(raw, t.select(tombIdCol), atScale = broadcast(_))(
+          _.join(_, Seq(tombIdCol), "left_semi")))
       val tomb = dead.groupBy(partCol).agg(count(lit(1)).as("tomb"))
       val (n, tc) = (col(statsCount), col("tomb"))
       val compactWhen = col("files") > maxFiles ||

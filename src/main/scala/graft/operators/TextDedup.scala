@@ -54,11 +54,11 @@ object TextDedup {
     * computing them once is the single biggest bench win. */
   private[graft] def docShingles(s: SparkSession, dir: String): DataFrame =
     CacheRegistry.cached(s, s"shingles:$dir") {
-      T(s, dir, "documents")
-        // documents is one parquet file → one input partition; without a
-        // repartition the whole shingle build runs on a single core
-        // (~6s of the first text query at sf0.1; ~0.5s spread over 32)
-        .repartition(col("doc_id"))
+      // a corpus that fits one partition stays one (Stores.onePartition);
+      // a larger one is spread by doc_id so the shingle build uses every
+      // core instead of the one its single parquet file plans
+      Stores.onePartition(T(s, dir, "documents"),
+          _.repartition(col("doc_id")))
         .filter(size(split(col("text"), " ")) >= 3)
         .select(col("doc_id"), shingles(col("text")).as("sh"))
     }
@@ -140,10 +140,9 @@ object TextDedup {
     * equality join every MinHash consumer (dir-bound cache above,
     * table-agnostic form below) runs. */
   private def bandedPairsOf(bands: DataFrame): DataFrame =
-    bands.as("a")
-      .join(bands.as("b"),
+    Stores.shapedJoin(bands, bands)((l, r) => l.as("a").join(r.as("b"),
         col("a.band") === col("b.band") && col("a.bv") === col("b.bv")
-          && col("a.doc_id") < col("b.doc_id"))
+          && col("a.doc_id") < col("b.doc_id")))
       .select(col("a.doc_id").as("doc_i"), col("b.doc_id").as("doc_j"))
       .distinct()
 
@@ -333,9 +332,9 @@ object TextDedup {
   private[graft] def countJoinPairs(docs: DataFrame): DataFrame = {
     val postings = docs.select(col("doc_id"), size(col("sh")).as("n"),
       explode(col("sh")).as("s"))
-    postings.as("a").join(postings.as("b"),
+    Stores.shapedJoin(postings, postings)((l, r) => l.as("a").join(r.as("b"),
         col("a.s") === col("b.s") && col("a.doc_id") < col("b.doc_id")
-          && col("a.n") <= col("b.n") * 2 && col("b.n") <= col("a.n") * 2)
+          && col("a.n") <= col("b.n") * 2 && col("b.n") <= col("a.n") * 2))
       .groupBy(col("a.doc_id").as("doc_i"), col("b.doc_id").as("doc_j"),
         col("a.n").as("n_i"), col("b.n").as("n_j"))
       .agg(count(lit(1)).as("n_common"))
@@ -571,47 +570,27 @@ object TextDedup {
     * linearly with rounds. At 100 TB, additionally switch to large-star /
     * small-star if components with long chains dominate.
     *
-    * The loop's shuffles are sized from the graph's PLAN STATISTICS,
-    * not the session default: every round's frames are bounded by the
-    * dup graph (|V| ≤ 2|E| rows of two longs), which on a dedup corpus
-    * is orders of magnitude smaller than the corpus the session's
-    * shuffle.partitions is tuned for — at sf0.1 the rounds over a
-    * 256-edge graph spent their entire ~1.5-2.5 s on near-empty
-    * 32-task stages plus one planning/codegen round-trip PER ACTION
-    * (the r17 probe decomposition: ~0.2-0.45 s per action floor), the
-    * whole cost of the operator. Sizing from
-    * `optimizedPlan.stats.sizeInBytes` costs ZERO extra actions —
-    * exact for the materialized cached frame the dup-cc caller passes,
-    * a conservative Catalyst estimate otherwise (an overestimate only
-    * means more, smaller tasks; MEMORY_AND_DISK persists make an
-    * underestimate spill, not fail). One partition per 64 MB keeps a
-    * billion-edge graph at full session parallelism and a small one at
-    * one task per stage. The shuffle-partitions override is set around
-    * the loop and restored in a finally; the operator is
-    * driver-coordinated (eager by design), and Bench/Verify run
-    * queries sequentially, so the session-scoped setting cannot leak
-    * into a concurrent query's plan.
+    * The loop's shape comes from the graph's PLANNED size, not the
+    * session's shuffle partitions: every round's frames are bounded by
+    * the dup graph (|V| ≤ 2|E| rows of two longs), orders of magnitude
+    * smaller than the corpus the session is tuned for — at sf0.1 the
+    * rounds over a 256-edge graph once spent their entire ~1.5-2.5 s on
+    * near-empty 32-task stages. A graph that fits one partition
+    * (`Stores.onePartition`, zero extra actions) runs every round as
+    * one task with no exchange; a larger one keeps its partitioning and
+    * AQE sizes the round shuffles.
     *
     * Input: undirected edges (src, dst), one row per pair.
     * Output: (id, lbl) — lbl = min vertex id of the component. */
   def connectedComponents(
       edges: DataFrame, maxIter: Int = 25): DataFrame = {
     val lvl = org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK
-    val s = edges.sparkSession
-    val symPlan = edges
-      .union(edges.select(col("dst").as("src"), col("src").as("dst")))
-    val estBytes = symPlan.queryExecution.optimizedPlan.stats.sizeInBytes
-    val sessionParts = s.sessionState.conf.numShufflePartitions
-    val np = (BigInt(1).max(BigInt(sessionParts)
-      .min(estBytes / CcBytesPerPartition + 1))).toInt
-    // the coalesce folds into the first materializing action — sizing
-    // the loop costs zero extra jobs
-    val sym = (if (np < symPlan.rdd.getNumPartitions)
-      symPlan.coalesce(np) else symPlan).persist(lvl)
-    val confKey = "spark.sql.shuffle.partitions"
-    val prevParts = s.conf.get(confKey)
-    s.conf.set(confKey, np.toString)
-    try {
+    // one partition when the graph fits one (Stores.onePartition):
+    // every frame in the loop then descends from a one-partition input
+    // and plans no exchange; a larger graph keeps its partitioning
+    val sym = Stores.onePartition(edges
+      .union(edges.select(col("dst").as("src"), col("src").as("dst"))))
+      .persist(lvl)
     // `cached` is the persisted frame backing the current `labels` view;
     // each round fully materializes the new frame (the changed-count scan
     // touches every partition) BEFORE the previous one is unpersisted, so
@@ -655,12 +634,7 @@ object TextDedup {
     sym.unpersist()
     cached.unpersist()
     out
-    } finally s.conf.set(confKey, prevParts)
   }
-
-  /** Loop-shuffle sizing for [[connectedComponents]]: one partition per
-    * 64 MB of estimated symmetric-edge bytes. */
-  private val CcBytesPerPartition = BigInt(64L * 1024 * 1024)
 
   val defs: Seq[QueryDef] = Seq(
 
@@ -1230,18 +1204,17 @@ object TextDedup {
     * key — and the result is one row; nothing here is ever corpus². */
   private[operators] def lshAuditPlan(ids: DataFrame, pairs: DataFrame,
       cand: DataFrame): DataFrame = {
-    val truth = pairs
-      .join(broadcast(ids.select(col("doc_id").as("doc_i"))),
-        Seq("doc_i"), "left_semi")
-      .join(broadcast(ids.select(col("doc_id").as("doc_j"))),
-        Seq("doc_j"), "left_semi")
+    def sampled(rows: DataFrame, c: String): DataFrame =
+      Stores.shapedJoin(rows, ids.select(col("doc_id").as(c)),
+        atScale = broadcast(_))(_.join(_, Seq(c), "left_semi"))
+    val truth = sampled(sampled(pairs, "doc_i"), "doc_j")
       .select(col("doc_i"), col("doc_j"), lit(1).as("in_t"))
-    val candM = cand
-      .join(pairs.select(col("doc_i"), col("doc_j"),
-        lit(true).as("verified")), Seq("doc_i", "doc_j"), "left")
+    val candM = Stores.shapedJoin(cand, pairs.select(col("doc_i"),
+        col("doc_j"), lit(true).as("verified")))(
+        _.join(_, Seq("doc_i", "doc_j"), "left"))
       .select(col("doc_i"), col("doc_j"), lit(1).as("in_c"),
         coalesce(col("verified"), lit(false)).as("is_true"))
-    truth.join(candM, Seq("doc_i", "doc_j"), "full")
+    Stores.shapedJoin(truth, candM)(_.join(_, Seq("doc_i", "doc_j"), "full"))
       .agg(count(col("in_t")).as("n_truth"),
         count(col("in_c")).as("n_cand"),
         count(when(col("in_t") === 1 && col("in_c") === 1, 1)).as("n_hit"),
@@ -1593,12 +1566,8 @@ object TextDedup {
       // (both produce equivalent stores; the loser's dir is deleted)
       val out = Stores.storeScratchDir(s, "graft-dedupidx-q184")
       val gate = graft.plans.HexWindowToLong.md5Bucket(col("doc_id"), 100)
-      val bands = bandsOf(signatures(s, dir).filter(gate < 95))
-      // bootstrap shuffles sized from the band frame being written
-      // (Stores.withBootstrapShuffle — the CC-loop discipline)
-      Stores.withBootstrapShuffle(s, Seq(bands)) {
-        dedupIndexWriteBands(bands, out)
-      }
+      dedupIndexWriteBands(Stores.onePartition(
+        bandsOf(signatures(s, dir).filter(gate < 95))), out)
       val prev = diskDedupDirs.put(dir, (fp, out))
       // a stale store was evicted (corpus overwritten in place, or a
       // racing build lost): delete it — no registry frame binds to
@@ -1789,13 +1758,13 @@ object TextDedup {
   /** The on-disk audit store behind the whole LSH-audit family — built
     * once per (corpus dir, corpus version) from the chain computations
     * ([[chainJaccardPairs]]/[[chainCandidatePairs]] over the shared
-    * shingle/signature caches), under a bootstrap sized from the
-    * documents table (the chain's true input: ~600 KB at sf0.1 →
-    * one-partition bootstrap; at 100 TB → the session's full
-    * parallelism). Since r21 the registry pair caches
-    * ([[jaccardPairs]]/[[lshCandidatePairs]]) read THROUGH this store,
-    * so the first chain consumer (q117 in bench order) absorbs the
-    * build and q188 serves off two pruned bucket scans.
+    * shingle/signature caches), shaped by the documents table's planned
+    * size (~600 KB at sf0.1 → one partition, [[Stores.onePartition]];
+    * at 100 TB → the session's full parallelism). Since r21 the
+    * registry pair caches ([[jaccardPairs]]/[[lshCandidatePairs]]) read
+    * THROUGH this store, so the first chain consumer (q117 in bench
+    * order) absorbs the build and q188 serves off two pruned bucket
+    * scans.
     *
     * Since r22 the memo is CORPUS-VERSION-KEYED
     * ([[corpusFingerprint]]) and self-healing: an in-place corpus
@@ -1844,16 +1813,11 @@ object TextDedup {
       // build OUTSIDE the map bin (r21 advice #4) — the CacheRegistry
       // probe-then-put discipline; a racing duplicate build is benign
       val out = Stores.storeScratchDir(s, "graft-auditidx-q188")
-      Stores.withBootstrapShuffle(s,
-        Seq(T(s, dir, "documents"))) {
-        // the build computes from the CHAIN directly (the registry
-        // caches now read through this store — calling them here
-        // would recurse); at bench scale the chain materialization
-        // folds into the first bucket-partitioned write under the
-        // one-partition bootstrap
-        auditStoreWrite(chainJaccardPairs(s, dir),
-          chainCandidatePairs(s, dir), out)
-      }
+      // the build computes from the CHAIN directly (the registry
+      // caches now read through this store — calling them here would
+      // recurse)
+      auditStoreWrite(Stores.onePartition(chainJaccardPairs(s, dir)),
+        Stores.onePartition(chainCandidatePairs(s, dir)), out)
       val prev = diskAuditDirs.put(dir, (fp, out))
       if (prev != null && prev._2 != out) deleteEvictedStore(s, prev._2)
       out

@@ -8,8 +8,8 @@ import org.apache.spark.sql.classic.ExpressionUtils
   * `private[sql]` (columnNodeSupport.scala); third-party expression
   * libraries conventionally expose them through a package-located shim
   * like this one. The conversions and the few package-private helpers
-  * below are the only Spark internals graft reaches — none leak past
-  * this file. */
+  * below, with [[OnePartition]], are the only Spark internals graft
+  * reaches — none leak past this package. */
 object Bridge {
   def column(e: Expression): Column = ExpressionUtils.column(e)
   def expression(c: Column): Expression = ExpressionUtils.expression(c)

@@ -1,5 +1,12 @@
 package graft
 
+import java.util.concurrent.ConcurrentLinkedQueue
+
+import scala.jdk.CollectionConverters._
+
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+import org.apache.spark.sql.graft.Bridge
+
 import graft.operators.Stores
 import graft.tools.Profile
 
@@ -55,7 +62,7 @@ class JobShapeSpec extends SparkTestBase {
       info(s"$name first-touch jobs: $n")
       assert(n <= bound,
         s"$name first-touch scheduled $n jobs (bound $bound) — an " +
-          "overhead-job class (schema-inference read, tiny-bootstrap " +
+          "overhead-job class (schema-inference read, one-partition " +
           "broadcast, separate stats/bounds aggregate) likely " +
           s"regressed; run tools.Profile $name to name the new jobs")
     }
@@ -85,6 +92,41 @@ class JobShapeSpec extends SparkTestBase {
   pin("q134_session_cooccurrence", 8,
     "the r20-traced floor: cache build + pair join + top-k; one-split " +
       "events drop the exchanges above the scan, 13 → 8 here")
+
+  // Store builds shape their plans, not the session: every job of each
+  // store's cold first build runs under the session's own shuffle,
+  // adaptive and broadcast settings (a job carries a setting only when
+  // the session set it) and under no graft key.
+  test("store first builds run every job under the session's own conf") {
+    val own = Seq("spark.sql.shuffle.partitions", "spark.sql.adaptive.enabled",
+      "spark.sql.autoBroadcastJoinThreshold").map(k => k -> spark.conf.get(k))
+    val jobs = new ConcurrentLinkedQueue[SparkListenerJobStart]()
+    val listener = new SparkListener {
+      override def onJobStart(j: SparkListenerJobStart): Unit = jobs.add(j)
+    }
+    val sc = spark.sparkContext
+    sc.addSparkListener(listener)
+    try Seq("q182_ivfpq_disk", "q184_disk_incremental_dedup",
+        "q185_bm25_disk", "q186_rag_fuse_disk", "q187_coord_takedown",
+        "q188_disk_lsh_audit").foreach(firstTouch)
+    finally {
+      Bridge.drainListenerBus(sc)
+      sc.removeSparkListener(listener)
+    }
+    val props = jobs.asScala.toSeq.map(j => j.jobId -> j.properties)
+    val changed = for {
+      (id, p) <- props
+      (k, v) <- own
+      set <- Option(p.getProperty(k)) if set != v
+    } yield s"job $id: $k=$set (session $v)"
+    val graftKeys = props.flatMap { case (id, p) =>
+      p.stringPropertyNames.asScala.filter(_.startsWith("spark.graft."))
+        .map(k => s"job $id: $k") }
+    val off = changed ++ graftKeys
+    assert(props.nonEmpty, "no job recorded")
+    if (off.nonEmpty) fail(s"${off.size} job settings differ from the " +
+      s"session's, e.g. ${off.take(6).mkString("; ")}")
+  }
 
   // AQE stage and broadcast jobs run on pool threads whose own call
   // site is `withThreadLocalCaptured at CompletableFuture.java`; the

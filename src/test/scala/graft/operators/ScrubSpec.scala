@@ -10,22 +10,6 @@ class ScrubSpec extends SparkTestBase {
 
   private val sf = "/root/testdata/sf0.001"
 
-  test("q99 bloom-prefiltered contamination equals the exact broadcast path") {
-    val withSplit = TextDedup.docShingles(spark, sf)
-      .withColumn("bk", graft.plans.HexWindowToLong.hexWindow(
-        md5(encode($"doc_id".cast("string"), "UTF-8")), 1) % 100)
-    val train = withSplit.filter($"bk" < 80)
-      .select($"doc_id", size($"sh").as("n_shingles"), $"sh")
-    val testVocab = withSplit.filter($"bk" >= 90)
-      .select(explode($"sh").as("tok")).distinct()
-    val exact = Scrub.contaminatedIds(train, testVocab)
-      .as[Long].collect().sorted
-    val bloomed = Scrub.bloomPrefilteredContaminated(train, testVocab)
-      .as[Long].collect().sorted
-    assert(exact.nonEmpty, "fixture must contain contaminated train docs")
-    assert(bloomed.sameElements(exact))
-  }
-
   test("q99 clean set and contaminated set partition the train split") {
     val clean = SparkEntry.queries("q99_decontam_clean")(spark, sf)
     val withSplit = TextDedup.docShingles(spark, sf)

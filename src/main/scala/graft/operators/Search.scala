@@ -699,13 +699,13 @@ object Search {
       * ids need no normalizing shuffle. */
     override protected def tombRows(s: SparkSession, dir: String, g: Long,
         ids: DataFrame, operatorSized: Boolean): DataFrame = {
-      val novel = tombstones(s, dir, g).fold(ids)(t => Stores.shapedJoin(
-        ids, t.select("doc_id"))(_.join(_, Seq("doc_id"), "left_anti")))
+      val novel = tombstones(s, dir, g).fold(ids)(t =>
+        ids.join(t.select("doc_id"), Seq("doc_id"), "left_anti"))
       val docs = read(s, dir, "docs", g)
       if (operatorSized)
         docs.join(broadcast(novel), Seq("doc_id"), "left_semi").coalesce(1)
-      else Stores.onePartition(Stores.shapedJoin(docs, novel)(
-        _.join(_, Seq("doc_id"), "left_semi")), _.repartition(1))
+      else Stores.onePartition(docs.join(novel, Seq("doc_id"), "left_semi"),
+        _.repartition(1))
     }
 
     /** Postings keep only rows whose doc survives in the compacted docs
@@ -717,8 +717,8 @@ object Search {
     override protected def compactInto(s: SparkSession, dir: String,
         ng: Long, n: Int, live: String => DataFrame): Unit = {
       val liveDocs = live("docs")
-      writeParts(Stores.shapedJoin(live("postings"), liveDocs.select("doc_id"))(
-          _.join(_, Seq("doc_id"), "left_semi"))
+      writeParts(live("postings")
+          .join(liveDocs.select("doc_id"), Seq("doc_id"), "left_semi")
           .select("doc_id", "term", "tf", "bkt"),
         n, path(dir, "postings", ng), "overwrite")
       writeDocsWithStats(liveDocs, dir, ng)
@@ -1147,7 +1147,13 @@ object Search {
     val tfCols = queryTerms.zipWithIndex.map { case (t, i) =>
       coalesce(sum(when(col("term") === t, col("tf"))), lit(0))
         .as(s"tf${i + 1}") }
+    // `matched` feeds two consumers (the df row and the scorer): the
+    // exchange lets both share ONE scan of the pruned postings, as
+    // Spark shares a CTE, where a one-partition slice would be scanned
+    // twice; over the aggregate's own doc_id partitioning the planner
+    // drops it
     val matched = post.groupBy("doc_id").agg(tfCols.head, tfCols.tail: _*)
+      .repartition(col("doc_id"))
     // df per term from the MATCHED per-doc aggregate, not a second
     // pass over the pruned scan (r19): a doc carries term i iff its
     // summed tfᵢ > 0 (postings rows exist iff tf > 0 under the
@@ -1201,7 +1207,7 @@ object Search {
   private[graft] def diskSearchDir(s: SparkSession, dir: String): String =
     diskSearchDirs.computeIfAbsent(dir, _ => {
       val out = Stores.storeScratchDir(s, "graft-searchidx-q185")
-      searchIndexWrite(Stores.onePartition(T(s, dir, "documents")), out)
+      searchIndexWrite(T(s, dir, "documents"), out)
       out
     })
 
@@ -1261,7 +1267,7 @@ object Search {
     diskChunkSearchDirs.computeIfAbsent(dir, _ => {
       val out = Stores.storeScratchDir(s, "graft-searchidx-q186")
       searchIndexWrite(
-        chunkCorpus(Stores.onePartition(T(s, dir, "documents"))), out,
+        chunkCorpus(T(s, dir, "documents")), out,
         idCol = "chunk_id", textCol = "chunk_text")
       out
     })
@@ -1322,9 +1328,10 @@ object Search {
     * q187's oracle states directly. The takedown arrives as DATA (the
     * frame-shaped [[Stores.takedownAll]], r18): the id slice never
     * crosses the driver, so the same bootstrap runs unchanged when the
-    * takedown batch is compliance-feed-sized. Its inputs pass through
-    * [[Stores.onePartition]]: at bench scale its ~25 small actions run
-    * one task each instead of a stage per shuffle. */
+    * takedown batch is compliance-feed-sized. At bench scale its
+    * inputs fit one split, so the size rule
+    * ([[org.apache.spark.sql.graft.OnePartition]]) runs its ~25 small
+    * actions one task each instead of a stage per shuffle. */
   private val coordDirs =
     new java.util.concurrent.ConcurrentHashMap[String, (String, String)]()
 
@@ -1334,7 +1341,7 @@ object Search {
       val root = Stores.storeScratchDir(s, "graft-coord-q187")
       val cs = s"$root/chunksearch"
       val ann = s"$root/ann"
-      val docs = Stores.onePartition(T(s, dir, "documents"))
+      val docs = T(s, dir, "documents")
       // the two stores' initial builds touch disjoint inputs
       // (chunked docs vs int8 codes + model frames) and disjoint
       // output dirs — run them CONCURRENTLY (r22, guide §2.6 /
@@ -1345,8 +1352,8 @@ object Search {
         searchIndexWrite(
           chunkCorpus(docs.filter(col("doc_id") % 3 =!= 0)), cs,
           idCol = "chunk_id", textCol = "chunk_text"),
-        Similarity.ivfPqIndexWrite(Stores.onePartition(
-          Similarity.int8Codes(s, dir).filter(col("vec_id") % 3 =!= 0)),
+        Similarity.ivfPqIndexWrite(
+          Similarity.int8Codes(s, dir).filter(col("vec_id") % 3 =!= 0),
           ann, kIvf = 4, m = 4, subDim = 16, k = 8,
           codebooks = Some(Similarity.pqBooks(s, dir)),
           centroids = Some(Similarity.ivfCentroidIdx(s, dir))))
@@ -1364,9 +1371,8 @@ object Search {
       // the driver's gate replays), ~20% of the appended slice's
       // chunks lost at sf0.1 (2000 embeddings / 5000 docs), read as
       // lex_rank off by 4 in the fused top-10.
-      val delta = Stores.shapedJoin(docs.filter(col("doc_id") % 3 === 0),
-          T(s, dir, "embeddings"))(
-          _.join(_, col("doc_id") === col("vec_id"), "left"))
+      val delta = docs.filter(col("doc_id") % 3 === 0)
+        .join(T(s, dir, "embeddings"), col("doc_id") === col("vec_id"), "left")
         .select(col("doc_id"), col("text"), col("embedding").as("emb"))
       Stores.appendAll(delta, "q187-bootstrap", stores)
       // takedown as DATA — the frame-shaped form: the id slice is a

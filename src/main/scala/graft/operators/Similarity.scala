@@ -400,8 +400,7 @@ object Similarity {
       k: Int, codebooks: Option[DataFrame] = None): DataFrame = {
     val sub = pqSubvectors(codes, m, subDim)
     val cb = codebooks.getOrElse(pqSeedCodebooks(codes, m, subDim, k))
-    Stores.shapedJoin(sub, cb, atScale = broadcast(_))(
-      _.join(_, col("s") === col("cs")))
+    sub.join(broadcast(cb), col("s") === col("cs"))
       .groupBy("vec_id", "s")
       .agg(min(struct(pqDist2(col("sc"), col("cbv")).as("d"),
         col("cb_id").as("cb"))).as("m0"))
@@ -585,10 +584,9 @@ object Similarity {
     // the cross join is written as a hash join on a key that is 0 on
     // every row: a hash join plans at one partition with no exchange,
     // where a CartesianProduct or nested-loop join needs one
-    Stores.shapedJoin(codes.withColumn("z", zeroKey(col("vec_id"))),
-        centroids.getOrElse(ivfCentroids(codes, kIvf))
-          .withColumn("cz", zeroKey(col("cl"))), atScale = broadcast(_))(
-        _.join(_, col("z") === col("cz")))
+    codes.withColumn("z", zeroKey(col("vec_id")))
+      .join(broadcast(centroids.getOrElse(ivfCentroids(codes, kIvf))
+        .withColumn("cz", zeroKey(col("cl")))), col("z") === col("cz"))
       .select(col("vec_id"),
         struct(graft.plans.L2DistanceSq.l2DistSq(col("v"), col("c"))
           .as("dist"), col("cl")).as("dc"))
@@ -676,7 +674,7 @@ object Similarity {
   private[graft] def diskIndexDir(s: SparkSession, dir: String): String =
     diskIdxDirs.computeIfAbsent(dir, _ => {
       val out = Stores.storeScratchDir(s, "graft-annidx-q182")
-      ivfPqIndexWrite(Stores.onePartition(int8Codes(s, dir)), out,
+      ivfPqIndexWrite(int8Codes(s, dir), out,
         kIvf = 4, m = 4, subDim = 16, k = 8,
         codebooks = Some(pqBooks(s, dir)),
         centroids = Some(ivfCentroidIdx(s, dir)))

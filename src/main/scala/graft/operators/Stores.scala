@@ -62,56 +62,17 @@ object Stores {
   private def fsOf(s: SparkSession, p: Path): FileSystem =
     p.getFileSystem(s.sparkContext.hadoopConfiguration)
 
-  /** Planned bytes one partition holds: a store build's input, a join's
-    * probe side or a CC graph at most this size plans as ONE partition. */
-  private val OnePartitionBytes = BigInt(64L * 1024 * 1024)
-
-  /** Whether `df` fits one partition: its planned size does, or its plan
-    * already is one partition (it descends from a one-partition input
-    * through row-size-growing projections, whose estimates can cross
-    * the line). */
-  private def fitsOnePartition(df: DataFrame): Boolean =
-    df.queryExecution.optimizedPlan.stats.sizeInBytes <= OnePartitionBytes ||
-      isOnePartition(df)
-
-  /** The one-partition rule for store builds, shaped in the plan (the
-    * store analogue of `Tables`' one-split rule): `df` whose planned size
-    * fits `OnePartitionBytes` is handed out as one partition
-    * ([[org.apache.spark.sql.graft.OnePartition]], planned as
-    * `coalesce(1)`). It then reports `SinglePartition`, so
-    * EnsureRequirements plans no exchange above it and a multi-action
-    * build over bench-scale data runs one task per job, with no AQE
-    * stage or broadcast jobs — the scheduler floor that was most of the
-    * q182/q184–q188 absorbed builds. A larger input keeps its
-    * partitioning, and AQE sizes the build's shuffles from map-output
-    * bytes. Job-free: it reads the planned size and partitioning only,
-    * and physical parallelism never changes a store artifact's content;
-    * `atScale` shapes the larger input instead. */
+  /** `df` as it is when its plan runs it as one partition (the size
+    * rule, [[org.apache.spark.sql.graft.OnePartition]]), else
+    * `atScale(df)`: the caller's shape for an input too large for one
+    * split. Job-free: it reads the planned partitioning only. */
   private[graft] def onePartition(df: DataFrame,
-      atScale: DataFrame => DataFrame = identity): DataFrame =
-    if (fitsOnePartition(df)) marked(df) else atScale(df)
-
-  private def marked(df: DataFrame): DataFrame =
-    org.apache.spark.sql.graft.OnePartition.mark(df, OnePartitionBytes)
+      atScale: DataFrame => DataFrame): DataFrame =
+    if (isOnePartition(df)) df else atScale(df)
 
   /** Whether `df`'s rows are planned as one partition. */
   private def isOnePartition(df: DataFrame): Boolean =
     df.queryExecution.sparkPlan.outputPartitioning.numPartitions == 1
-
-  /** The equi-join `join(probe, other)` shaped by the probe's planned
-    * size. A probe that fits one partition joins at one task: both sides
-    * and the output are one partition ([[onePartition]]) and `other`
-    * carries a SHUFFLE_HASH hint, so the join plans no exchange and no
-    * broadcast job. A larger probe joins `atScale(other)`: `broadcast`
-    * for a model frame or tombstone set (K×M rows against a
-    * corpus-sized probe), the planner's own choice for data.
-    * Result-identical either way: join strategy is physical only. */
-  private[operators] def shapedJoin(probe: DataFrame, other: DataFrame,
-      atScale: DataFrame => DataFrame = identity)(
-      join: (DataFrame, DataFrame) => DataFrame): DataFrame =
-    if (fitsOnePartition(probe))
-      marked(join(marked(probe), onePartition(other).hint("shuffle_hash")))
-    else join(probe, atScale(other))
 
   /** Root directory for the process's on-disk store builds (r22, the
     * durable-location posture the store docs have promised since r15):
@@ -506,6 +467,7 @@ object Stores {
     * (see [[currentGen]]). */
   private[graft] def withStoreLock[A](s: SparkSession, dir: String,
       op: String)(body: => A): A = {
+    org.apache.spark.sql.graft.OnePartition.install(s)
     val p = new Path(s"$dir/mutation-lock")
     val fs = fsOf(s, p)
     val out = try fs.create(p, false)
@@ -601,10 +563,12 @@ object Stores {
     * validates against it, so a directory without one is rejected by
     * name rather than served in an unknown geometry. */
   private[graft] def readManifest(s: SparkSession,
-      dir: String): Map[String, String] =
+      dir: String): Map[String, String] = {
+    org.apache.spark.sql.graft.OnePartition.install(s)
     readMetaSidecar(s, s"$dir/manifest").getOrElse(
       throw new IllegalStateException(s"no manifest sidecar under $dir " +
         "— not a store this library wrote (each store write creates it)"))
+  }
 
   /** (store_dir, corpus_version) for an audit view over many stores. */
   private[graft] def storeVersions(s: SparkSession,
@@ -695,10 +659,10 @@ object Stores {
     val docsPath = s"$dir/${genName("docs", currentGen(s, dir))}"
     val chunks = s.read.schema("doc_id BIGINT").parquet(docsPath)
     if (b == null) return chunks.select("doc_id").filter(lit(false))
-    shapedJoin(chunks.filter(col("doc_id") >= b._1 * base
-        && col("doc_id") < (b._2 + 1) * base),
-        guarded.select(col("doc_id").as("__td_doc")))(_.join(_,
-        expr(s"doc_id div ${base}L") === col("__td_doc"), "left_semi"))
+    chunks.filter(col("doc_id") >= b._1 * base
+        && col("doc_id") < (b._2 + 1) * base)
+      .join(guarded.select(col("doc_id").as("__td_doc")),
+        expr(s"doc_id div ${base}L") === col("__td_doc"), "left_semi")
       .select("doc_id").distinct()
   }
 
@@ -1079,7 +1043,7 @@ object Stores {
       // the same loud divergence, the same marker-skipping re-run.
       forAllStores(s, stores) { ref =>
         ledgered(s, ref.dir, s"named-$batchId", "appendAll")(
-          appendOne(s, ref, onePartition(pinned), idCol, textCol, vecCol))
+          appendOne(s, ref, pinned, idCol, textCol, vecCol))
         // convergent stamp, same rule as takedownAll: SET to the
         // pre-computed target so a crashed run's re-run aligns the list
         writeStoreVersion(s, ref.dir, target)
@@ -1407,16 +1371,17 @@ object Stores {
     }
 
     /** `rows` minus generation `g`'s tombstones: one anti-join per
-      * tombstone column, through [[shapedJoin]] — the set is ids-only
-      * and small between compacts by contract, so a serve keeps its
+      * tombstone column against the broadcast set — it is ids-only and
+      * small between compacts by contract, so a serve keeps its
       * partition-pruned scan shape and pays a hash lookup per row,
-      * never a shuffle. No tombstone set (the common case) returns
+      * never a shuffle (over one-partition rows the size rule joins in
+      * place instead). No tombstone set (the common case) returns
       * `rows` untouched: zero cost until the first delete. */
     def minusTombs(s: SparkSession, dir: String, g: Long,
         rows: DataFrame): DataFrame =
       tombstones(s, dir, g).fold(rows)(t => tombCols.foldLeft(rows)(
-        (df, c) => shapedJoin(df, t.select(col(tombIdCol).as(c)),
-          atScale = broadcast(_))(_.join(_, Seq(c), "left_anti"))))
+        (df, c) => df.join(broadcast(t.select(col(tombIdCol).as(c))),
+          Seq(c), "left_anti")))
 
     /** The live rows of dataset `kind` at generation `g`. */
     def live(s: SparkSession, dir: String, kind: String,
@@ -1605,8 +1570,7 @@ object Stores {
       val g = currentGen(s, dir)
       val raw = statsRows(read(s, dir, main.kind, g))
       val dead = tombstones(s, dir, g).fold(raw.filter(lit(false)))(t =>
-        shapedJoin(raw, t.select(tombIdCol), atScale = broadcast(_))(
-          _.join(_, Seq(tombIdCol), "left_semi")))
+        raw.join(broadcast(t.select(tombIdCol)), Seq(tombIdCol), "left_semi"))
       val tomb = dead.groupBy(partCol).agg(count(lit(1)).as("tomb"))
       val (n, tc) = (col(statsCount), col("tomb"))
       val compactWhen = col("files") > maxFiles ||

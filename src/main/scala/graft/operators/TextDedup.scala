@@ -54,9 +54,9 @@ object TextDedup {
     * computing them once is the single biggest bench win. */
   private[graft] def docShingles(s: SparkSession, dir: String): DataFrame =
     CacheRegistry.cached(s, s"shingles:$dir") {
-      // a corpus that fits one partition stays one (Stores.onePartition);
-      // a larger one is spread by doc_id so the shingle build uses every
-      // core instead of the one its single parquet file plans
+      // a corpus that fits one split stays one partition; a larger one
+      // is spread by doc_id so the shingle build uses every core
+      // instead of the one its single parquet file plans
       Stores.onePartition(T(s, dir, "documents"),
           _.repartition(col("doc_id")))
         .filter(size(split(col("text"), " ")) >= 3)
@@ -140,9 +140,9 @@ object TextDedup {
     * equality join every MinHash consumer (dir-bound cache above,
     * table-agnostic form below) runs. */
   private def bandedPairsOf(bands: DataFrame): DataFrame =
-    Stores.shapedJoin(bands, bands)((l, r) => l.as("a").join(r.as("b"),
+    bands.as("a").join(bands.as("b"),
         col("a.band") === col("b.band") && col("a.bv") === col("b.bv")
-          && col("a.doc_id") < col("b.doc_id")))
+          && col("a.doc_id") < col("b.doc_id"))
       .select(col("a.doc_id").as("doc_i"), col("b.doc_id").as("doc_j"))
       .distinct()
 
@@ -332,9 +332,9 @@ object TextDedup {
   private[graft] def countJoinPairs(docs: DataFrame): DataFrame = {
     val postings = docs.select(col("doc_id"), size(col("sh")).as("n"),
       explode(col("sh")).as("s"))
-    Stores.shapedJoin(postings, postings)((l, r) => l.as("a").join(r.as("b"),
+    postings.as("a").join(postings.as("b"),
         col("a.s") === col("b.s") && col("a.doc_id") < col("b.doc_id")
-          && col("a.n") <= col("b.n") * 2 && col("b.n") <= col("a.n") * 2))
+          && col("a.n") <= col("b.n") * 2 && col("b.n") <= col("a.n") * 2)
       .groupBy(col("a.doc_id").as("doc_i"), col("b.doc_id").as("doc_j"),
         col("a.n").as("n_i"), col("b.n").as("n_j"))
       .agg(count(lit(1)).as("n_common"))
@@ -575,21 +575,21 @@ object TextDedup {
     * the dup graph (|V| ≤ 2|E| rows of two longs), orders of magnitude
     * smaller than the corpus the session is tuned for — at sf0.1 the
     * rounds over a 256-edge graph once spent their entire ~1.5-2.5 s on
-    * near-empty 32-task stages. A graph that fits one partition
-    * (`Stores.onePartition`, zero extra actions) runs every round as
-    * one task with no exchange; a larger one keeps its partitioning and
-    * AQE sizes the round shuffles.
+    * near-empty 32-task stages. A graph that fits one split (the size
+    * rule, [[org.apache.spark.sql.graft.OnePartition]]) runs every
+    * round as one task with no exchange; a larger one keeps its
+    * partitioning and AQE sizes the round shuffles.
     *
     * Input: undirected edges (src, dst), one row per pair.
     * Output: (id, lbl) — lbl = min vertex id of the component. */
   def connectedComponents(
       edges: DataFrame, maxIter: Int = 25): DataFrame = {
     val lvl = org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK
-    // one partition when the graph fits one (Stores.onePartition):
+    // one partition when the graph fits one split (the size rule):
     // every frame in the loop then descends from a one-partition input
     // and plans no exchange; a larger graph keeps its partitioning
-    val sym = Stores.onePartition(edges
-      .union(edges.select(col("dst").as("src"), col("src").as("dst"))))
+    val sym = edges
+      .union(edges.select(col("dst").as("src"), col("src").as("dst")))
       .persist(lvl)
     // `cached` is the persisted frame backing the current `labels` view;
     // each round fully materializes the new frame (the changed-count scan
@@ -1205,16 +1205,14 @@ object TextDedup {
   private[operators] def lshAuditPlan(ids: DataFrame, pairs: DataFrame,
       cand: DataFrame): DataFrame = {
     def sampled(rows: DataFrame, c: String): DataFrame =
-      Stores.shapedJoin(rows, ids.select(col("doc_id").as(c)),
-        atScale = broadcast(_))(_.join(_, Seq(c), "left_semi"))
+      rows.join(ids.select(col("doc_id").as(c)), Seq(c), "left_semi")
     val truth = sampled(sampled(pairs, "doc_i"), "doc_j")
       .select(col("doc_i"), col("doc_j"), lit(1).as("in_t"))
-    val candM = Stores.shapedJoin(cand, pairs.select(col("doc_i"),
-        col("doc_j"), lit(true).as("verified")))(
-        _.join(_, Seq("doc_i", "doc_j"), "left"))
+    val candM = cand.join(pairs.select(col("doc_i"), col("doc_j"),
+        lit(true).as("verified")), Seq("doc_i", "doc_j"), "left")
       .select(col("doc_i"), col("doc_j"), lit(1).as("in_c"),
         coalesce(col("verified"), lit(false)).as("is_true"))
-    Stores.shapedJoin(truth, candM)(_.join(_, Seq("doc_i", "doc_j"), "full"))
+    truth.join(candM, Seq("doc_i", "doc_j"), "full")
       .agg(count(col("in_t")).as("n_truth"),
         count(col("in_c")).as("n_cand"),
         count(when(col("in_t") === 1 && col("in_c") === 1, 1)).as("n_hit"),
@@ -1566,8 +1564,8 @@ object TextDedup {
       // (both produce equivalent stores; the loser's dir is deleted)
       val out = Stores.storeScratchDir(s, "graft-dedupidx-q184")
       val gate = graft.plans.HexWindowToLong.md5Bucket(col("doc_id"), 100)
-      dedupIndexWriteBands(Stores.onePartition(
-        bandsOf(signatures(s, dir).filter(gate < 95))), out)
+      dedupIndexWriteBands(bandsOf(signatures(s, dir).filter(gate < 95)),
+        out)
       val prev = diskDedupDirs.put(dir, (fp, out))
       // a stale store was evicted (corpus overwritten in place, or a
       // racing build lost): delete it — no registry frame binds to
@@ -1759,8 +1757,9 @@ object TextDedup {
     * once per (corpus dir, corpus version) from the chain computations
     * ([[chainJaccardPairs]]/[[chainCandidatePairs]] over the shared
     * shingle/signature caches), shaped by the documents table's planned
-    * size (~600 KB at sf0.1 → one partition, [[Stores.onePartition]];
-    * at 100 TB → the session's full parallelism). Since r21 the
+    * size (~600 KB at sf0.1 → one partition by the size rule,
+    * [[org.apache.spark.sql.graft.OnePartition]]; at 100 TB → the
+    * session's full parallelism). Since r21 the
     * registry pair caches ([[jaccardPairs]]/[[lshCandidatePairs]]) read
     * THROUGH this store, so the first chain consumer (q117 in bench
     * order) absorbs the build and q188 serves off two pruned bucket
@@ -1816,8 +1815,8 @@ object TextDedup {
       // the build computes from the CHAIN directly (the registry
       // caches now read through this store — calling them here would
       // recurse)
-      auditStoreWrite(Stores.onePartition(chainJaccardPairs(s, dir)),
-        Stores.onePartition(chainCandidatePairs(s, dir)), out)
+      auditStoreWrite(chainJaccardPairs(s, dir), chainCandidatePairs(s, dir),
+        out)
       val prev = diskAuditDirs.put(dir, (fp, out))
       if (prev != null && prev._2 != out) deleteEvictedStore(s, prev._2)
       out

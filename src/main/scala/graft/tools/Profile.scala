@@ -6,9 +6,11 @@ import java.util.concurrent.atomic.{AtomicInteger, AtomicLong}
 import scala.jdk.CollectionConverters._
 import scala.util.control.NonFatal
 
+import org.apache.spark.metrics.source.CodegenMetrics
 import org.apache.spark.scheduler.{SparkListener, SparkListenerEvent,
   SparkListenerJobStart, SparkListenerStageCompleted, SparkListenerTaskEnd}
 import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.catalyst.expressions.codegen.CodeGenerator
 import org.apache.spark.sql.execution.SQLExecution
 import org.apache.spark.sql.execution.ui.SparkListenerSQLExecutionStart
 import org.apache.spark.sql.graft.Bridge
@@ -25,8 +27,9 @@ import graft.{Bench, CacheRegistry, SparkEntry, Tables}
   * query it prints one summary line — jobs, stages, tasks, summed task
   * time and wall time of the first touch, the wall time of a second run
   * (the gap is one-time setup: plan compile, footer reads, cache and
-  * store builds), and the resident cache sampled before the release —
-  * then one line per job with the SQL execution that owns it. The last
+  * store builds), the resident cache sampled before the release, and
+  * the first touch's codegen compiles and their time — then one line
+  * per job with the SQL execution that owns it. The last
   * line is the peak resident cache and the query where it occurred.
   *
   *   SPARK_GRAFT_SF_DIR=… sbt "runMain graft.tools.Profile [query …]"
@@ -46,10 +49,14 @@ object Profile {
     * file rows exactly and a cached block's columnar batches; input
     * bytes count a cached block's whole size but miss most of a Parquet
     * scan. `maxTaskShuffleWritten` is the busiest task's shuffle
-    * output, which carries the pairs a pair-join task produced. */
+    * output, which carries the pairs a pair-join task produced.
+    * `compiles` and `compileMs` are the Janino compiles the body ran and
+    * their summed time, over every thread of the JVM (driver and local
+    * executors alike). */
   final case class Touch(jobs: Seq[Job], stages: Int, tasks: Int,
       taskSeconds: Double, wallSeconds: Double, inputBytes: Long,
-      inputRecords: Long, shuffleRecords: Long, maxTaskShuffleWritten: Long)
+      inputRecords: Long, shuffleRecords: Long, maxTaskShuffleWritten: Long,
+      compiles: Long, compileMs: Double)
 
   /** Construct `name` over `sfDir` and count it. */
   def touch(spark: SparkSession, sfDir: String, name: String): Touch =
@@ -87,6 +94,8 @@ object Profile {
     }
     val sc = spark.sparkContext
     sc.addSparkListener(listener)
+    val compiles0 = CodegenMetrics.METRIC_COMPILATION_TIME.getCount
+    val compileNs0 = CodeGenerator.compileTime
     val (result, wall) = try {
       val t0 = System.nanoTime()
       val r = body
@@ -103,7 +112,9 @@ object Profile {
       Job(j.jobId, j.stageInfos.size, exec, label)
     }
     (result, Touch(records, stages.get, tasks.get, taskMs.get / 1000.0, wall,
-      inBytes.get, inRecords.get, shRecords.get, shWMax.get))
+      inBytes.get, inRecords.get, shRecords.get, shWMax.get,
+      CodegenMetrics.METRIC_COMPILATION_TIME.getCount - compiles0,
+      (CodeGenerator.compileTime - compileNs0) / 1e6))
   }
 
   def main(args: Array[String]): Unit = {
@@ -132,7 +143,8 @@ object Profile {
         if (mb > peakMb) { peakMb = mb; peakAt = name }
         println(f"$name: jobs=${t.jobs.size}%d stages=${t.stages}%d " +
           f"tasks=${t.tasks}%d taskTime=${t.taskSeconds}%.1fs " +
-          f"wall=${t.wallSeconds}%.2fs again=$again%.2fs cache=$mb%.1fMB")
+          f"wall=${t.wallSeconds}%.2fs again=$again%.2fs cache=$mb%.1fMB " +
+          f"compiles=${t.compiles}%d compile_ms=${t.compileMs}%.0f")
         t.jobs.foreach { j =>
           println(f"  job ${j.id}%4d stages=${j.stages}%2d " +
             f"exec=${j.execution.fold("-")(_.toString)}%-4s ${j.label.take(160)}")

@@ -1,26 +1,31 @@
 package org.apache.spark.sql.graft
 
-import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.catalyst.expressions.Attribute
-import org.apache.spark.sql.catalyst.plans.logical.{LogicalPlan, Statistics,
-  UnaryNode}
-import org.apache.spark.sql.classic.Dataset
-import org.apache.spark.sql.execution.{CoalesceExec, SparkPlan, SparkStrategy}
+import org.apache.spark.sql.catalyst.planning.ExtractEquiJoinKeys
+import org.apache.spark.sql.catalyst.plans.logical.{Filter, HintInfo, Join,
+  JoinHint, LeafNode, LocalRelation, LogicalPlan, Project,
+  RebalancePartitions, Repartition, RepartitionByExpression,
+  SHUFFLE_HASH, Statistics, UnaryNode, Union}
+import org.apache.spark.sql.catalyst.rules.Rule
+import org.apache.spark.sql.classic.SparkSession
+import org.apache.spark.sql.execution.{CoalesceExec, LogicalRDD,
+  PartitionedFileUtil, SparkPlan, SparkStrategy}
+import org.apache.spark.sql.execution.columnar.InMemoryRelation
+import org.apache.spark.sql.execution.datasources.{FilePartition,
+  HadoopFsRelation, LogicalRelation}
+import org.apache.spark.sql.internal.SQLConf
 
-/** A frame that runs as ONE partition and is sized at most `maxBytes`:
-  * planned as `coalesce(1)`, so it reports `SinglePartition`. Two things
-  * set it apart from a plain `coalesce(1)`, and no join hint can say
-  * either:
-  *  - Its planned size is capped at `maxBytes`. Without CBO a join's
-  *    estimate is the PRODUCT of its sides' sizes, and EnsureRequirements
-  *    keeps two one-partition join sides unshuffled only while each
-  *    estimate stays under `spark.sql.maxSinglePartitionBytes`; a join
-  *    above an earlier join would otherwise shuffle both sides.
-  *  - The optimizer pushes no semi or anti join below it (it does push
-  *    them below a `Repartition`), so an anti join over a marked scan
-  *    keeps the scan's one partition.
-  * [[graft.operators.Stores.onePartition]] is the only place that marks a
-  * frame, and only one whose planned size fits `maxBytes`. */
+/** A frame that runs as ONE partition: planned as `coalesce(1)`, so it
+  * reports `SinglePartition` and EnsureRequirements plans no exchange
+  * above it — each of which AQE would run as its own stage job, paying
+  * Spark's fixed per-stage cost for no data movement. Its planned size
+  * is capped at `maxBytes` (the session's
+  * `spark.sql.maxSinglePartitionBytes`): without CBO a join's estimate
+  * is the PRODUCT of its sides' sizes, and EnsureRequirements keeps a
+  * one-partition input unshuffled only while its estimate stays under
+  * that bound, so a join above an earlier join would otherwise shuffle
+  * both sides. [[OnePartition.install]]'s optimizer rule is the only
+  * place that marks a frame. */
 case class OnePartition(child: LogicalPlan, maxBytes: BigInt)
     extends UnaryNode {
   override def output: Seq[Attribute] = child.output
@@ -42,16 +47,127 @@ object OnePartition {
     }
   }
 
-  /** `df` under the marker. The planning strategy is added to the
-    * session's extra strategies on first use; it plans nothing but the
-    * marker. */
-  def mark(df: DataFrame, maxBytes: BigInt): DataFrame = {
-    val qe = df.queryExecution
-    val e = qe.sparkSession.experimental
-    e.synchronized {
-      if (!e.extraStrategies.contains(Planning))
-        e.extraStrategies = Planning +: e.extraStrategies
+  /** The one size rule. It runs last in the optimizer, after every
+    * pushdown, and marks:
+    *  - A leaf with its Project/Filter chain, when the leaf fits one
+    *    split by the session's own split sizing. A plain file relation
+    *    fits when its scan would plan one input split; a partitioned
+    *    one (a store dataset: one file per key, so its file count is its
+    *    key count, not its volume), a cached frame, a local relation or
+    *    a checkpoint when its planned bytes fit one split's bound. A
+    *    cached frame or checkpoint that already runs as one partition
+    *    fits too. The marker goes ABOVE the chain, so filters still
+    *    reach the parquet scan.
+    *  - An equi-join whose two sides are both one partition: it gets a
+    *    SHUFFLE_HASH hint on both sides, replacing a broadcast hint on a
+    *    marked leaf, and a marked output. The planner then joins in place, with no
+    *    exchange and no broadcast job. A union of one-partition inputs
+    *    is marked too.
+    * A table or frame big enough to matter plans several splits and
+    * comes back unchanged, so at scale the plan is the plain one. */
+  private case class SizeRule(session: SparkSession)
+      extends Rule[LogicalPlan] {
+    override def conf: SQLConf = session.sessionState.conf
+
+    def apply(plan: LogicalPlan): LogicalPlan =
+      if (plan.isStreaming) plan else mark(plan)
+
+    private def mark(p: LogicalPlan): LogicalPlan = p match {
+      case OnePartition(Chain(_), _) => p
+      case m: OnePartition => m.copy(child = m.child.mapChildren(mark))
+      case Chain(leaf) => if (fits(leaf)) marked(p) else p
+      case j: Join if ExtractEquiJoinKeys.unapply(j).isDefined =>
+        val k = j.mapChildren(mark).asInstanceOf[Join]
+        if (isOne(k.left) && isOne(k.right) && yields(k))
+          marked(k.copy(hint = InPlace))
+        else k
+      case u: Union =>
+        val k = u.mapChildren(mark)
+        if (k.children.forall(isOne)) marked(k) else k
+      case _ => p.mapChildren(mark)
     }
-    Dataset.ofRows(qe.sparkSession, OnePartition(qe.logical, maxBytes))
+
+    /** Whether `j`'s strategy hints give way: a hint on a marked leaf
+      * would only ship what the in-place join reads anyway, while a
+      * hint on a computed side is the caller's size choice and stands. */
+    private def yields(j: Join): Boolean =
+      Seq(j.hint.leftHint -> j.left, j.hint.rightHint -> j.right).forall {
+        case (Some(h), side) if h.strategy.isDefined =>
+          PartialFunction.cond(side) { case OnePartition(Chain(_), _) => true }
+        case _ => true
+      }
+
+    private def marked(p: LogicalPlan): OnePartition =
+      OnePartition(p, conf.getConf(SQLConf.MAX_SINGLE_PARTITION_BYTES))
+
+    private def fits(leaf: LeafNode): Boolean = leaf match {
+      case LogicalRelation(fs: HadoopFsRelation, _, _, false, _) =>
+        if (fs.partitionSchema.isEmpty) singleSplit(session, fs)
+        else fitsBytes(fs.location.sizeInBytes)
+      case r: LogicalRDD =>
+        fitsBytes(r.stats.sizeInBytes) || r.rdd.getNumPartitions == 1
+      case m: InMemoryRelation => fitsBytes(m.stats.sizeInBytes) ||
+        m.cachedPlan.outputPartitioning.numPartitions == 1
+      case l: LocalRelation => fitsBytes(l.stats.sizeInBytes)
+      case _ => false
+    }
+
+    /** The split bound Spark's file scan would apply to `bytes` read as
+      * one file. */
+    private def fitsBytes(bytes: BigInt): Boolean =
+      bytes <= FilePartition.maxSplitBytes(session,
+        (bytes + conf.filesOpenCostInBytes).toLong)
+  }
+
+  private val InPlace = {
+    val h = Some(HintInfo(strategy = Some(SHUFFLE_HASH)))
+    JoinHint(h, h)
+  }
+
+  /** A Project/Filter chain over a leaf, matched as the leaf. */
+  private object Chain {
+    def unapply(p: LogicalPlan): Option[LeafNode] = p match {
+      case Project(_, c) => unapply(c)
+      case Filter(_, c) => unapply(c)
+      case l: LeafNode => Some(l)
+      case _ => None
+    }
+  }
+
+  /** Whether `p` runs as one partition: a marked subtree under
+    * operators that keep their input's partitioning. */
+  private def isOne(p: LogicalPlan): Boolean = p match {
+    case _: OnePartition => true
+    case _: Repartition | _: RepartitionByExpression |
+        _: RebalancePartitions => false
+    case u: UnaryNode => isOne(u.child)
+    case _ => false
+  }
+
+  /** Whether `fs`'s scan plans ONE input split, by the scan's own
+    * sizing over the listing the relation already holds: nothing is
+    * planned or run. */
+  def singleSplit(session: org.apache.spark.sql.SparkSession,
+      fs: HadoopFsRelation): Boolean = {
+    val parts = fs.location.listFiles(Nil, Nil)
+    val max = FilePartition.maxSplitBytes(session, parts)
+    val files = for (p <- parts; f <- p.files; piece <-
+        PartitionedFileUtil.splitFiles(f, f.getPath,
+          fs.fileFormat.isSplitable(session, fs.options, f.getPath), max,
+          p.values)) yield piece
+    FilePartition.getFilePartitions(session,
+      files.sortBy(-_.length), max).size == 1
+  }
+
+  /** Add the size rule and its planning strategy to `s`, once. */
+  def install(s: org.apache.spark.sql.SparkSession): Unit = {
+    val session = s.asInstanceOf[SparkSession]
+    val e = session.experimental
+    e.synchronized {
+      if (!e.extraStrategies.contains(Planning)) {
+        e.extraStrategies = Planning +: e.extraStrategies
+        e.extraOptimizations = e.extraOptimizations :+ SizeRule(session)
+      }
+    }
   }
 }

@@ -19,23 +19,17 @@ import graft.tools.Profile
   * sf0.1, q186 29 → 19, q182 18 → 12, q185 12 → 10, q164 23 → 18 —
   * and r20 added the pair store whose first touch (q188) replaces the
   * 21-job LSH chain rebuild for audit consumers. A regression
-  * re-introducing any class adds jobs in steps of ~2–8; each bound
-  * carries headroom for AQE's data-dependent wobble at fixture scale
-  * but not for a class coming back. Job counts are deterministic for
-  * a fixed (data, config) — tools.Profile's standing rationale —
-  * and every pin here runs against cold memos and a cold registry
-  * exactly like the tool's standalone measurement. Only q187 was
-  * pinned in r19; the r19 verdict's ask #3 extends the pin to every
+  * re-introducing any class adds jobs in steps of ~2–8. Job counts are
+  * deterministic for a fixed (data, config) — tools.Profile's standing
+  * rationale — and every pin here runs against cold memos and a cold
+  * registry exactly like the tool's standalone measurement. Only q187
+  * was pinned in r19; the r19 verdict's ask #3 extends the pin to every
   * query the cut touched (a schema-inference read or un-gated
   * broadcast regressing in ANY of them must fail `sbt test`, not the
-  * round). Bounds are measured at sf0.001 in THIS spec's context
-  * (cold everything, tables pre-resolved) + ~5 headroom, except where
-  * `Tables`' one-split rule (one-partition fixture tables, so no
-  * exchange above them) lowered a count: there the bound IS the new
-  * measured count — the higher one where the count depends on what
-  * earlier suites left warm (q117 reads 14 alone, up to 15 in a full
-  * run; q164 reads 17 both ways, its LM broadcast rule running no
-  * job).
+  * round). Each bound IS the count measured at sf0.001 in THIS spec's
+  * context (cold everything, tables pre-resolved, the size rule
+  * shaping one-partition plans): the higher one where the count
+  * depends on what earlier suites left warm.
   */
 class JobShapeSpec extends SparkTestBase {
 
@@ -55,9 +49,12 @@ class JobShapeSpec extends SparkTestBase {
     }
   }
 
+  /** `name`'s first touch schedules at most `bound` jobs: the count
+    * measured in this spec's context, the higher of an alone and a
+    * full-suite run. The bound lives in the assertion, not the test
+    * name, so tightening a pin keeps its name. */
   private def pin(name: String, bound: Int, rationale: String): Unit =
-    test(s"$name first-touch schedules at most $bound jobs " +
-        s"($rationale)") {
+    test(s"$name first touch: $rationale") {
       val n = firstTouch(name).jobs.size
       info(s"$name first-touch jobs: $n")
       assert(n <= bound,
@@ -67,31 +64,23 @@ class JobShapeSpec extends SparkTestBase {
           s"regressed; run tools.Profile $name to name the new jobs")
     }
 
-  pin("q187_coord_takedown", 33,
-    "r19 cut 53 → 29 at sf0.1; r22 folds the takedown bounds " +
-      "aggregate into the id pin's observed metrics — 28 measured here")
-  pin("q186_rag_fuse_disk", 24, "r19 cut: 29 → 19 at sf0.1; 18 here")
-  pin("q182_ivfpq_disk", 17, "r19 cut: 18 → 12 at sf0.1; 11 here")
-  pin("q185_bm25_disk", 15, "r19 cut: 12 → 10 at sf0.1; 9 here")
-  pin("q164_nb_source", 17, "r19 cut: 23 → 18 at sf0.1; one-split " +
-    "tables and the job-free LM size rule: 17 here")
-  pin("q188_disk_lsh_audit", 12,
-    "the r20 pair store: first touch reads the store instead of " +
-      "rebuilding the 21-job LSH chain; 12 here with one-split tables")
+  // r19 cut 53 → 29 at sf0.1; r22 folded the takedown bounds aggregate
+  // into the id pin's observed metrics
+  pin("q187_coord_takedown", 34, "the r19/r22 bootstrap cuts")
+  pin("q186_rag_fuse_disk", 17, "the r19 bootstrap cut") // 29 → 19 at sf0.1
+  pin("q182_ivfpq_disk", 10, "the r19 bootstrap cut") // 18 → 12 at sf0.1
+  pin("q185_bm25_disk", 9, "the r19 bootstrap cut") // 12 → 10 at sf0.1
+  pin("q164_nb_source", 16, "the r19 cut, job-free LM rule") // 23 → 18 at sf0.1
+  pin("q188_disk_lsh_audit", 9, "reads the r20 pair store")
   // the r20 verdict's ask #4: the deep-chain class gets drift pins
   // too — a schema-inference read or un-gated broadcast creeping into
   // the chain must fail `sbt test`, not surface as a judged-line
   // mystery. After the r21 store rewiring q117's first touch IS the
-  // store build + serve and q121's candidate graph reads the store.
-  pin("q117_lsh_recall", 15,
-    "r21 rewiring: first touch = pair-store build + audit serve " +
-      "(was the 21-job chain at sf0.1); 14–15 here with one-split tables")
-  pin("q121_pagerank_neardup", 24,
-    "r21 rewiring: store-fed candidate graph + 2 structure pins + 3 " +
-      "unrolled rounds (was 19 at sf0.1); 19 measured here")
-  pin("q134_session_cooccurrence", 8,
-    "the r20-traced floor: cache build + pair join + top-k; one-split " +
-      "events drop the exchanges above the scan, 13 → 8 here")
+  // store build + serve (was the 21-job chain at sf0.1) and q121's
+  // candidate graph reads the store (was 19 at sf0.1).
+  pin("q117_lsh_recall", 12, "pair-store build + audit serve")
+  pin("q121_pagerank_neardup", 11, "store-fed graph, 3 rounds")
+  pin("q134_session_cooccurrence", 7, "cache, pair join, top-k")
 
   // Store builds shape their plans, not the session: every job of each
   // store's cold first build runs under the session's own shuffle,

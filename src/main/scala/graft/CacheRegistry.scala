@@ -83,13 +83,11 @@ object CacheRegistry {
     val hit = entries.get(k)
     if (hit != null) hit
     else {
-      if (hooked.add(s)) {
-        org.apache.spark.sql.graft.OnePartition.install(s)
+      if (hooked.add(s))
         s.sparkContext.addSparkListener(new SparkListener {
           override def onApplicationEnd(e: SparkListenerApplicationEnd): Unit =
             clear(s)
         })
-      }
       val built = build.persist(StorageLevel.MEMORY_AND_DISK)
       val prev = entries.putIfAbsent(k, built)
       if (prev == null) built else prev

@@ -1,6 +1,10 @@
 package graft
 
+import scala.jdk.CollectionConverters._
+
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.execution.datasources.LogicalRelation
+import org.apache.spark.sql.sources.BaseRelation
 
 /** Source layer: one parquet file per table under the scale-factor dir
   * (TESTDATA.md). Parquet is self-describing, so this replaces the
@@ -74,6 +78,14 @@ object Tables {
       if (prev == null) df else prev
     }
   }
+
+  /** Whether `r` is the relation of a table resolved here: the size
+    * rule judges a table by the splits its scan plans. */
+  def isTable(r: BaseRelation): Boolean =
+    resolved.values.asScala.exists(_.queryExecution.analyzed.exists {
+      case l: LogicalRelation => l.relation eq r
+      case _ => false
+    })
 
   private def read(
       spark: SparkSession, sfDir: String, name: String): DataFrame = {

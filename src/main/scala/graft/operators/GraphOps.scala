@@ -1,9 +1,9 @@
 package graft.operators
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
-import graft.{QueryDef, Tables}
+import graft.QueryDef
 
 /** Graph analytics over pipeline-derived graphs (SURVEY.md §2C): PageRank
   * centrality on the near-dup candidate graph — the standard way to pick
@@ -25,9 +25,6 @@ import graft.{QueryDef, Tables}
   * fixed-iteration shape the oracle can replay as unrolled CTEs.
   */
 object GraphOps {
-  private def T(s: SparkSession, dir: String, n: String): DataFrame =
-    Tables(s, dir, n)
-
   /** Fixed-point PageRank (d=0.85, scale 1e6) over directed `edges`
     * (`src`, `dst`; pass both directions for an undirected graph).
     * Returns (id, d = out-degree, r = rank after `iters` rounds).

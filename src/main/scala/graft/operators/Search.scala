@@ -691,21 +691,17 @@ object Search {
       * store) skipped, so a retried delete cannot double-subtract the
       * stats correction — the one way this store's delete is STRICTER
       * than the others' (whose anti-join semantics forgive duplicates
-      * for free). An operator-sized list broadcasts the id set and
-      * collapses the lookup onto one task; a frame keeps the docs scan
-      * parallel (keyed joins left to AQE — a compliance batch can be
-      * corpus-scale) and funnels to one file only at the write. The
-      * docs semi-join emits each docs row at most once, so duplicate
-      * ids need no normalizing shuffle. */
+      * for free). The docs scan keeps its own shape (keyed joins left
+      * to the planner — a compliance batch can be corpus-scale) and
+      * funnels to one file only at the write. The docs semi-join emits
+      * each docs row at most once, so duplicate ids need no
+      * normalizing shuffle. */
     override protected def tombRows(s: SparkSession, dir: String, g: Long,
-        ids: DataFrame, operatorSized: Boolean): DataFrame = {
+        ids: DataFrame): DataFrame = {
       val novel = tombstones(s, dir, g).fold(ids)(t =>
         ids.join(t.select("doc_id"), Seq("doc_id"), "left_anti"))
-      val docs = read(s, dir, "docs", g)
-      if (operatorSized)
-        docs.join(broadcast(novel), Seq("doc_id"), "left_semi").coalesce(1)
-      else Stores.onePartition(docs.join(novel, Seq("doc_id"), "left_semi"),
-        _.repartition(1))
+      Stores.onePartition(read(s, dir, "docs", g)
+        .join(novel, Seq("doc_id"), "left_semi"), _.repartition(1))
     }
 
     /** Postings keep only rows whose doc survives in the compacted docs

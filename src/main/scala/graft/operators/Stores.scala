@@ -68,11 +68,8 @@ object Stores {
     * split. Job-free: it reads the planned partitioning only. */
   private[graft] def onePartition(df: DataFrame,
       atScale: DataFrame => DataFrame): DataFrame =
-    if (isOnePartition(df)) df else atScale(df)
-
-  /** Whether `df`'s rows are planned as one partition. */
-  private def isOnePartition(df: DataFrame): Boolean =
-    df.queryExecution.sparkPlan.outputPartitioning.numPartitions == 1
+    if (df.queryExecution.sparkPlan.outputPartitioning.numPartitions == 1) df
+    else atScale(df)
 
   /** Root directory for the process's on-disk store builds (r22, the
     * durable-location posture the store docs have promised since r15):
@@ -1395,7 +1392,7 @@ object Stores {
       * one partition are written by their one task as they are. */
     def writeParts(rows: DataFrame, n: Int, path: String,
         mode: String): Unit =
-      (if (isOnePartition(rows)) rows else rows.repartition(n, col(partCol)))
+      onePartition(rows, _.repartition(n, col(partCol)))
         .write.mode(mode).partitionBy(partCol).parquet(path)
 
     /** A (re)write: under the lock, clear any prior store life under
@@ -1428,7 +1425,7 @@ object Stores {
     def delete(s: SparkSession, dir: String, ids: Seq[Long]): Unit = {
       require(ids.nonEmpty, s"${op}Delete: ids must be non-empty")
       import s.implicits._
-      deleteRows(s, dir, ids.toDF(tombIdCol), operatorSized = true)
+      deletePinned(s, dir, ids.toDF(tombIdCol))
     }
 
     /** FRAME-shaped [[delete]] (the no-collect takedown path): `ids`
@@ -1450,25 +1447,20 @@ object Stores {
       * pinned ([[takedownAll]]'s dispatch): skips the guard+checkpoint
       * the public form pays once per store. */
     def deletePinned(s: SparkSession, dir: String, ids: DataFrame): Unit =
-      deleteRows(s, dir, ids, operatorSized = false)
-
-    private def deleteRows(s: SparkSession, dir: String, ids: DataFrame,
-        operatorSized: Boolean): Unit =
       withStoreLock(s, dir, s"${op}Delete") {
         val g = currentGen(s, dir)
-        tombRows(s, dir, g, ids, operatorSized)
+        tombRows(s, dir, g, ids)
           .write.mode("append").parquet(path(dir, "tombstones", g))
         bumpStoreVersion(s, dir)
       }
 
     /** HOOK: the tombstone rows a delete appends — by default the ids
-      * themselves, funnelled to one file: an operator-sized list
-      * collapses onto one task, a frame repartitions AFTER whatever
-      * plan computes its ids. */
+      * themselves, funnelled to one file: ids the plan already runs as
+      * one partition (an operator-sized list) are written as they are,
+      * a larger frame repartitions AFTER whatever plan computes them. */
     protected def tombRows(s: SparkSession, dir: String, g: Long,
-        ids: DataFrame, operatorSized: Boolean): DataFrame =
-      if (operatorSized) ids.coalesce(1)
-      else onePartition(ids, _.repartition(1))
+        ids: DataFrame): DataFrame =
+      onePartition(ids, _.repartition(1))
 
     /** Compact into the NEXT GENERATION: rewrite every dataset's live
       * rows (tombstones applied physically) one file per partition

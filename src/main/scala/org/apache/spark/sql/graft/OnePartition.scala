@@ -19,20 +19,20 @@ import org.apache.spark.sql.internal.SQLConf
   * reports `SinglePartition` and EnsureRequirements plans no exchange
   * above it — each of which AQE would run as its own stage job, paying
   * Spark's fixed per-stage cost for no data movement. Its planned size
-  * is capped at `maxBytes` (the session's
-  * `spark.sql.maxSinglePartitionBytes`): without CBO a join's estimate
+  * is capped at the session's `spark.sql.maxSinglePartitionBytes`:
+  * without CBO a join's estimate
   * is the PRODUCT of its sides' sizes, and EnsureRequirements keeps a
   * one-partition input unshuffled only while its estimate stays under
   * that bound, so a join above an earlier join would otherwise shuffle
   * both sides. [[OnePartition.install]]'s optimizer rule is the only
   * place that marks a frame. */
-case class OnePartition(child: LogicalPlan, maxBytes: BigInt)
-    extends UnaryNode {
+case class OnePartition(child: LogicalPlan) extends UnaryNode {
   override def output: Seq[Attribute] = child.output
   override def maxRows: Option[Long] = child.maxRows
   override def stats: Statistics = {
     val c = child.stats
-    c.copy(sizeInBytes = c.sizeInBytes.min(maxBytes))
+    c.copy(sizeInBytes = c.sizeInBytes.min(
+      conf.getConf(SQLConf.MAX_SINGLE_PARTITION_BYTES)))
   }
   override protected def withNewChildInternal(
       newChild: LogicalPlan): OnePartition = copy(child = newChild)
@@ -42,7 +42,7 @@ object OnePartition {
 
   private object Planning extends SparkStrategy {
     def apply(plan: LogicalPlan): Seq[SparkPlan] = plan match {
-      case OnePartition(child, _) => CoalesceExec(1, planLater(child)) :: Nil
+      case OnePartition(child) => CoalesceExec(1, planLater(child)) :: Nil
       case _ => Nil
     }
   }
@@ -50,19 +50,21 @@ object OnePartition {
   /** The one size rule. It runs last in the optimizer, after every
     * pushdown, and marks:
     *  - A leaf with its Project/Filter chain, when the leaf fits one
-    *    split by the session's own split sizing. A plain file relation
-    *    fits when its scan would plan one input split; a partitioned
-    *    one (a store dataset: one file per key, so its file count is its
-    *    key count, not its volume), a cached frame, a local relation or
-    *    a checkpoint when its planned bytes fit one split's bound. A
-    *    cached frame or checkpoint that already runs as one partition
-    *    fits too. The marker goes ABOVE the chain, so filters still
-    *    reach the parquet scan.
+    *    split by the session's own split sizing. A table
+    *    ([[graft.Tables]]) fits when its scan would plan one input
+    *    split, so a table written as several files keeps its parallel
+    *    read. Any other leaf fits when its planned bytes fit the split
+    *    bound Spark's file scan gives them read as one file: a store
+    *    dataset accretes one small file per append or key, and its
+    *    volume, not the open cost per file, says whether it needs more
+    *    than one task. A cached frame or checkpoint that already runs
+    *    as one partition fits too. The marker goes ABOVE the chain, so
+    *    filters still reach the parquet scan.
     *  - An equi-join whose two sides are both one partition: it gets a
     *    SHUFFLE_HASH hint on both sides, replacing a broadcast hint on a
-    *    marked leaf, and a marked output. The planner then joins in place, with no
-    *    exchange and no broadcast job. A union of one-partition inputs
-    *    is marked too.
+    *    marked leaf, and a marked output. The planner then joins in
+    *    place, with no exchange and no broadcast job. A union of
+    *    one-partition inputs is marked too.
     * A table or frame big enough to matter plans several splits and
     * comes back unchanged, so at scale the plan is the plain one. */
   private case class SizeRule(session: SparkSession)
@@ -73,17 +75,17 @@ object OnePartition {
       if (plan.isStreaming) plan else mark(plan)
 
     private def mark(p: LogicalPlan): LogicalPlan = p match {
-      case OnePartition(Chain(_), _) => p
+      case OnePartition(Chain(_)) => p
       case m: OnePartition => m.copy(child = m.child.mapChildren(mark))
-      case Chain(leaf) => if (fits(leaf)) marked(p) else p
+      case Chain(leaf) => if (fits(leaf)) OnePartition(p) else p
       case j: Join if ExtractEquiJoinKeys.unapply(j).isDefined =>
         val k = j.mapChildren(mark).asInstanceOf[Join]
         if (isOne(k.left) && isOne(k.right) && yields(k))
-          marked(k.copy(hint = InPlace))
+          OnePartition(k.copy(hint = InPlace))
         else k
       case u: Union =>
         val k = u.mapChildren(mark)
-        if (k.children.forall(isOne)) marked(k) else k
+        if (k.children.forall(isOne)) OnePartition(k) else k
       case _ => p.mapChildren(mark)
     }
 
@@ -92,37 +94,44 @@ object OnePartition {
       * hint on a computed side is the caller's size choice and stands. */
     private def yields(j: Join): Boolean =
       Seq(j.hint.leftHint -> j.left, j.hint.rightHint -> j.right).forall {
-        case (Some(h), side) if h.strategy.isDefined =>
-          PartialFunction.cond(side) { case OnePartition(Chain(_), _) => true }
-        case _ => true
+        case (_, OnePartition(Chain(_))) => true
+        case (h, _) => h.forall(_.strategy.isEmpty)
       }
 
-    private def marked(p: LogicalPlan): OnePartition =
-      OnePartition(p, conf.getConf(SQLConf.MAX_SINGLE_PARTITION_BYTES))
-
     private def fits(leaf: LeafNode): Boolean = leaf match {
-      case LogicalRelation(fs: HadoopFsRelation, _, _, false, _) =>
-        if (fs.partitionSchema.isEmpty) singleSplit(session, fs)
-        else fitsBytes(fs.location.sizeInBytes)
-      case r: LogicalRDD =>
-        fitsBytes(r.stats.sizeInBytes) || r.rdd.getNumPartitions == 1
-      case m: InMemoryRelation => fitsBytes(m.stats.sizeInBytes) ||
+      case LogicalRelation(fs: HadoopFsRelation, _, _, _, _)
+          if graft.Tables.isTable(fs) => singleSplit(fs)
+      case LogicalRelation(_: HadoopFsRelation, _, _, _, _) |
+          _: LocalRelation => fitsBytes(leaf)
+      case r: LogicalRDD => fitsBytes(r) || r.rdd.getNumPartitions == 1
+      case m: InMemoryRelation => fitsBytes(m) ||
         m.cachedPlan.outputPartitioning.numPartitions == 1
-      case l: LocalRelation => fitsBytes(l.stats.sizeInBytes)
       case _ => false
     }
 
-    /** The split bound Spark's file scan would apply to `bytes` read as
-      * one file. */
-    private def fitsBytes(bytes: BigInt): Boolean =
+    private def fitsBytes(leaf: LeafNode): Boolean = {
+      val bytes = leaf.stats.sizeInBytes
       bytes <= FilePartition.maxSplitBytes(session,
         (bytes + conf.filesOpenCostInBytes).toLong)
+    }
+
+    /** Whether `fs`'s scan plans ONE input split, by the scan's own
+      * sizing over the listing the relation already holds: nothing is
+      * planned or run. */
+    private def singleSplit(fs: HadoopFsRelation): Boolean = {
+      val parts = fs.location.listFiles(Nil, Nil)
+      val max = FilePartition.maxSplitBytes(session, parts)
+      val files = for (p <- parts; f <- p.files; piece <-
+          PartitionedFileUtil.splitFiles(f, f.getPath,
+            fs.fileFormat.isSplitable(session, fs.options, f.getPath), max,
+            p.values)) yield piece
+      FilePartition.getFilePartitions(session,
+        files.sortBy(-_.length), max).size == 1
+    }
   }
 
-  private val InPlace = {
-    val h = Some(HintInfo(strategy = Some(SHUFFLE_HASH)))
-    JoinHint(h, h)
-  }
+  private val InPlace = JoinHint(Some(HintInfo(Some(SHUFFLE_HASH))),
+    Some(HintInfo(Some(SHUFFLE_HASH))))
 
   /** A Project/Filter chain over a leaf, matched as the leaf. */
   private object Chain {
@@ -142,21 +151,6 @@ object OnePartition {
         _: RebalancePartitions => false
     case u: UnaryNode => isOne(u.child)
     case _ => false
-  }
-
-  /** Whether `fs`'s scan plans ONE input split, by the scan's own
-    * sizing over the listing the relation already holds: nothing is
-    * planned or run. */
-  def singleSplit(session: org.apache.spark.sql.SparkSession,
-      fs: HadoopFsRelation): Boolean = {
-    val parts = fs.location.listFiles(Nil, Nil)
-    val max = FilePartition.maxSplitBytes(session, parts)
-    val files = for (p <- parts; f <- p.files; piece <-
-        PartitionedFileUtil.splitFiles(f, f.getPath,
-          fs.fileFormat.isSplitable(session, fs.options, f.getPath), max,
-          p.values)) yield piece
-    FilePartition.getFilePartitions(session,
-      files.sortBy(-_.length), max).size == 1
   }
 
   /** Add the size rule and its planning strategy to `s`, once. */

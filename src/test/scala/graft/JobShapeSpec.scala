@@ -66,7 +66,7 @@ class JobShapeSpec extends SparkTestBase {
 
   // r19 cut 53 → 29 at sf0.1; r22 folded the takedown bounds aggregate
   // into the id pin's observed metrics
-  pin("q187_coord_takedown", 34, "the r19/r22 bootstrap cuts")
+  pin("q187_coord_takedown", 27, "the r19/r22 bootstrap cuts")
   pin("q186_rag_fuse_disk", 17, "the r19 bootstrap cut") // 29 → 19 at sf0.1
   pin("q182_ivfpq_disk", 10, "the r19 bootstrap cut") // 18 → 12 at sf0.1
   pin("q185_bm25_disk", 9, "the r19 bootstrap cut") // 12 → 10 at sf0.1

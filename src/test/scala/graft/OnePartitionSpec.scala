@@ -2,8 +2,6 @@ package graft
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.execution.{ExplainMode, FileSourceScanExec}
-import org.apache.spark.sql.execution.datasources.{HadoopFsRelation,
-  LogicalRelation}
 import org.apache.spark.sql.graft.OnePartition
 
 import graft.tools.Profile
@@ -27,11 +25,9 @@ class OnePartitionSpec extends SparkTestBase {
     s
   }
 
-  private def verdict(s: SparkSession, df: DataFrame): Boolean =
-    df.queryExecution.analyzed.collectFirst {
-      case LogicalRelation(fs: HadoopFsRelation, _, _, _, _) =>
-        OnePartition.singleSplit(s, fs)
-    }.get
+  /** The rule's verdict: whether it marked the table's scan. */
+  private def verdict(df: DataFrame): Boolean =
+    df.queryExecution.optimizedPlan.isInstanceOf[OnePartition]
 
   private def scanSplits(df: DataFrame): Int =
     df.queryExecution.executedPlan.collectFirst {
@@ -44,7 +40,7 @@ class OnePartitionSpec extends SparkTestBase {
         val s = session()
         Tables.names.foreach { name =>
           val df = Tables(s, sf, name)
-          val one = verdict(s, df)
+          val one = verdict(df)
           assert(one == (scanSplits(df) == 1), s"$name: verdict $one")
           assert(one == (df.queryExecution.executedPlan.outputPartitioning
             .numPartitions == 1), s"$name: marked $one")
@@ -54,9 +50,9 @@ class OnePartitionSpec extends SparkTestBase {
 
   test("every fixture is one split in the shared session, none in the " +
       "4 KB split session") {
-    assert(Tables.names.forall(n => verdict(spark, Tables(spark, sf, n))))
+    assert(Tables.names.forall(n => verdict(Tables(spark, sf, n))))
     assert(!Tables.names.exists(n =>
-      verdict(smallSplits, Tables(smallSplits, sf, n))))
+      verdict(Tables(smallSplits, sf, n))))
   }
 
   test("q07's join of two one-split tables runs in place: no broadcast, " +
